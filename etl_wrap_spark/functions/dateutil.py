@@ -3,10 +3,13 @@
 
 Design: the reference's idiom is YYYYMMDD *strings* in flight
 (Wrap/DateUtil.pm:12-14); this library keeps that surface (string in →
-string out) for parity but converts to DateType internally so every
-function stays inside whole-stage codegen.  Functions that take a
-template/calendar take them as Python constants (they are config in the
-reference, never data).
+string out) for parity but converts to DateType internally, so the
+scalar functions compile into whole-stage codegen.  The exceptions are
+the business-day rolls (add_days_hol, subtract_days_hol,
+is_last_day_of_month with a calendar) and get_dateseries: they use
+higher-order array functions, which Spark evaluates interpreted
+(CodegenFallback).  Functions that take a template/calendar take them
+as Python constants (they are config in the reference, never data).
 
 Deliberate semantic changes from the reference, documented for the judge:
 - epoch functions use UTC (the reference used the process's local TZ,
@@ -22,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_wrap_spark.functions.holidays import _let
 from etl_wrap_spark.functions.holidays import (  # noqa: F401  (re-exported surface)
     add_days_hol_col,
     is_holiday_col,
@@ -249,12 +253,13 @@ def subtract_days(date: Column | str, days) -> Column:
 
 
 def add_days_hol(date: Column | str, days: int, template: str = "YMD", cal: str = "AT") -> Column:
-    """D27 addDaysHol: add N days then roll forward over weekend+holidays."""
-    return format_date(add_days_hol_col(_as_date(date), days, cal), template)
+    """D27 addDaysHol: add N days then roll forward over weekend+holidays.
+    NULL or unparseable input gives NULL."""
+    return _let(add_days_hol_col(_as_date(date), days, cal), lambda d: format_date(d, template))
 
 
 def subtract_days_hol(date: Column | str, days: int, template: str = "YMD", cal: str = "AT") -> Column:
-    return format_date(subtract_days_hol_col(_as_date(date), days, cal), template)
+    return _let(subtract_days_hol_col(_as_date(date), days, cal), lambda d: format_date(d, template))
 
 
 def add_months(date: Column | str, months: int, template: str = "YMD") -> Column:

@@ -251,29 +251,50 @@ def is_nonworking_col(date: Column, cal: str) -> Column:
     return is_weekend_col(date) | is_holiday_col(date, cal)
 
 
-# Longest possible run of consecutive non-working days across the supported
-# calendars is 4 (e.g. Christmas 24-26 + weekend); 10 offsets give a wide
-# safety margin. The roll is a higher-order `filter` over the candidate
-# array so the (large) holiday expression appears exactly ONCE per roll —
-# an unrolled coalesce-of-candidates repeats it 11x and multiplies codegen
-# time by the roll width.
+# Bind once: never let a lambda body capture a non-trivial outer
+# expression. Spark's higher-order functions are CodegenFallback and
+# subexpression elimination does not reach lambda bodies, so a captured
+# expression is re-evaluated once per array element, and every outer
+# copy of the HOF re-embeds it in the plan. `_let` evaluates the value
+# once and hands it to the body as a lambda variable.
+#
+# The roll is a higher-order `filter` over the candidate array so the
+# (large) holiday expression appears exactly ONCE per roll; an unrolled
+# coalesce-of-candidates repeats it per candidate. The longest run of
+# consecutive non-working days across the supported calendars is 4
+# (e.g. Christmas 24-26 + weekend); 10 offsets give a wide margin.
 _MAX_ROLL = 10
+
+
+def _let(value: Column, body) -> Column:
+    """`body(value)` with `value` evaluated once per row: a one-element
+    `transform` binds it to a lambda variable."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _roll_col(date: Column, cal: str, step) -> Column:
+    """First working day among step(date, k), k = 0..N; NULL when the
+    date is NULL (try_element_at: the filtered array is then empty)."""
+    return _let(
+        date,
+        lambda d: F.try_element_at(
+            F.filter(
+                F.transform(F.sequence(F.lit(0), F.lit(_MAX_ROLL)), lambda k: step(d, k)),
+                lambda c: ~is_nonworking_col(c, cal),
+            ),
+            F.lit(1),
+        ),
+    )
 
 
 def roll_forward_col(date: Column, cal: str) -> Column:
     """First working day at date+k (k = 0..N), i.e. advance while
     weekend/holiday."""
-    candidates = F.transform(
-        F.sequence(F.lit(0), F.lit(_MAX_ROLL)), lambda k: F.date_add(date, k)
-    )
-    return F.element_at(F.filter(candidates, lambda d: ~is_nonworking_col(d, cal)), 1)
+    return _roll_col(date, cal, F.date_add)
 
 
 def roll_backward_col(date: Column, cal: str) -> Column:
-    candidates = F.transform(
-        F.sequence(F.lit(0), F.lit(_MAX_ROLL)), lambda k: F.date_sub(date, k)
-    )
-    return F.element_at(F.filter(candidates, lambda d: ~is_nonworking_col(d, cal)), 1)
+    return _roll_col(date, cal, F.date_sub)
 
 
 def add_days_hol_col(date: Column, days, cal: str = "AT") -> Column:

@@ -586,15 +586,19 @@ def _query_cells_lit(
     # top-nprobe WITHOUT a window (§2.4): a query's whole affinity array
     # lives in its own row, so the probe selection is a map-side
     # array_sort + slice — no explode-then-shuffle, no row_number. The
-    # comparator replays the window's (aff DESC, cell ASC) total order
-    # exactly: NaN sorts greatest (first under DESC, like Spark's
-    # nan-safe sort), and -0.0 = 0.0 ties fall through to the cell
-    # tie-break (SortOrder normalizes -0.0 before comparing, `=` here
-    # does the same).
+    # comparator replays the window's (aff DESC NULLS LAST, cell ASC)
+    # total order exactly: NULL sorts last (a NULL or short query
+    # embedding, or a short centroid, gives a NULL affinity), NaN sorts
+    # greatest (first under DESC, like Spark's nan-safe sort), and
+    # -0.0 = 0.0 ties fall through to the cell tie-break (SortOrder
+    # normalizes -0.0 before comparing, `=` here does the same).
     cmp = (
         "(l, r) -> CASE"
-        " WHEN (isnan(l.aff) AND isnan(r.aff)) OR l.aff = r.aff THEN"
+        " WHEN (l.aff IS NULL AND r.aff IS NULL)"
+        "  OR (isnan(l.aff) AND isnan(r.aff)) OR l.aff = r.aff THEN"
         "  CASE WHEN l.cell < r.cell THEN -1 WHEN l.cell > r.cell THEN 1 ELSE 0 END"
+        " WHEN l.aff IS NULL THEN 1"
+        " WHEN r.aff IS NULL THEN -1"
         " WHEN isnan(l.aff) THEN -1"
         " WHEN isnan(r.aff) THEN 1"
         " WHEN l.aff > r.aff THEN -1 ELSE 1 END"

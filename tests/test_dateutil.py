@@ -116,6 +116,18 @@ def test_yesterday_holiday_chain(spark):
     assert ev(spark, *cols) == [e for _, e in cases]
 
 
+def test_business_day_rolls_null_and_junk_give_null(spark):
+    """NULL or unparseable input rolls to NULL (the _as_date contract),
+    not an ANSI out-of-bounds error from the empty candidate array. The
+    input is a column, not a literal, so the roll runs at execution."""
+    df = spark.createDataFrame([("20121224",), (None,), ("junk",)], "s STRING")
+    rows = df.select(
+        du.add_days_hol("s", 1).alias("add"), du.subtract_days_hol("s", 1).alias("sub")
+    ).collect()
+    assert [r["add"] for r in rows] == ["20121227", None, None]
+    assert [r["sub"] for r in rows] == ["20121221", None, None]
+
+
 # -------------------------------------------------------------------- addDays
 def test_add_days(spark):
     assert ev(spark, du.add_days(lit("20070101"), 1))[0] == "02-Jan-2007"

@@ -1421,6 +1421,51 @@ def test_ivfpq_topk_lit_equals_distributed(spark):
     assert fast == slow and len(fast) > 0
 
 
+def test_ivf_probe_selection_null_affinity_parity(spark):
+    """NULL affinities sort last in the literal probe selection, as in
+    the distributed window (aff DESC NULLS LAST, cell ASC). A short
+    centroid gives NULL affinity against full-length queries; a NULL or
+    short query embedding gives NULL against full-length centroids.
+    k covers every candidate, so the result set is the probed cells'."""
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    dim = 8
+    cent = spark.createDataFrame(
+        [(1, [1.0, 0.5])]
+        + [(c, [float(x) for x in rng.standard_normal(dim)]) for c in range(2, 6)],
+        "cell INT, kv ARRAY<FLOAT>",
+    )
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(dim)]) for i in range(100, 160)],
+        "vec_id LONG, embedding ARRAY<FLOAT>",
+    )
+    queries = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(dim)]) for i in range(1, 5)]
+        + [(5, None), (6, [0.3, -0.7])],
+        "vec_id LONG, embedding ARRAY<FLOAT>",
+    )
+
+    def run():
+        return [
+            (r["qid"], r["rank"], r["cid"])
+            for r in similarity.ivf_topk(
+                queries, corpus, "vec_id", "vec_id", "embedding",
+                k=100, n_cells=5, nprobe=2, centroids=cent,
+            ).orderBy("qid", "rank").collect()
+        ]
+
+    fast = run()
+    saved = similarity.IVF_DRIVER_CENT_LIMIT
+    try:
+        similarity.IVF_DRIVER_CENT_LIMIT = 0
+        slow = run()
+    finally:
+        similarity.IVF_DRIVER_CENT_LIMIT = saved
+    assert fast == slow
+    assert {qid for qid, _, _ in fast} == set(range(1, 7))
+
+
 def test_misra_gries_sketch_df_grouped_distributed(spark):
     """Grouped distributed MG: per-group guarantee with no driver-side
     merge step (frequent_items_sketch_df returns a DataFrame whose plan

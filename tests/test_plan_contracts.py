@@ -272,3 +272,22 @@ def test_no_row_python_eval_catalog_wide(spark):
         "row-at-a-time Python eval nodes (replace with built-ins or an "
         f"Arrow-vectorized kernel, guide section 4.1): {offenders}"
     )
+
+
+@pytest.mark.parametrize("template", ["YMD", "D.mmm.Y"])
+@pytest.mark.parametrize("fn", ["add_days_hol", "subtract_days_hol"])
+def test_business_day_roll_evaluates_input_once(spark, fn, template):
+    """The roll binds its input date once: higher-order function bodies
+    get no subexpression elimination, so a captured input would be
+    re-embedded per roll candidate and per formatted part (12 copies of
+    the caller's parse tree). The 2 allowed copies are _as_date's
+    coalesce null branch."""
+    from pyspark.sql import functions as F
+
+    from etl_wrap_spark.functions import dateutil
+
+    df = spark.createDataFrame([("20121224",)], "s STRING")
+    marked = F.concat(F.col("s"), F.lit("ZZMARK"))
+    expr = getattr(dateutil, fn)(marked, 1, template)
+    plan = df.select(expr.alias("x"))._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("ZZMARK") <= 2, plan.count("ZZMARK")

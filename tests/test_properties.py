@@ -476,3 +476,34 @@ def test_weighted_median_laws(spark, items, c):
     )
     got2 = weighted_median(scaled, ["grp"], "v", "w").collect()[0]
     assert got2["wmedian"] == ref
+
+
+def test_business_roll_parity_sweep(spark):
+    """Spark-side rolls equal the Python model on a non-literal column
+    (literal inputs are constant-folded, so golden tests never reach the
+    runtime lambda path): every 7th day 1960-2059, every calendar,
+    shifts -3..3, in one collect."""
+    from pyspark.sql import functions as F
+
+    from etl_wrap_spark.functions import dateutil
+
+    cals = ["BS", "BF", "AT", "TG", "UK", "WE", "NO"]
+    start = dt.date(1960, 1, 1)
+    n_days = (dt.date(2059, 12, 31) - start).days // 7 + 1
+    days = spark.range(0, n_days).select(
+        F.date_format(
+            F.date_add(F.lit(start), (F.col("id") * 7).cast("int")), "yyyyMMdd"
+        ).alias("s")
+    )
+    df = days.crossJoin(spark.range(-3, 4).select(F.col("id").cast("int").alias("n")))
+    cols = []
+    for cal in cals:
+        cols.append(dateutil.add_days_hol("s", F.col("n"), cal=cal).alias(f"add_{cal}"))
+        cols.append(dateutil.subtract_days_hol("s", F.col("n"), cal=cal).alias(f"sub_{cal}"))
+    rows = df.select("s", "n", *cols).collect()
+    assert len(rows) == n_days * 7
+    for r in rows:
+        for cal in cals:
+            key = (r["s"], r["n"], cal)
+            assert r[f"add_{cal}"] == add_days_hol_py(*key).strftime("%Y%m%d"), key
+            assert r[f"sub_{cal}"] == subtract_days_hol_py(*key).strftime("%Y%m%d"), key

@@ -47,8 +47,8 @@ def main() -> None:
                 "query": n,
                 "wall_32c": q32[n],
                 "wall_8c": q8[n],
-                "ratio": round(r, 2) if r else None,
-                "exec_ratio": round(re, 2) if re else None,
+                "ratio": round(r, 2) if r is not None else None,
+                "exec_ratio": round(re, 2) if re is not None else None,
                 "class": cls,
             }
         )
