@@ -1040,65 +1040,11 @@ def contamination_check(
 
 
 # ---------------------------------------------- dedup connected components
-def _cc_trace_start():
-    """Stage-timing trace for the CC fast paths, enabled by
-    SPARK_GRAFT_CC_TRACE=1 (diagnostic only — the round-11 q55/q59
-    session-depth watch item needs per-stage attribution inside a full
-    bench epoch, where the elevation reproduces and isolated probes
-    don't). Returns None when disabled so the hot path pays one dict
-    lookup."""
-    import os
-
-    if not os.environ.get("SPARK_GRAFT_CC_TRACE"):
-        return None
-    import time
-
-    return {"t0": time.perf_counter(), "last": time.perf_counter(), "stages": []}
-
-
-def _cc_trace_mark(trace, stage: str) -> None:
-    if trace is None:
-        return
-    import time
-
-    now = time.perf_counter()
-    trace["stages"].append((stage, now - trace["last"]))
-    trace["last"] = now
-
-
-def _cc_trace_emit(trace, variant: str, n_edges: int, spark) -> None:
-    if trace is None:
-        return
-    import sys
-    import time
-
-    parts = " ".join(f"{s}={dt:.3f}" for s, dt in trace["stages"])
-    code_cache = ""
-    try:  # JVM JIT code-cache occupancy — the session-aging suspect
-        beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
-        it = beans.iterator()
-        used = {}
-        while it.hasNext():
-            b = it.next()
-            name = b.getName()
-            if "CodeHeap" in name or "Metaspace" in name:
-                used[name] = b.getUsage().getUsed() >> 20
-        code_cache = " jit_mb=" + ",".join(f"{k}:{v}" for k, v in sorted(used.items()))
-    except Exception:
-        pass
-    print(
-        f"# cc_trace variant={variant} n_edges={n_edges} {parts} "
-        f"total={time.perf_counter() - trace['t0']:.3f}{code_cache}",
-        file=sys.stderr,
-        flush=True,
-    )
-
-
 def _driver_union_find(pinned: DataFrame, u_col, v_col) -> DataFrame:
     """Small-graph fast path shared by both CC variants: exact
     min-root union-find over an already-collected (u, v) edge frame
-    (``u_col``/``v_col`` — numpy columns from the caller's limit-probe
-    Arrow collect; round-10: no second row-based collect() job).
+    (``u_col``/``v_col`` — the numpy columns ``graph._small_cols``
+    returned; no second row-based collect() job).
     Output identical to the distributed algorithms — (doc_id,
     component = min reachable id) for every node that appears in an
     edge, re-entering Spark as a single Arrow batch (a row-pickled
@@ -1174,50 +1120,28 @@ def connected_components(
     rounds-vs-diameter claim without re-instrumenting (passing it also
     forces the distributed path, since the fast path has no rounds).
 
-    ``small_graph_limit``: AQE-style adaptive strategy pick. The edge
-    list is checkpointed and counted ONCE either way (every round needs
-    it pinned); when it holds ≤ this many pairs the component labeling
-    runs as a driver-side union-find over the already-materialized
-    edges instead of iterative label propagation — identical output
-    (component = min reachable id), but zero per-round scheduling, which
-    at bench scale is the entire cost (q160: 256 LSH pairs spent 1.36 s
-    building 3 rounds of checkpointed plans for 0.03 s of execution).
-    The limit bounds driver memory at ~MBs (2^17 pairs ≈ 2 MB of longs;
-    a 100-TB near-dup graph blows the limit and takes the distributed
-    path unchanged). Set 0 to always run distributed.
+    ``small_graph_limit``: AQE-style adaptive strategy pick. When the
+    edge list passes the ``graph._small_cols`` gate (≤ this many pairs,
+    among its other conditions) the component labeling runs as a
+    driver-side union-find instead of iterative label propagation —
+    identical output (component = min reachable id), but zero
+    per-round scheduling, which at bench scale is the entire cost
+    (q160: 256 LSH pairs spent 1.36 s building 3 rounds of
+    checkpointed plans for 0.03 s of execution). The limit bounds
+    driver memory at ~MBs (2^17 pairs ≈ 2 MB of longs; a 100-TB
+    near-dup graph blows the limit and takes the distributed path
+    unchanged). Set 0 to always run distributed.
     """
-    from etl_wrap_spark.operators.graph import _driver_headroom_ok
+    from etl_wrap_spark.operators.graph import _small_cols
 
     sym = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    if rounds_out is None and small_graph_limit > 0 and _driver_headroom_ok():
-        trace = _cc_trace_start()
-        pinned = sym.localCheckpoint(eager=False)
-        # map-side count probe (round-10: limit-based probes lose —
-        # see graph._pinned_small_edges); collect only when small
-        n_edges = pinned.count()
-        _cc_trace_mark(trace, "count")
-        if n_edges <= small_graph_limit:
-            from etl_wrap_spark.operators.graph import _arrow_numpy_cols
-
-            np_cols, n_rows, has_null = _arrow_numpy_cols(pinned)
-            _cc_trace_mark(trace, "collect")
-            # NULL edge endpoints would corrupt node ids in the
-            # union-find (round-10 ADVICE; mirrors
-            # graph._pinned_small_edges) — such graphs run the
-            # distributed min-label propagation, whose equi-join
-            # semantics define NULL handling.
-            if not has_null:
-                import numpy as np
-
-                cols = [
-                    c if c is not None else np.empty(0, dtype=object)
-                    for c in np_cols.values()
-                ]
-                out = _driver_union_find(pinned, cols[0], cols[1])
-                _cc_trace_mark(trace, "uf_result")
-                _cc_trace_emit(trace, "min-label", n_edges, pinned.sparkSession)
-                return out
-        sym = pinned  # reuse the already-materialized edge list below
+    if rounds_out is None and small_graph_limit > 0:
+        # pinned for the gate's count and collect; the distributed
+        # rounds below reuse the materialized edge list
+        sym = sym.localCheckpoint(eager=False)
+        cols = _small_cols(sym, small_graph_limit)
+        if cols is not None:
+            return _driver_union_find(sym, cols["u"], cols["v"])
     edges = (
         # NO .distinct(): every consumer is a min-aggregation (the label
         # bootstrap's groupBy and each round's neighbor-min), which is
@@ -1332,10 +1256,10 @@ def connected_components_star(
     forces the distributed path).
 
     ``small_graph_limit``: same AQE-style adaptive pick as
-    connected_components — the deduped edge list is pinned and counted
-    once regardless; at or under the limit the labeling runs as the
-    driver union-find (identical output, none of the per-round
-    scheduling), above it the star alternation proceeds unchanged.
+    connected_components — the deduped edge list is pinned regardless;
+    when it passes the ``graph._small_cols`` gate the labeling runs as
+    the driver union-find (identical output, none of the per-round
+    scheduling), otherwise the star alternation proceeds unchanged.
     """
     edges = (
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
@@ -1343,31 +1267,12 @@ def connected_components_star(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    if rounds_out is None and small_graph_limit > 0:
-        from etl_wrap_spark.operators.graph import _driver_headroom_ok
+    if rounds_out is None:
+        from etl_wrap_spark.operators.graph import _small_cols
 
-        trace = _cc_trace_start()
-        if _driver_headroom_ok():
-            n_edges = edges.count()
-            _cc_trace_mark(trace, "count")
-            if n_edges <= small_graph_limit:
-                from etl_wrap_spark.operators.graph import _arrow_numpy_cols
-
-                np_cols, n_rows, has_null = _arrow_numpy_cols(edges)
-                _cc_trace_mark(trace, "collect")
-                # same NULL guard as connected_components above (round-10
-                # ADVICE): NULL endpoints → distributed star alternation
-                if not has_null:
-                    import numpy as np
-
-                    cols = [
-                        c if c is not None else np.empty(0, dtype=object)
-                        for c in np_cols.values()
-                    ]
-                    out = _driver_union_find(edges, cols[0], cols[1])
-                    _cc_trace_mark(trace, "uf_result")
-                    _cc_trace_emit(trace, "star", n_edges, edges.sparkSession)
-                    return out
+        cols = _small_cols(edges, small_graph_limit)
+        if cols is not None:
+            return _driver_union_find(edges, cols["u"], cols["v"])
     prev: tuple[int, int] | None = None
     for _ in range(max_iter):
         # large-star over the symmetric neighborhood

@@ -145,7 +145,8 @@ def _arrow_numpy_cols(df):
     (guide §4: cross the JVM boundary once, in columnar batches, with
     only the needed columns). Returns (cols, n_rows, has_null): cols
     maps name → numpy array (zero-copy for non-null numerics; object
-    arrays for strings/decimals — same values the pandas path carried).
+    arrays for strings/decimals — same values the pandas path carried;
+    zero-length arrays for an empty frame).
     Falls back to toPandas when the private batch collector is absent
     (it is stable across Spark 3.x/4.x; the fallback keeps behavior on
     any other build)."""
@@ -158,10 +159,11 @@ def _arrow_numpy_cols(df):
             len(pdf),
             bool(pdf.isna().any().any()),
         )
+    import numpy as np
     import pyarrow as pa
 
     if not batches:
-        return {f.name: None for f in df.schema.fields}, 0, False
+        return {f.name: np.empty(0, dtype=object) for f in df.schema.fields}, 0, False
     tbl = pa.Table.from_batches(batches)
     has_null = any(c.null_count for c in tbl.columns)
     cols = {name: tbl.column(name).to_numpy() for name in tbl.column_names}
@@ -196,66 +198,55 @@ def _local_result_df(spark, data: dict, schema):
             spark.conf.set(key, prev)
 
 
-def _pinned_small_edges(
-    edges: DataFrame, cols: list, small_graph_limit: int, as_pandas: bool = False
-):
-    """AQE-style adaptive strategy pick shared by the frontier
-    iterators (the dedup-CC precedent): pin the edge projection (every
-    round joins it — the checkpoint happens regardless of path), count
-    it, and when it holds ≤ ``small_graph_limit`` rows return
-    (pinned_frame, collected_rows) so the caller can run the exact
-    driver-side algorithm instead of scheduling per-round jobs whose
-    execution is milliseconds (the round-6 profile: ~0.11 s of wall PER
-    DRIVER JOB at bench scale). Above the limit returns
-    (pinned_frame, None) and the distributed iteration proceeds
-    unchanged — at corpus scale the limit (default 2^20 edges ≈ 17 MB
-    of longs, the same order as a broadcast-join side) always routes
-    distributed. Collection rides Arrow (toPandas) — measured 0.46 s
-    for 587k edges where row collect() takes ~3x that. Limit 0
-    disables collection.
+def _small_cols(
+    pinned: DataFrame, limit: int, known_small: bool = False
+) -> dict | None:
+    """The one driver-collect gate of the size-adaptive fast paths →
+    ``{column: numpy array}`` for every column of ``pinned``, or None
+    when the caller must run its distributed plan.
 
-    ``as_pandas=True`` returns the Arrow pandas frame itself instead of
-    a tuple list — the numpy CSR consumers index columns directly, and
-    itertuples over a ~1M-row frame measured ~2 s of pure interpreter
-    work the arrays never needed (round 8).
+    The fast paths (connected components, hierarchy flatten/closure,
+    PageRank, BFS, labeled BFS, SSSP, harmonic centrality) run an exact
+    driver-side kernel on a small input instead of scheduling per-round
+    jobs whose execution is milliseconds (~0.11 s of wall per driver job
+    at bench scale). The columns are returned only when ALL hold:
 
-    The size probe is a plain map-side count() — round-10 measured the
-    two tempting "one-job" alternatives and both lose: probing with
-    limit(L+1).toPandas() collects-and-discards ~16 MB of Arrow batches
-    whenever the graph is OVER the limit (q157/q205 regressed 1.5-1.7x;
-    over-limit is the 100-TB common case), and limit(L+1).count() plans
-    a GlobalLimit whose LocalLimit feeders shuffle every partition's
-    rows to ONE task (worse than the count it replaces). count() moves
-    only per-partition longs, and on the checkpoint-pinned frame the
-    scan it pays is work the first downstream job needed anyway."""
-    pinned = edges.select(*cols).localCheckpoint(eager=False)
-    if small_graph_limit > 0 and _driver_headroom_ok() and (
-        pinned.count() <= small_graph_limit
-    ):
-        np_cols, n_rows, has_null = _arrow_numpy_cols(pinned)
-        if has_null:
-            # NULL endpoints: equi-joins never match them, but a NULL
-            # node still surfaces in union-distinct node sets, so the
-            # distributed plans DEFINE the semantics; numpy's
-            # unique/searchsorted cannot represent None (round-8
-            # ADVICE) — route such graphs distributed.
-            return pinned, None
-        if as_pandas:
-            import pandas as pd
+    - ``limit > 0`` (0 forces the distributed plan — parity tests pin
+      both paths with it);
+    - the driver host has memory headroom (``_driver_headroom_ok``);
+    - ``known_small``, or a map-side ``count()`` is ≤ ``limit``;
+    - the Arrow collect (``_arrow_numpy_cols``) holds no NULL and
+      ≤ ``limit`` rows.
 
-            if n_rows == 0:
-                return pinned, pd.DataFrame({k: [] for k in np_cols})
-            # assembled from the Arrow numpy columns: block
-            # consolidation is one memcpy of the already-typed arrays,
-            # nothing like toPandas's per-batch concat (see
-            # _arrow_numpy_cols)
-            return pinned, pd.DataFrame(np_cols)
-        if n_rows == 0:
-            return pinned, []
-        return pinned, list(
-            zip(*(np_cols[f.name].tolist() for f in pinned.schema.fields))
-        )
-    return pinned, None
+    ``known_small`` is a caller assertion that the input is statically
+    bounded (e.g. q132's ``c_custkey <= 4095`` filter): the probe job is
+    then redundant. The post-collect row check still enforces the
+    limit, so a wrong assertion costs one oversized collect, never a
+    wrong result.
+
+    NULLs: equi-joins never match them, but a NULL node still surfaces
+    in union-distinct node sets, so the distributed plans DEFINE the
+    semantics; numpy's unique/searchsorted cannot represent None, and
+    Arrow would widen NULL-bearing int64 ids to float64/NaN.
+
+    ``pinned`` should read a localCheckpoint-pinned frame (the caller's
+    distributed plan joins it every round, so the pin happens either
+    way): the count's scan is then work the first downstream job needed
+    anyway. The probe is a plain count() because the two tempting
+    "one-job" alternatives both lose (measured): limit(L+1).toPandas()
+    collects-and-discards ~16 MB of Arrow batches whenever the input is
+    OVER the limit (q157/q205 regressed 1.5-1.7x; over-limit is the
+    100-TB common case), and limit(L+1).count() plans a GlobalLimit
+    whose LocalLimit feeders shuffle every partition's rows to ONE task.
+    count() moves only per-partition longs."""
+    if limit <= 0 or not _driver_headroom_ok():
+        return None
+    if not known_small and pinned.count() > limit:
+        return None
+    cols, n_rows, has_null = _arrow_numpy_cols(pinned)
+    if has_null or n_rows > limit:
+        return None
+    return cols
 
 
 def _csr_adjacency(src_a, dst_a):
@@ -335,19 +326,21 @@ def bfs_hops(
     the consumer's job — the round-6 profile measured the iterative
     family's wall as ~0.11 s per driver job at sf0.1, so job count,
     not data volume, set the constant.
+
+    ``small_graph_limit``: edge lists the ``_small_cols`` gate admits
+    run as a vectorized CSR BFS on the driver instead (identical
+    output); 0 always runs distributed.
     """
-    e, pdf = _pinned_small_edges(
-        edges,
-        [F.col(src).alias("__s"), F.col(dst).alias("__d")],
-        small_graph_limit,
-        as_pandas=True,
-    )
+    e = edges.select(
+        F.col(src).alias("__s"), F.col(dst).alias("__d")
+    ).localCheckpoint(eager=False)
+    cols = _small_cols(e, small_graph_limit)
     # no .distinct() before the collect: np.unique dedups driver-side,
     # and the distinct's shuffle costs an extra AQE stage job per build
     seed_list = (
         [s for (s,) in sources.select(
             F.col(node_col).alias("node")).collect()]
-        if pdf is not None and len(pdf) else None
+        if cols is not None and len(cols["__s"]) else None
     )
     # A NULL seed is representable distributed (the visited-seed
     # initialization emits the (NULL, 0) row) but not in the numpy
@@ -355,9 +348,7 @@ def bfs_hops(
     if seed_list is not None and not any(s is None for s in seed_list):
         import numpy as np
 
-        node_arr, indptr, nbr = _csr_adjacency(
-            pdf["__s"].to_numpy(), pdf["__d"].to_numpy()
-        )
+        node_arr, indptr, nbr = _csr_adjacency(cols["__s"], cols["__d"])
         seed_vals = np.unique(np.array(seed_list))
         pos = np.searchsorted(node_arr, seed_vals)
         in_graph = (pos < len(node_arr)) & (node_arr[np.minimum(pos, len(node_arr) - 1)] == seed_vals)
@@ -492,6 +483,10 @@ def pagerank_fixedpoint(
     exactly once), so the caller's edge-derivation pipeline (often a
     join+distinct) never re-executes — nodes, degrees, seeds, and every
     iteration all derive from the pinned frame.
+
+    ``small_graph_limit``: edge lists the ``_small_cols`` gate admits
+    run the same arithmetic in driver-side numpy (identical output);
+    0 always runs distributed.
     """
     wcols = (
         [F.col(weight).cast("bigint").alias("__w")] if weight is not None else []
@@ -500,82 +495,73 @@ def pagerank_fixedpoint(
     if weight is not None:
         e = e.where(F.col("__w") > 0)
     e = e.localCheckpoint(eager=False)
-    # AQE-style adaptive strategy pick (the CC/BFS precedent, round 8):
-    # when the pinned edge list is tiny, run the IDENTICAL fixed-point
-    # arithmetic on the driver in int64 numpy — same scaled-integer
-    # floor divisions (all operands nonnegative, so truncation == floor
-    # on both engines), same duplicate-edge multiplicity, same int64
-    # overflow envelope as the distributed bigint plan — instead of
-    # scheduling 2-3 jobs per iteration whose execution is
-    # milliseconds. Above the limit the distributed iteration proceeds
-    # unchanged; at corpus scale it always does.
-    if small_graph_limit > 0 and e.count() <= small_graph_limit:
-        np_cols, n_rows, has_null = _arrow_numpy_cols(e)
-        # NULL endpoints route distributed (the joins define their
-        # semantics) — previously the pandas collect surfaced them as
-        # NaN-widened float columns that np.unique/searchsorted would
-        # mangle (the round-8/round-10 NaN-guard class, now uniform
-        # across the fast paths via the Arrow null_count check)
-        if n_rows and not has_null:
-            import numpy as np
+    # when the _small_cols gate admits the edge list, run the IDENTICAL
+    # fixed-point arithmetic on the driver in int64 numpy — same
+    # scaled-integer floor divisions (all operands nonnegative, so
+    # truncation == floor on both engines), same duplicate-edge
+    # multiplicity, same int64 overflow envelope as the distributed
+    # bigint plan — instead of scheduling 2-3 jobs per iteration
+    cols = _small_cols(e, small_graph_limit)
+    if cols is not None and len(cols["__src"]):
+        import numpy as np
 
-            src_a = np_cols["__src"]
-            dst_a = np_cols["__dst"]
-            node_arr = np.unique(np.concatenate([src_a, dst_a]))
-            n_all = len(node_arr)
-            sidx = np.searchsorted(node_arr, src_a)
-            didx = np.searchsorted(node_arr, dst_a)
-            w_a = np_cols["__w"].astype(np.int64) if weight is not None else None
-            degd = np.zeros(n_all, dtype=np.int64)
-            np.add.at(degd, sidx, w_a if weight is not None else 1)
-            if seeds is None:
-                n_base = n_all
-                base_arr = np.full(
-                    n_all,
-                    (scale * (damping_den - damping_num)) // (damping_den * n_all),
-                    dtype=np.int64,
-                )
-                r_arr = np.full(n_all, scale // n_all, dtype=np.int64)
-            else:
-                # NULL seeds drop out of the distributed left-semi join
-                # against the node set; filtering here is value-identical
-                # (and np.unique cannot hold None — round-8 ADVICE)
-                # collect without .distinct(): np.unique dedups, and the
-                # distinct's shuffle is an extra AQE stage job per build
-                seed_vals = np.unique(
-                    np.array([row[0] for row in
-                              seeds.select("node").collect()
-                              if row[0] is not None])
-                )
-                is_seed = np.isin(node_arr, seed_vals)
-                n_base = int(is_seed.sum())
-                if n_base == 0:
-                    raise ValueError(
-                        "personalized PageRank: no seed node is in the graph"
-                    )
-                b = (scale * (damping_den - damping_num)) // (damping_den * n_base)
-                base_arr = np.where(is_seed, np.int64(b), np.int64(0))
-                r_arr = np.where(is_seed, np.int64(scale // n_base), np.int64(0))
-            num = np.int64(damping_num)
-            den = np.int64(damping_den)
-            for _ in range(iterations):
-                t = r_arr[sidx] * num
-                if weight is not None:
-                    t = t * w_a
-                t //= den * degd[sidx]
-                acc = np.zeros(n_all, dtype=np.int64)
-                np.add.at(acc, didx, t)
-                r_arr = base_arr + acc
-            id_type = e.schema[0].dataType
-            schema = T.StructType(
-                [
-                    T.StructField("node", id_type),
-                    T.StructField("rank_fp", T.LongType()),
-                ]
+        src_a = cols["__src"]
+        dst_a = cols["__dst"]
+        node_arr = np.unique(np.concatenate([src_a, dst_a]))
+        n_all = len(node_arr)
+        sidx = np.searchsorted(node_arr, src_a)
+        didx = np.searchsorted(node_arr, dst_a)
+        w_a = cols["__w"].astype(np.int64) if weight is not None else None
+        degd = np.zeros(n_all, dtype=np.int64)
+        np.add.at(degd, sidx, w_a if weight is not None else 1)
+        if seeds is None:
+            n_base = n_all
+            base_arr = np.full(
+                n_all,
+                (scale * (damping_den - damping_num)) // (damping_den * n_all),
+                dtype=np.int64,
             )
-            return _local_result_df(
-                edges.sparkSession, {"node": node_arr, "rank_fp": r_arr}, schema
+            r_arr = np.full(n_all, scale // n_all, dtype=np.int64)
+        else:
+            # NULL seeds drop out of the distributed left-semi join
+            # against the node set; filtering here is value-identical
+            # (and np.unique cannot hold None)
+            # collect without .distinct(): np.unique dedups, and the
+            # distinct's shuffle is an extra AQE stage job per build
+            seed_vals = np.unique(
+                np.array([row[0] for row in
+                          seeds.select("node").collect()
+                          if row[0] is not None])
             )
+            is_seed = np.isin(node_arr, seed_vals)
+            n_base = int(is_seed.sum())
+            if n_base == 0:
+                raise ValueError(
+                    "personalized PageRank: no seed node is in the graph"
+                )
+            b = (scale * (damping_den - damping_num)) // (damping_den * n_base)
+            base_arr = np.where(is_seed, np.int64(b), np.int64(0))
+            r_arr = np.where(is_seed, np.int64(scale // n_base), np.int64(0))
+        num = np.int64(damping_num)
+        den = np.int64(damping_den)
+        for _ in range(iterations):
+            t = r_arr[sidx] * num
+            if weight is not None:
+                t = t * w_a
+            t //= den * degd[sidx]
+            acc = np.zeros(n_all, dtype=np.int64)
+            np.add.at(acc, didx, t)
+            r_arr = base_arr + acc
+        id_type = e.schema[0].dataType
+        schema = T.StructType(
+            [
+                T.StructField("node", id_type),
+                T.StructField("rank_fp", T.LongType()),
+            ]
+        )
+        return _local_result_df(
+            edges.sparkSession, {"node": node_arr, "rank_fp": r_arr}, schema
+        )
     nodes = (
         e.select(F.col("__src").alias("node"))
         .union(e.select(F.col("__dst").alias("node")))
@@ -729,19 +715,22 @@ def sssp_bounded(
     — on small-diameter trade/link graphs the improved set collapses
     after 2-3 rounds. Edge frame checkpointed once (every round joins
     it); per-round best/frontier frames are node-sized and pinned
-    (the CC/PageRank lineage discipline)."""
-    e, rows = _pinned_small_edges(
-        edges,
-        [
-            F.col(src).alias("__s"),
-            F.col(dst).alias("__d"),
-            F.col(weight).cast("bigint").alias("__w"),
-        ],
-        small_graph_limit,
-    )
-    if rows is not None:
+    (the CC/PageRank lineage discipline).
+
+    ``small_graph_limit``: edge lists the ``_small_cols`` gate admits
+    run the same frontier relaxation over a driver-side adjacency dict
+    (identical output); 0 always runs distributed."""
+    e = edges.select(
+        F.col(src).alias("__s"),
+        F.col(dst).alias("__d"),
+        F.col(weight).cast("bigint").alias("__w"),
+    ).localCheckpoint(eager=False)
+    cols = _small_cols(e, small_graph_limit)
+    if cols is not None:
         adj: dict = {}
-        for u, v, w in rows:
+        for u, v, w in zip(
+            cols["__s"].tolist(), cols["__d"].tolist(), cols["__w"].tolist()
+        ):
             adj.setdefault(u, []).append((v, w))
         # collect without .distinct(): the dict collapses duplicates,
         # and the distinct's shuffle is an extra AQE stage job per build
@@ -895,15 +884,14 @@ def bfs_hops_labeled(
     distributed iteration at every scale where the operator matters
     (round 7 with dict BFS, re-measured round 8 with the vectorized CSR
     form: 10.6 s vs 3.9 s on q205). The CSR implementation remains for
-    genuinely tiny graphs where a caller opts in."""
-    e, pdf_e = _pinned_small_edges(
-        edges,
-        [F.col(src).alias("__s"), F.col(dst).alias("__d")],
-        small_graph_limit,
-        as_pandas=True,
-    )
+    genuinely tiny graphs where a caller opts in (a positive
+    ``small_graph_limit``, gated by ``_small_cols``)."""
+    e = edges.select(
+        F.col(src).alias("__s"), F.col(dst).alias("__d")
+    ).localCheckpoint(eager=False)
+    cols = _small_cols(e, small_graph_limit)
     seed_vals = None
-    if pdf_e is not None and len(pdf_e):
+    if cols is not None and len(cols["__s"]):
         # dedup driver-side (dict.fromkeys keeps first-seen order) —
         # the distinct's shuffle is an extra AQE stage job per build
         seed_vals = list(dict.fromkeys(
@@ -919,9 +907,7 @@ def bfs_hops_labeled(
     if seed_vals is not None:
         import numpy as np
 
-        node_arr, indptr, nbr = _csr_adjacency(
-            pdf_e["__s"].to_numpy(), pdf_e["__d"].to_numpy()
-        )
+        node_arr, indptr, nbr = _csr_adjacency(cols["__s"], cols["__d"])
         srcs_out = []
         nodes_out = []
         hops_out = []
@@ -1009,18 +995,18 @@ def harmonic_centrality(
     popcount(new bits at level d) gives the exact count feeding
     Σ 10⁶ div d. Three vectorized scatter rounds over the collected
     edge arrays replace the labeled join ladder; value-parity with the
-    distributed path is pytest-pinned."""
-    e, pdf_e = _pinned_small_edges(
-        edges,
-        [F.col(src).alias("__s"), F.col(dst).alias("__d")],
-        small_graph_limit,
-        as_pandas=True,
-    )
-    if pdf_e is not None and len(pdf_e):
+    distributed path is pytest-pinned. The path is taken when the
+    ``_small_cols`` gate admits the edge list (``small_graph_limit``
+    0 always runs distributed)."""
+    e = edges.select(
+        F.col(src).alias("__s"), F.col(dst).alias("__d")
+    ).localCheckpoint(eager=False)
+    cols = _small_cols(e, small_graph_limit)
+    if cols is not None and len(cols["__s"]):
         import numpy as np
 
-        src_a = pdf_e["__s"].to_numpy()
-        dst_a = pdf_e["__d"].to_numpy()
+        src_a = cols["__s"]
+        dst_a = cols["__d"]
         node_arr = np.unique(np.concatenate([src_a, dst_a]))
         n = len(node_arr)
         sidx = np.searchsorted(node_arr, src_a)

@@ -108,6 +108,29 @@ def merge_join_delta(
 # --------------------------------------------------- hierarchy flatten
 
 
+def _forest_walk(kids: list, pars: list) -> dict | None:
+    """Memoized parent-chain walk over (child, parent) pairs →
+    {node: (root, depth)} for every child, where root is the first
+    ancestor with no parent of its own. None when a child has several
+    parents or a chain cycles — the distributed plans define those."""
+    if len(set(kids)) != len(kids):
+        return None
+    parent = dict(zip(kids, pars))
+    memo: dict = {}
+    for k in kids:
+        chain = []
+        x = k
+        while x in parent and x not in memo:
+            chain.append(x)
+            x = parent[x]
+            if len(chain) > len(parent):
+                return None
+        root, base = memo.get(x, (x, 0))
+        for i, c in enumerate(reversed(chain), 1):
+            memo[c] = (root, base + i)
+    return memo
+
+
 def flatten_hierarchy(
     edges: DataFrame,
     child_col: str = "child",
@@ -131,6 +154,10 @@ def flatten_hierarchy(
 
     Roots are nodes that never appear as a child, or whose parent is
     NULL/self; cycles would never converge and raise after max_iter.
+
+    ``small_graph_limit``: pointer tables the ``graph._small_cols``
+    gate admits are walked on the driver instead (identical output);
+    0 always runs the doubling loop.
     """
     ptr = (
         edges.where(
@@ -144,79 +171,38 @@ def flatten_hierarchy(
         )
         .localCheckpoint(eager=False)
     )
-    # Small-forest fast path (round 8, the ancestor_closure discipline):
-    # memoized parent-chain walk on the driver when the pinned pointer
-    # table is tiny and each child has one parent; cycles or DAGs fall
-    # through to the doubling loop (which raises / min-resolves them).
-    # small_graph_limit=0 disables the fast path (the graph.py adaptive
-    # convention — round-8 ADVICE), so parity tests can force the
-    # distributed doubling loop. The size probe is a plain map-side
-    # count, the collect runs only when proven small, and the
-    # (node, root, depth) result
-    # re-enters Spark through the Arrow createDataFrame path, not a
-    # row-pickled LocalRelation (round-10: list-of-tuples upload
-    # measured 3-4x the pandas route to execute).
-    from etl_wrap_spark.operators.graph import (
-        _arrow_numpy_cols,
-        _driver_headroom_ok,
-        _local_result_df,
-    )
+    # Small-forest fast path: a memoized parent-chain walk on the driver
+    # when the _small_cols gate admits the pointer table and each child
+    # has one parent; cycles or DAGs fall through to the doubling loop
+    # (which raises / min-resolves them). The (node, root, depth) result
+    # re-enters Spark as one Arrow batch, not a row-pickled LocalRelation
+    # (list-of-tuples upload measured 3-4x the Arrow route to execute).
+    from etl_wrap_spark.operators.graph import _local_result_df, _small_cols
 
-    cols = None
-    if small_graph_limit > 0 and _driver_headroom_ok() and (
-        ptr.count() <= small_graph_limit
-    ):
-        # map-side count probe; rows move only when the forest is small.
-        # Arrow-direct collect (round 12, the C5 helper): no pandas block
-        # construction, and the null guard is the Arrow null_count — a
-        # NULL routes distributed instead of NaN-widening the id dtype.
-        np_cols, n_rows, has_null = _arrow_numpy_cols(ptr.select("node", "anc"))
-        if not has_null:
-            cols = np_cols if n_rows else {"node": [], "anc": []}
+    cols = _small_cols(ptr.select("node", "anc"), small_graph_limit)
     if cols is not None:
-        from pyspark.sql import types as T
+        kids = cols["node"].tolist()
+        walk = _forest_walk(kids, cols["anc"].tolist())
+        if walk is not None:
+            from pyspark.sql import types as T
 
-        kids = list(cols["node"]) if not hasattr(cols["node"], "tolist") else cols["node"].tolist()
-        pars = list(cols["anc"]) if not hasattr(cols["anc"], "tolist") else cols["anc"].tolist()
-        if len(set(kids)) == len(kids):
-            parent = dict(zip(kids, pars))
-            memo: dict = {}  # node -> (root, depth-to-root)
-            n_nodes = len(parent)
-            ok = True
-            for k in kids:
-                chain = []
-                x = k
-                while x in parent and x not in memo:
-                    chain.append(x)
-                    x = parent[x]
-                    if len(chain) > n_nodes:
-                        ok = False
-                        break
-                if not ok:
-                    break
-                root, base = memo.get(x, (x, 0))
-                for i, c in enumerate(reversed(chain), 1):
-                    memo[c] = (root, base + i)
-            if ok:
-                id_type = ptr.schema[0].dataType
-                schema = T.StructType(
-                    [
-                        T.StructField("node", id_type),
-                        T.StructField("root", id_type),
-                        T.StructField("depth", T.LongType()),
-                    ]
-                )
-                # single-Arrow-batch re-entry (graph._local_result_df):
-                # one batch/task instead of 32 pickled-row slices
-                return _local_result_df(
-                    edges.sparkSession,
-                    {
-                        "node": kids,
-                        "root": [memo[k][0] for k in kids],
-                        "depth": [memo[k][1] for k in kids],
-                    },
-                    schema,
-                )
+            id_type = ptr.schema[0].dataType
+            schema = T.StructType(
+                [
+                    T.StructField("node", id_type),
+                    T.StructField("root", id_type),
+                    T.StructField("depth", T.LongType()),
+                ]
+            )
+            return _local_result_df(
+                edges.sparkSession,
+                {
+                    "node": kids,
+                    "root": [walk[k][0] for k in kids],
+                    "depth": [walk[k][1] for k in kids],
+                },
+                schema,
+            )
     # ancestors that are roots (no incoming pointer) terminate the jump
     for _ in range(max_iter):
         hop = ptr.select(
@@ -277,10 +263,13 @@ def ancestor_closure(
     execute at 41k rows where the broadcast walk is one ordinary job).
     Guarded by an output budget (Σ depths ≤ 2^22 — depth is computed
     O(N) first, so a pathological deep chain routes distributed
-    without generating anything). The size probe is a plain map-side
-    count (limit-based probes lose both ways — measured in
-    graph._pinned_small_edges); the Arrow collect runs only in the
-    proven-small case.
+    without generating anything). The collect goes through the
+    ``graph._small_cols`` gate; ``small_graph_limit`` 0 always runs the
+    squaring. ``known_small=True`` is a CALLER ASSERTION that the edge
+    list is statically bounded (e.g. q132's ``c_custkey <= 4095``
+    filter), which skips the gate's size-probe job — the one scheduled
+    job it saves is ~40% of such a query's total build+execute cost at
+    bench scale.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -295,87 +284,49 @@ def ancestor_closure(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    from etl_wrap_spark.operators.graph import _driver_headroom_ok
+    from etl_wrap_spark.operators.graph import _small_cols
 
-    n_prev = None
-    pdf = None
-    # small_graph_limit=0 disables the fast path (graph.py convention —
-    # round-8 ADVICE) so tests can pin fast == distributed directly.
-    # Capped-count probe: rows move only when the forest is small.
-    # known_small=True is a CALLER ASSERTION that the edge list is
-    # statically bounded (e.g. q132's `c_custkey <= 4095` filter): the
-    # probe job is then redundant — the one scheduled job it saves is
-    # ~40% of such a query's total build+execute cost at bench scale
-    # (round-10 verdict ask #7). The headroom gate still applies, and
-    # the post-collect len() enforces the limit anyway (an over-limit
-    # collect falls through to the distributed squaring; the assertion
-    # being wrong costs one oversized collect, never a wrong result).
-    if small_graph_limit > 0 and _driver_headroom_ok() and (
-        known_small or p.count() <= small_graph_limit
-    ):
-        # Arrow-direct collect (round 12): same §4 pattern as the graph
-        # fast paths — no pandas coercion, NULLs route distributed via
-        # the Arrow null_count instead of NaN-widening the id columns
-        from etl_wrap_spark.operators.graph import _arrow_numpy_cols
-
-        np_cols, n_prev, has_null = _arrow_numpy_cols(p.select("node", "anc"))
-        if not has_null and n_prev <= small_graph_limit:
-            pdf = np_cols if n_prev else {"node": [], "anc": []}
-    if pdf is not None:
-        kids = pdf["node"].tolist() if hasattr(pdf["node"], "tolist") else list(pdf["node"])
-        pars = pdf["anc"].tolist() if hasattr(pdf["anc"], "tolist") else list(pdf["anc"])
-        if len(set(kids)) == len(kids):  # forest: one parent per child
+    cols = _small_cols(p.select("node", "anc"), small_graph_limit, known_small)
+    if cols is not None:
+        kids = cols["node"].tolist()
+        pars = cols["anc"].tolist()
+        walk = _forest_walk(kids, pars)
+        if walk is not None and sum(walk[k][1] for k in kids) <= (1 << 22):
             parent = dict(zip(kids, pars))
-            depth: dict = {}
+            b_parent = edges.sparkSession.sparkContext.broadcast(parent)
+            id_type = p.schema[0].dataType
+            schema = T.StructType(
+                [
+                    T.StructField("node", id_type),
+                    T.StructField("anc", id_type),
+                    T.StructField("dist", T.LongType()),
+                ]
+            )
 
-            def _depth(x, _n=len(parent)):
-                chain = []
-                while x in parent and x not in depth:
-                    chain.append(x)
-                    x = parent[x]
-                    if len(chain) > _n:  # cycle — let the squaring raise
-                        return None
-                base = depth.get(x, 0)
-                for i, c in enumerate(reversed(chain), 1):
-                    depth[c] = base + i
-                return depth.get(chain[0]) if chain else base
+            def _walk(batches):
+                import pandas as pd
 
-            ok = all(_depth(k) is not None for k in kids)
-            if ok and sum(depth.get(k, 0) for k in kids) <= (1 << 22):
-                b_parent = edges.sparkSession.sparkContext.broadcast(parent)
-                id_type = p.schema[0].dataType
-                schema = T.StructType(
-                    [
-                        T.StructField("node", id_type),
-                        T.StructField("anc", id_type),
-                        T.StructField("dist", T.LongType()),
-                    ]
-                )
+                par = b_parent.value
+                for bdf in batches:
+                    nodes, ancs, dists = [], [], []
+                    for k, a in zip(bdf["node"], bdf["anc"]):
+                        d = 1
+                        while True:
+                            nodes.append(k)
+                            ancs.append(a)
+                            dists.append(d)
+                            nxt = par.get(a)
+                            if nxt is None:
+                                break
+                            a = nxt
+                            d += 1
+                    yield pd.DataFrame(
+                        {"node": nodes, "anc": ancs, "dist": dists}
+                    )
 
-                def _walk(batches):
-                    import pandas as pd
-
-                    par = b_parent.value
-                    for bdf in batches:
-                        nodes, ancs, dists = [], [], []
-                        for k, a in zip(bdf["node"], bdf["anc"]):
-                            d = 1
-                            while True:
-                                nodes.append(k)
-                                ancs.append(a)
-                                dists.append(d)
-                                nxt = par.get(a)
-                                if nxt is None:
-                                    break
-                                a = nxt
-                                d += 1
-                        yield pd.DataFrame(
-                            {"node": nodes, "anc": ancs, "dist": dists}
-                        )
-
-                return p.select("node", "anc").mapInPandas(_walk, schema)
-    if n_prev is None:
-        n_prev = p.count()
+            return p.select("node", "anc").mapInPandas(_walk, schema)
+    # the squaring's first convergence baseline
+    n_prev = p.count() if cols is None else len(cols["node"])
     for _ in range(max_iter):
         hop = (
             p.alias("x")

@@ -33,14 +33,14 @@ def write_partitioned(
 def overwrite_partitions(df: DataFrame, path: str, partition_by: Sequence[str]) -> None:
     """Dynamic partition overwrite: only partitions present in `df` are
     replaced — the idiomatic delete-before-insert (reference K4,
-    Wrap/DB.pm:337-347) for lake targets."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    Wrap/DB.pm:337-347) for lake targets. The mode is a writer option,
+    so the session's partitionOverwriteMode conf is never touched."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
 
 
 def write_bucketed_table(

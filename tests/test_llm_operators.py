@@ -2938,6 +2938,52 @@ def test_graph_fast_paths_tolerate_nulls(spark):
     assert fp == sp and fp
 
 
+def test_fast_paths_decline_without_driver_headroom(spark, monkeypatch):
+    # every size-gated fast path honours the driver-headroom gate: with
+    # the MemAvailable floor out of reach nothing is collected (the
+    # collect helper raises if reached) and each operator returns its
+    # forced-distributed (small_graph_limit=0) output
+    from etl_wrap_spark.operators import graph
+    from etl_wrap_spark.operators.incremental_join import (
+        ancestor_closure,
+        flatten_hierarchy,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2, 3), (2, 3, 1), (3, 1, 2), (3, 4, 5), (6, 7, 1), (4, 8, 2)],
+        "src LONG, dst LONG, w LONG",
+    )
+    seeds = spark.createDataFrame([(1,), (6,)], "node LONG")
+    pairs = edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+    tree = spark.createDataFrame(
+        [(i, i // 2) for i in range(2, 24)], "child LONG, parent LONG"
+    )
+    runs = {
+        "cc": lambda **kw: dedup.connected_components(pairs, **kw),
+        "cc_star": lambda **kw: dedup.connected_components_star(pairs, **kw),
+        "flatten": lambda **kw: flatten_hierarchy(tree, **kw),
+        "closure": lambda **kw: ancestor_closure(tree, **kw),
+        "closure_known_small": lambda **kw: ancestor_closure(
+            tree, known_small=True, **kw),
+        "pagerank": lambda **kw: graph.pagerank_fixedpoint(edges, **kw),
+        "bfs": lambda **kw: graph.bfs_hops(edges, seeds, **kw),
+        "sssp": lambda **kw: graph.sssp_bounded(edges, seeds, **kw),
+        "harmonic": lambda **kw: graph.harmonic_centrality(edges, seeds, **kw),
+        "bfs_labeled": lambda **kw: graph.bfs_hops_labeled(edges, seeds, **kw),
+    }
+    want = {k: sorted(run(small_graph_limit=0).collect()) for k, run in runs.items()}
+
+    def _no_collect(df):
+        raise AssertionError("fast path collected without driver headroom")
+
+    monkeypatch.setenv("SPARK_GRAFT_FASTPATH_MIN_MB", str(1 << 40))
+    monkeypatch.setattr(graph, "_arrow_numpy_cols", _no_collect)
+    for k, run in runs.items():
+        kw = {"small_graph_limit": 1 << 20} if k == "bfs_labeled" else {}
+        assert sorted(run(**kw).collect()) == want[k], k
+        assert want[k], k
+
+
 def test_ancestor_closure_fast_path_matches_squaring(spark):
     # forest fast path must equal the repeated-squaring closure
     # (node, anc, dist) for trees and chains; a multi-parent DAG and a

@@ -870,6 +870,31 @@ def test_sssp_multi_source_min(spark):
     assert got == {0: 0, 9: 0, 1: 2}
 
 
+def test_sssp_fast_path_matches_distributed(spark):
+    """The driver relaxation must agree with the distributed frontier
+    Bellman-Ford (small_graph_limit=0 forces it) on a random weighted
+    graph with duplicate edges and zero weights, a seed outside the
+    graph, a NULL seed (both keep its (NULL, 0) row) and a NULL
+    endpoint (routes the default call distributed)."""
+    import random as _r
+
+    _r.seed(67)
+    raw = [(_r.randint(0, 59), _r.randint(0, 59), _r.randint(0, 20))
+           for _ in range(220)]
+    raw += raw[:20]
+
+    def both(edges, sources):
+        fast = _sssp(spark, edges, sources, max_hops=3)
+        slow = _sssp(spark, edges, sources, max_hops=3, small_graph_limit=0)
+        assert fast == slow
+        return fast
+
+    got = both(raw, [3, 17, 900])  # 900 is not in the graph
+    assert got[900] == 0 and len(got) > 10
+    assert both(raw, [3, None])[None] == 0
+    assert len(both(raw + [(None, 5, 1), (3, None, 1)], [3, 17])) > 10
+
+
 # ---------------------------------------------------------- ra_link_scores
 
 

@@ -112,9 +112,12 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
     pq.write_partitioned(base, path, ["pk"])
     # replace ONLY partition 'a'; 'b' must survive
     repl = spark.createDataFrame([(9, "a", 99)], ["id", "pk", "v"])
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
     pq.overwrite_partitions(repl, path, ["pk"])
     rows = {(r["pk"], r["id"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert rows == {("a", 9, 99), ("b", 2, 20)}
+    assert spark.conf.get(key) == before  # the session conf is never flipped
 
 
 def test_bucketed_table_join_has_no_shuffle(spark, tmp_path):
