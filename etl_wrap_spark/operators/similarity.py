@@ -466,8 +466,9 @@ def _collect_small(df: DataFrame):
     AQE off for just this action: AQE's stage-by-stage materialization
     schedules 2 extra jobs per shuffle (measured: the codebook collect is
     3 jobs with AQE, 1 without) and buys nothing for a <= few-thousand-row
-    result. Same pattern as sinks/parquet.py's scoped conf override;
-    values are unchanged — AQE never affects results."""
+    result; values are unchanged — AQE never affects results. The flip
+    is SESSION-GLOBAL around this one action: it assumes no other query
+    runs on the session meanwhile (an open ROADMAP ADVICE item)."""
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -1,7 +1,13 @@
-"""Atomic versioned parquet table — the transactional lake target that
+"""Atomic versioned parquet tables — the transactional lake target that
 gives the reference's transaction bracket (begin / commit / rollback,
 ``Wrap/DB.pm:38-68``) a concrete lake-side equivalent in an environment
 without Delta/Iceberg.
+
+Both table kinds — ``AtomicTable`` (one immutable directory per
+version) and ``PartitionedAtomicTable`` (one immutable manifest per
+version mapping partition values to immutable directories) — commit
+through ONE pointer protocol (``_Pointer``): the same ``_manifest.json``
+pointer, transaction ledger, replay check and fsync + rename swap.
 
 Protocol (manifest swap):
 
@@ -18,7 +24,7 @@ Protocol (manifest swap):
   are unreachable from the manifest). On HDFS the same renames are
   atomic; on S3-like stores the swap point must become a conditional
   PUT / DynamoDB-style log commit — exactly the seam Delta's LogStore
-  abstracts, and the single place to port.
+  abstracts, and the single place to port (``_Pointer._swap``).
 - Rollback = don't swap: any failure before commit leaves the manifest
   (and therefore every reader) on the old version; the orphaned staged
   directory is garbage-collected by ``vacuum()``.
@@ -56,37 +62,152 @@ class ConflictError(RuntimeError):
     """The manifest advanced between transaction start and commit."""
 
 
-class AtomicTable:
-    """A versioned parquet table with atomic commit + time travel."""
+def _load_json(path: str, default=None):
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return default
+
+
+def _fsynced_tmp(path: str, obj) -> str:
+    """Write ``obj`` as JSON to a fresh temp file beside ``path``, fsync'd
+    so the later rename/link publishes durable bytes; returns the temp
+    path."""
+    tmp = path + f".tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    return tmp
+
+
+def _zone_hit(zones: dict, col: str, lo, hi) -> bool:
+    """Fail-open zone test: False only when the file's recorded
+    [min, max] zone for `col` misses [lo, hi]; a file lacking a zone for
+    `col` is kept — pruning is never a correctness filter."""
+    z = zones.get(col)
+    return z is None or not (z[1] < lo or z[0] > hi)
+
+
+def _write_stats(staged: str, stats_cols: list[str]) -> None:
+    """Per-file min/max zone maps for `stats_cols` into ``_stats.json``
+    inside `staged`, harvested from the parquet FOOTERS (pyarrow
+    metadata — no data re-scan)."""
+    import pyarrow.parquet as pq
+
+    def _plain(v):
+        # json-serializable plain python (footer stats may be numpy
+        # scalars / bytes); fall back to None (zone dropped -> file
+        # kept by the fail-open reader)
+        if isinstance(v, bytes):
+            try:
+                return v.decode("utf-8")
+            except UnicodeDecodeError:
+                return None
+        if hasattr(v, "item"):
+            v = v.item()
+        return v if isinstance(v, (int, float, str, bool)) else None
+
+    stats: dict[str, dict] = {}
+    for fn in sorted(os.listdir(staged)):
+        if not fn.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(os.path.join(staged, fn)).metadata
+        names = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        zones = {}
+        for col in stats_cols:
+            ci = names.get(col)
+            if ci is None:
+                continue
+            lo = hi = None
+            ok = True
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(ci).statistics
+                if st is None or not st.has_min_max:
+                    ok = False
+                    break
+                mn, mx = _plain(st.min), _plain(st.max)
+                if mn is None or mx is None:
+                    ok = False
+                    break
+                lo = mn if lo is None else min(lo, mn)
+                hi = mx if hi is None else max(hi, mx)
+            if ok and lo is not None:
+                zones[col] = [lo, hi]
+        stats[fn] = zones
+    with open(os.path.join(staged, STATS), "w") as fh:
+        json.dump(stats, fh)
+
+
+class _Pointer:
+    """The ``<root>/_manifest.json`` current-version pointer both table
+    kinds commit through: the version it names, the transaction ledger,
+    and the optimistic-concurrency swap. Subclasses decide what a
+    version IS (a data dir, or a partition manifest)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    # ----------------------------------------------------------- manifest
-    def _manifest_path(self) -> str:
+    def _pointer_path(self) -> str:
         return os.path.join(self.root, MANIFEST)
 
-    def _manifest(self) -> dict:
-        try:
-            with open(self._manifest_path()) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return {}
+    def _pointer(self) -> dict:
+        return _load_json(self._pointer_path(), {})
 
     def current_version(self) -> int | None:
-        m = self._manifest()
         try:
-            return int(m["version"])
+            return int(self._pointer()["version"])
         except (KeyError, ValueError, TypeError):
             return None
+
+    def _resolve(self, version: int | None) -> int | None:
+        return version if version is not None else self.current_version()
 
     def last_txn_version(self, app_id: str) -> int | None:
         """Highest committed transaction version for `app_id` (the Delta
         txnAppId/txnVersion idempotence ledger) — None if never seen."""
-        v = self._manifest().get("txns", {}).get(app_id)
+        v = self._pointer().get("txns", {}).get(app_id)
         return int(v) if v is not None else None
+
+    def _replayed(self, txn: tuple[str, int] | None) -> bool:
+        """True when `txn` = (app_id, txn_version) already committed:
+        the caller skips without staging (the exactly-once contract)."""
+        if txn is None:
+            return False
+        last = self.last_txn_version(txn[0])
+        return last is not None and last >= int(txn[1])
+
+    def _check(self, expected: int | None) -> None:
+        found = self.current_version()
+        if found != expected:
+            raise ConflictError(f"manifest moved (expected v{expected}, found v{found})")
+
+    def _swap(
+        self,
+        version: int,
+        expected: int | None,
+        txn: tuple[str, int] | None = None,
+        **extra,
+    ) -> None:
+        """Point the table at `version` if it still names `expected`,
+        recording `txn` in the ledger; `extra` keys ride in the pointer."""
+        self._check(expected)
+        txns = dict(self._pointer().get("txns", {}))
+        if txn is not None:
+            txns[txn[0]] = int(txn[1])
+        body = {"version": version, "committed_at": time.time(), "txns": txns, **extra}
+        tmp = _fsynced_tmp(self._pointer_path(), body)
+        os.rename(tmp, self._pointer_path())  # the atomic commit point
+
+    def _staging_dir(self) -> str:
+        return os.path.join(self.root, "_staging", uuid.uuid4().hex)
+
+
+class AtomicTable(_Pointer):
+    """A versioned parquet table with atomic commit + time travel."""
 
     def table_props(self) -> dict:
         """Persistent indexing properties (Delta table-properties
@@ -96,38 +217,7 @@ class AtomicTable:
         upsert, delete_insert, transaction — re-applies them when
         staging, so a MERGE can never silently strip the table's zone
         maps or blooms."""
-        return dict(self._manifest().get("table_props", {}))
-
-    def _swap(
-        self,
-        version: int,
-        expected: int | None,
-        txn: tuple[str, int] | None = None,
-        props: dict | None = None,
-    ) -> None:
-        if self.current_version() != expected:
-            raise ConflictError(
-                f"manifest moved (expected v{expected}, found v{self.current_version()})"
-            )
-        txns = dict(self._manifest().get("txns", {}))
-        if txn is not None:
-            txns[txn[0]] = int(txn[1])
-        # props carry forward unless this commit explicitly sets them
-        eff_props = props if props is not None else self.table_props()
-        tmp = self._manifest_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "committed_at": time.time(),
-                    "txns": txns,
-                    "table_props": eff_props,
-                },
-                fh,
-            )
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.rename(tmp, self._manifest_path())  # the atomic commit point
+        return dict(self._pointer().get("table_props", {}))
 
     def _version_dir(self, version: int) -> str:
         return os.path.join(self.root, f"v{version}")
@@ -136,7 +226,7 @@ class AtomicTable:
     def read(self, version: int | None = None) -> DataFrame:
         """Current table state (or a pinned historical `version` — the
         rollback/audit path; committed versions are immutable)."""
-        v = version if version is not None else self.current_version()
+        v = self._resolve(version)
         if v is None:
             raise FileNotFoundError(f"no committed version at {self.root}")
         return self.spark.read.parquet(self._version_dir(v))
@@ -145,29 +235,34 @@ class AtomicTable:
         """Per-file zone maps recorded at stage time (``_stats.json``
         inside the version dir — immutable with it), or None for
         versions written without ``stats_cols``."""
-        v = version if version is not None else self.current_version()
-        try:
-            with open(os.path.join(self._version_dir(v), STATS)) as fh:
-                return json.load(fh)
-        except (OSError, ValueError, TypeError):
+        return _load_json(os.path.join(self._version_dir(self._resolve(version)), STATS))
+
+    def _kept_files(self, version: int | None, keep) -> list[str] | None:
+        """The version's data files whose ``_stats.json`` entry passes
+        `keep`; None when the version has no stats."""
+        v = self._resolve(version)
+        stats = self.file_stats(v)
+        if stats is None:
             return None
+        vd = self._version_dir(v)
+        return [os.path.join(vd, fn) for fn, zones in stats.items() if keep(zones)]
+
+    def _read_files(self, files: list[str] | None, pred: Column, version: int | None) -> DataFrame:
+        """Read a pruned file list: None = no stats, full read; [] = no
+        file can match, zero rows with the table schema. The residual
+        `pred` always applies."""
+        if files is None:
+            return self.read(version).where(pred)
+        if not files:
+            return self.read(version).where(pred).limit(0)
+        return self.spark.read.parquet(*files).where(pred)
 
     def pruned_files(self, col: str, lo, hi, version: int | None = None) -> list[str] | None:
         """Data files whose [min, max] zone for `col` intersects
         [lo, hi]; None when no stats exist (caller falls back to a full
         read). Files lacking a zone for `col` are kept — pruning is
         fail-open, never a correctness filter."""
-        v = version if version is not None else self.current_version()
-        stats = self.file_stats(v)
-        if stats is None:
-            return None
-        vd = self._version_dir(v)
-        keep = []
-        for fn, zones in stats.items():
-            z = zones.get(col)
-            if z is None or not (z[1] < lo or z[0] > hi):
-                keep.append(os.path.join(vd, fn))
-        return keep
+        return self._kept_files(version, lambda zones: _zone_hit(zones, col, lo, hi))
 
     def read_pruned(self, col: str, lo, hi, version: int | None = None) -> DataFrame:
         """``read().where(col BETWEEN lo AND hi)`` that opens ONLY the
@@ -179,104 +274,54 @@ class AtomicTable:
         filter regardless of pruning quality. Write with ``cluster_by``
         to make zones tight."""
         files = self.pruned_files(col, lo, hi, version)
-        pred = F.col(col).between(lo, hi)
-        if files is None:
-            return self.read(version).where(pred)
-        if not files:
-            return self.read(version).where(pred).limit(0)
-        return self.spark.read.parquet(*files).where(pred)
+        return self._read_files(files, F.col(col).between(lo, hi), version)
 
     # ------------------------------------------------------------ writers
     def _stage(
         self,
         df: DataFrame,
-        stats_cols: Sequence[str] | None = None,
-        cluster_by: str | Column | None = None,
-        cluster_files: int | None = None,
-        bloom_cols: Sequence[str] | None = None,
-        bloom_bits: int = 4096,
-        bloom_hashes: int = 5,
+        props: dict,
+        cluster_expr: Column | None = None,
     ) -> str:
         """Write the full new state into a uniquely-named staging dir —
         never into a version dir, so a losing writer can never clobber a
-        committed version's files.
+        committed version's files. ``props`` is the table-property dict
+        (see ``table_props``) the staged version is indexed with.
 
         ``stats_cols``: record per-file min/max zone maps for these
         columns into ``_stats.json`` inside the staged dir, harvested
         from the parquet FOOTERS (pyarrow metadata — no data re-scan).
         ``cluster_by``: range-repartition on that column first so zones
         are tight and disjoint — a name for the 1-D layout, or any
-        Column expression (pass sinks/parquet.py:zorder_key(cols) for a
-        multi-column Morton layout: every file then covers a compact
-        hyper-rectangle, so zone maps prune on ANY of the interleaved
-        columns). The footer walk
-        is a driver loop over file METADATA — manifest-scale work, the
-        same class as Delta checkpoint maintenance; parallelize over an
-        executor RDD if a single version ever holds millions of files.
+        Column expression passed as ``cluster_expr`` for this commit
+        only (pass sinks/parquet.py:zorder_key(cols) for a multi-column
+        Morton layout: every file then covers a compact hyper-rectangle,
+        so zone maps prune on ANY of the interleaved columns);
+        ``cluster_files`` pins the range-partition count. The footer
+        walk is a driver loop over file METADATA — manifest-scale work,
+        the same class as Delta checkpoint maintenance; parallelize
+        over an executor RDD if a single version ever holds millions of
+        files.
         """
-        staged = os.path.join(self.root, "_staging", uuid.uuid4().hex)
+        staged = self._staging_dir()
+        cluster_by = cluster_expr if cluster_expr is not None else props.get("cluster_by")
+        n_files = props.get("cluster_files")
         if cluster_by is not None:  # truthiness on a Column raises
             out = (
-                df.repartitionByRange(cluster_files, cluster_by)
-                if cluster_files
+                df.repartitionByRange(n_files, cluster_by)
+                if n_files
                 else df.repartitionByRange(cluster_by)
             )
         else:
             out = df
         out.write.mode("overwrite").parquet(staged)
-        if stats_cols:
-            self._write_stats(staged, list(stats_cols))
-        if bloom_cols:
-            self._write_blooms(staged, list(bloom_cols), bloom_bits, bloom_hashes)
+        if props.get("stats_cols"):
+            _write_stats(staged, list(props["stats_cols"]))
+        if props.get("bloom_cols"):
+            self._write_blooms(
+                staged, list(props["bloom_cols"]), props["bloom_bits"], props["bloom_hashes"]
+            )
         return staged
-
-    @staticmethod
-    def _write_stats(staged: str, stats_cols: list[str]) -> None:
-        import pyarrow.parquet as pq
-
-        def _plain(v):
-            # json-serializable plain python (footer stats may be numpy
-            # scalars / bytes); fall back to None (zone dropped -> file
-            # kept by the fail-open reader)
-            if isinstance(v, bytes):
-                try:
-                    return v.decode("utf-8")
-                except UnicodeDecodeError:
-                    return None
-            if hasattr(v, "item"):
-                v = v.item()
-            return v if isinstance(v, (int, float, str, bool)) else None
-
-        stats: dict[str, dict] = {}
-        for fn in sorted(os.listdir(staged)):
-            if not fn.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(staged, fn)).metadata
-            names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            zones = {}
-            for col in stats_cols:
-                ci = names.get(col)
-                if ci is None:
-                    continue
-                lo = hi = None
-                ok = True
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        break
-                    mn, mx = _plain(st.min), _plain(st.max)
-                    if mn is None or mx is None:
-                        ok = False
-                        break
-                    lo = mn if lo is None else min(lo, mn)
-                    hi = mx if hi is None else max(hi, mx)
-                if ok and lo is not None:
-                    zones[col] = [lo, hi]
-            stats[fn] = zones
-        tmp = os.path.join(staged, STATS)
-        with open(tmp, "w") as fh:
-            json.dump(stats, fh)
 
     def _write_blooms(
         self, staged: str, bloom_cols: list[str], m_bits: int, k_hashes: int
@@ -327,11 +372,7 @@ class AtomicTable:
                 if fn in blooms:
                     blooms[fn][col][r["w"]] = r["word"]
         path = os.path.join(staged, STATS)
-        try:
-            with open(path) as fh:
-                stats = json.load(fh)
-        except (OSError, ValueError):
-            stats = {}
+        stats = _load_json(path, {})
         for fn in files:
             entry = stats.setdefault(fn, {})
             entry["__bloom__"] = {
@@ -363,21 +404,14 @@ class AtomicTable:
         ``pruned_files``: a file lacking a bloom or zone for `col` is
         kept. ``value`` must be an int or string (the bloom hashed the
         column's string cast)."""
-        v = version if version is not None else self.current_version()
-        stats = self.file_stats(v)
-        if stats is None:
-            return None
-        vd = self._version_dir(v)
-        keep = []
-        for fn, zones in stats.items():
-            z = zones.get(col)
-            if z is not None and (value < z[0] or value > z[1]):
-                continue
+
+        def keep(zones: dict) -> bool:
             bloom = zones.get("__bloom__", {}).get(col)
-            if bloom is not None and not self._py_bloom_hit(value, bloom):
-                continue
-            keep.append(os.path.join(vd, fn))
-        return keep
+            return _zone_hit(zones, col, value, value) and (
+                bloom is None or self._py_bloom_hit(value, bloom)
+            )
+
+        return self._kept_files(version, keep)
 
     def read_point(self, col: str, value, version: int | None = None) -> DataFrame:
         """``read().where(col = value)`` that opens ONLY the files whose
@@ -387,80 +421,39 @@ class AtomicTable:
         residual equality filter still applies (blooms false-positive),
         so the result is exact regardless of pruning quality."""
         files = self.pruned_files_eq(col, value, version)
-        pred = F.col(col) == F.lit(value)
-        if files is None:
-            return self.read(version).where(pred)
-        if not files:
-            return self.read(version).where(pred).limit(0)
-        return self.spark.read.parquet(*files).where(pred)
-
-    def _promote(
-        self,
-        staged: str,
-        new_v: int,
-        expected: int | None,
-        txn: tuple[str, int] | None = None,
-        props: dict | None = None,
-    ) -> None:
-        """Atomically install a staged dir as version ``new_v``. The dir
-        rename is the writer lock: two writers racing for the same
-        version number can't both rename onto ``v{N}`` — the loser gets
-        ConflictError and its staged dir is removed, leaving the
-        winner's committed files untouched."""
-        if self.current_version() != expected:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise ConflictError(
-                f"manifest moved (expected v{expected}, found v{self.current_version()})"
-            )
-        target = self._version_dir(new_v)
-        try:
-            os.rename(staged, target)
-        except OSError as e:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise ConflictError(f"version dir v{new_v} already claimed") from e
-        self._swap(new_v, expected, txn, props)
+        return self._read_files(files, F.col(col) == F.lit(value), version)
 
     def _commit_df(
         self,
         df: DataFrame,
         expected: int | None,
-        stats_cols: Sequence[str] | None = None,
-        cluster_by: str | Column | None = None,
-        cluster_files: int | None = None,
         txn: tuple[str, int] | None = None,
-        bloom_cols: Sequence[str] | None = None,
-        bloom_bits: int = 4096,
-        bloom_hashes: int = 5,
         props: dict | None = None,
+        cluster_expr: Column | None = None,
     ) -> int:
-        if txn is not None:
-            last = self.last_txn_version(txn[0])
-            if last is not None and last >= int(txn[1]):
-                # idempotent replay: this transaction already committed —
-                # skip without staging (the exactly-once contract)
-                return self.current_version() or 0
+        """The one stage-and-promote sequence: stage `df` indexed by
+        `props` (None = the table's persisted properties), then install
+        the staged dir as version ``expected + 1``. The dir rename is
+        the writer lock: two writers racing for the same version number
+        can't both rename onto ``v{N}`` — the loser gets ConflictError
+        and its staged dir is removed, leaving the winner's committed
+        files untouched."""
+        if self._replayed(txn):
+            return self.current_version() or 0
+        props = self.table_props() if props is None else props
         new_v = (expected or 0) + 1
-        staged = self._stage(
-            df, stats_cols, cluster_by, cluster_files, bloom_cols,
-            bloom_bits, bloom_hashes,
-        )
-        self._promote(staged, new_v, expected, txn, props)
+        staged = self._stage(df, props=props, cluster_expr=cluster_expr)
+        try:
+            self._check(expected)
+            try:
+                os.rename(staged, self._version_dir(new_v))
+            except OSError as e:
+                raise ConflictError(f"version dir v{new_v} already claimed") from e
+            self._swap(new_v, expected, txn, table_props=props)
+        except BaseException:
+            shutil.rmtree(staged, ignore_errors=True)
+            raise
         return new_v
-
-    def _stored_staging(self) -> dict:
-        """Staging kwargs from the persisted table properties — what
-        upsert/delete_insert/transaction re-apply so incremental
-        commits keep the table's index (zone maps, clustering, blooms)
-        instead of silently stripping it."""
-        p = self.table_props()
-        return dict(
-            stats_cols=p.get("stats_cols"),
-            cluster_by=p.get("cluster_by"),
-            cluster_files=p.get("cluster_files"),
-            bloom_cols=p.get("bloom_cols"),
-            bloom_bits=p.get("bloom_bits", 4096),
-            bloom_hashes=p.get("bloom_hashes", 5),
-        )
 
     def write(
         self,
@@ -489,7 +482,6 @@ class AtomicTable:
         or re-supply the expression per write)."""
         stored = self.table_props()
         eff_stats = list(stats_cols) if stats_cols is not None else stored.get("stats_cols")
-        eff_cluster = cluster_by if cluster_by is not None else stored.get("cluster_by")
         eff_cf = cluster_files if cluster_files is not None else stored.get("cluster_files")
         if bloom_cols is not None:
             eff_bloom, eff_bits, eff_hashes = list(bloom_cols), bloom_bits, bloom_hashes
@@ -500,13 +492,12 @@ class AtomicTable:
         props = {}
         if eff_stats:
             props["stats_cols"] = list(eff_stats)
-        if isinstance(eff_cluster, str):
-            props["cluster_by"] = eff_cluster
-        elif eff_cluster is not None and isinstance(stored.get("cluster_by"), str):
-            # Column-expression layout applies to THIS commit only; the
-            # persisted string property must survive so a later
-            # compact() keeps the clustered layout (round-5 ADVICE —
-            # previously the property was silently cleared here).
+        # a Column-expression layout applies to THIS commit only; the
+        # persisted string property survives it, so a later compact()
+        # keeps the clustered layout
+        if isinstance(cluster_by, str):
+            props["cluster_by"] = cluster_by
+        elif isinstance(stored.get("cluster_by"), str):
             props["cluster_by"] = stored["cluster_by"]
         if eff_cf:
             props["cluster_files"] = int(eff_cf)
@@ -514,10 +505,9 @@ class AtomicTable:
             props["bloom_cols"] = list(eff_bloom)
             props["bloom_bits"] = int(eff_bits)
             props["bloom_hashes"] = int(eff_hashes)
+        expr = None if isinstance(cluster_by, str) else cluster_by
         return self._commit_df(
-            df, self.current_version(), eff_stats, eff_cluster, eff_cf,
-            txn=txn, bloom_cols=eff_bloom, bloom_bits=eff_bits,
-            bloom_hashes=eff_hashes, props=props,
+            df, self.current_version(), txn=txn, props=props, cluster_expr=expr
         )
 
     def upsert(
@@ -530,14 +520,13 @@ class AtomicTable:
         ``txn=(app_id, txn_version)`` makes the commit IDEMPOTENT: a
         replay whose txn_version the manifest has already recorded is
         skipped — the Delta txnAppId pattern that turns foreachBatch
-        retries into exactly-once sink semantics."""
+        retries into exactly-once sink semantics. An empty table
+        commits ``updates`` as its first version."""
         v = self.current_version()
-        if txn is not None:
-            last = self.last_txn_version(txn[0])
-            if last is not None and last >= int(txn[1]):
-                return v or 0
+        if self._replayed(txn):
+            return v or 0
         out = M.upsert(self.read(v), updates, keys) if v else updates
-        return self._commit_df(out, v, txn=txn, **self._stored_staging())
+        return self._commit_df(out, v, txn=txn)
 
     def delete_insert(self, replacement: DataFrame, selector: Column) -> int:
         """Delete-before-insert (reference K4) as one atomic commit."""
@@ -547,7 +536,7 @@ class AtomicTable:
             if v
             else replacement
         )
-        return self._commit_df(out, v, **self._stored_staging())
+        return self._commit_df(out, v)
 
     def replace_where(self, replacement: DataFrame, predicate: str) -> int:
         """Delta-style replaceWhere: rows matching `predicate` are
@@ -577,7 +566,7 @@ class AtomicTable:
         """Point the manifest back at an earlier immutable version."""
         if not os.path.isdir(self._version_dir(to_version)):
             raise FileNotFoundError(f"no version dir v{to_version}")
-        self._swap(to_version, self.current_version())
+        self._swap(to_version, self.current_version(), table_props=self.table_props())
 
     def vacuum(self, keep: int = 2) -> list[int]:
         """Remove version dirs older than the newest `keep` (never the
@@ -626,24 +615,18 @@ class LakeTransaction:
         )
 
     def delete_keys(self, delete_df: DataFrame, keys: Sequence[str]) -> None:
-        self.state = M.delete_keys(self.state, delete_df, keys)
+        # deleting from an empty table leaves it empty: nothing commits
+        if self.state is not None:
+            self.state = M.delete_keys(self.state, delete_df, keys)
 
     def __exit__(self, exc_type, exc, tb) -> bool:
-        if exc_type is not None:
-            return False  # rollback: nothing staged/committed yet
-        if self.state is None:
-            return False
-        new_v = (self.base_version or 0) + 1
-        staged = self.table._stage(self.state, **self.table._stored_staging())
-        try:
-            self.table._promote(staged, new_v, self.base_version)
-        except BaseException:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise
+        # an exception = rollback: nothing staged/committed yet
+        if exc_type is None and self.state is not None:
+            self.table._commit_df(self.state, self.base_version)
         return False
 
 
-class PartitionedAtomicTable:
+class PartitionedAtomicTable(_Pointer):
     """Partition-granular atomic table — the piece that makes MERGE
     economics work at 100 TB, where AtomicTable's full-state staging
     (correct, but a whole-table copy per commit) is the wrong cost
@@ -668,53 +651,13 @@ class PartitionedAtomicTable:
     """
 
     def __init__(self, spark: SparkSession, root: str, partition_col: str):
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root)
         self.pcol = partition_col
         os.makedirs(os.path.join(root, "_versions"), exist_ok=True)
-
-    # ----------------------------------------------------------- pointers
-    def _pointer_path(self) -> str:
-        return os.path.join(self.root, MANIFEST)
-
-    def _pointer(self) -> dict:
-        try:
-            with open(self._pointer_path()) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return {}
-
-    def current_version(self) -> int | None:
-        try:
-            return int(self._pointer()["version"])
-        except (KeyError, ValueError, TypeError):
-            return None
-
-    def last_txn_version(self, app_id: str) -> int | None:
-        """Transaction ledger, as in AtomicTable.last_txn_version."""
-        v = self._pointer().get("txns", {}).get(app_id)
-        return int(v) if v is not None else None
 
     def _manifest(self, version: int) -> dict:
         with open(os.path.join(self.root, "_versions", f"{version}.json")) as fh:
             return json.load(fh)
-
-    def _swap(
-        self, version: int, expected: int | None, txn: tuple[str, int] | None = None
-    ) -> None:
-        if self.current_version() != expected:
-            raise ConflictError(
-                f"pointer moved (expected v{expected}, found v{self.current_version()})"
-            )
-        txns = dict(self._pointer().get("txns", {}))
-        if txn is not None:
-            txns[txn[0]] = int(txn[1])
-        tmp = self._pointer_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"version": version, "committed_at": time.time(), "txns": txns}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.rename(tmp, self._pointer_path())
 
     def table_props(self) -> dict:
         """Persistent indexing properties (as AtomicTable.table_props,
@@ -737,56 +680,43 @@ class PartitionedAtomicTable:
         eff_props = props if props is not None else self.table_props()
         new_v = (expected or 0) + 1
         mpath = os.path.join(self.root, "_versions", f"{new_v}.json")
-        tmp = mpath + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "pcol": self.pcol,
-                    "ptype": ptype,
-                    "partitions": parts,
-                    "table_props": eff_props,
-                },
-                fh,
-            )
-            fh.flush()
-            os.fsync(fh.fileno())
+        body = {"pcol": self.pcol, "ptype": ptype, "partitions": parts, "table_props": eff_props}
+        tmp = _fsynced_tmp(mpath, body)
         try:
             # exclusive-create semantics: losing a version-number race
             # must not clobber the winner's manifest
             os.link(tmp, mpath)
         except OSError as e:
-            os.unlink(tmp)
             raise ConflictError(f"manifest v{new_v} already claimed") from e
-        os.unlink(tmp)
+        finally:
+            os.unlink(tmp)
         self._swap(new_v, expected, txn)
         return new_v
 
     # ------------------------------------------------------------ writers
-    def _write_partitions(self, df: DataFrame) -> tuple[dict, str]:
-        """Stage df's partitions as fresh immutable dirs; returns
-        ({value -> dirname}, partition dtype). One partitioned write
-        job; dirs move into place with renames (no data copy)."""
+    def _write_partitions(
+        self, df: DataFrame, props: dict, carried: dict | None = None
+    ) -> tuple[dict, str]:
+        """Stage df's partitions as fresh immutable dirs, each with its
+        per-file zone maps when ``props`` sets ``stats_cols``; returns
+        ({value -> dirname} over `carried` plus the rewritten values,
+        partition dtype). Carried-by-reference dirs keep their immutable
+        stats. One partitioned write job; dirs move into place with
+        renames (no data copy)."""
         ptype = dict(df.dtypes)[self.pcol]
-        staged = os.path.join(self.root, "_staging", uuid.uuid4().hex)
+        staged = self._staging_dir()
         df.write.mode("overwrite").partitionBy(self.pcol).parquet(staged)
-        parts: dict[str, str] = {}
+        parts = dict(carried or {})
         for d in os.listdir(staged):
             if not d.startswith(f"{self.pcol}="):
                 continue
-            val = d.split("=", 1)[1]
             new_name = f"p_{uuid.uuid4().hex}"
             os.rename(os.path.join(staged, d), os.path.join(self.root, new_name))
-            parts[val] = new_name
+            if props.get("stats_cols"):
+                _write_stats(os.path.join(self.root, new_name), list(props["stats_cols"]))
+            parts[d.split("=", 1)[1]] = new_name
         shutil.rmtree(staged, ignore_errors=True)
         return parts, ptype
-
-    def _write_dir_stats(self, parts: dict, stats_cols) -> None:
-        """Per-file zone maps for each freshly-written partition dir —
-        the AtomicTable footer walk, immutable with the dir."""
-        if not stats_cols:
-            return
-        for dirname in parts.values():
-            AtomicTable._write_stats(os.path.join(self.root, dirname), list(stats_cols))
 
     def write(
         self,
@@ -802,46 +732,43 @@ class PartitionedAtomicTable:
         (pre-shape the frame, e.g. repartitionByRange on (partition,
         col), for tight per-file zones)."""
         expected = self.current_version()
-        if txn is not None:
-            last = self.last_txn_version(txn[0])
-            if last is not None and last >= int(txn[1]):
-                return expected or 0
+        if self._replayed(txn):
+            return expected or 0
         eff_stats = list(stats_cols) if stats_cols is not None else self.table_props().get("stats_cols")
         props = {"stats_cols": list(eff_stats)} if eff_stats else {}
-        parts, ptype = self._write_partitions(df)
-        self._write_dir_stats(parts, eff_stats)
+        parts, ptype = self._write_partitions(df, props)
         return self._commit_manifest(parts, ptype, expected, txn, props=props)
+
+    def _attach_pcol(self, base: DataFrame, manifest: dict, vals: list[str]) -> DataFrame:
+        """Re-attach the partition column from the manifest mapping: each
+        dir holds ONE value, so derive it from the dir NAME in the file
+        path (input_file_name carries a file:// scheme prefix, so match
+        the unique p_<hex> segment rather than the full path)."""
+        parts = manifest["partitions"]
+        if vals:
+            mapping = F.create_map(*[x for v in vals for x in (F.lit(parts[v]), F.lit(v))])
+            dirname = F.regexp_extract(F.input_file_name(), r"/(p_[0-9a-f]{32})/", 1)
+            value = mapping[dirname]
+        else:
+            value = F.lit(None)
+        return base.withColumn(self.pcol, value.cast(manifest["ptype"]))
 
     def _read_dirs(self, manifest: dict, values: Sequence[str] | None = None) -> DataFrame:
         parts = manifest["partitions"]
         vals = list(parts) if values is None else [v for v in values if v in parts]
-        if not vals:
+        if vals:
+            base = self.spark.read.parquet(*[os.path.join(self.root, parts[v]) for v in vals])
+        else:
             # empty selection with the right schema: zero-row frame from
             # any referenced dir, or a truly empty table is an error
             if not parts:
                 raise FileNotFoundError(f"empty table at {self.root}")
             any_dir = next(iter(parts.values()))
             base = self.spark.read.parquet(os.path.join(self.root, any_dir)).limit(0)
-            vals, dirs = [], []
-        else:
-            dirs = [os.path.join(self.root, parts[v]) for v in vals]
-            base = self.spark.read.parquet(*dirs)
-        # re-attach the partition column from the manifest mapping: each
-        # dir holds ONE value, so derive it from the dir NAME in the
-        # file path (input_file_name carries a file:// scheme prefix, so
-        # match the unique p_<hex> segment rather than the full path)
-        if vals:
-            mapping = F.create_map(
-                *[x for v in vals for x in (F.lit(parts[v]), F.lit(v))]
-            )
-            dirname = F.regexp_extract(F.input_file_name(), r"/(p_[0-9a-f]{32})/", 1)
-            out = base.withColumn(self.pcol, mapping[dirname].cast(manifest["ptype"]))
-        else:
-            out = base.withColumn(self.pcol, F.lit(None).cast(manifest["ptype"]))
-        return out
+        return self._attach_pcol(base, manifest, vals)
 
     def read(self, version: int | None = None) -> DataFrame:
-        v = version if version is not None else self.current_version()
+        v = self._resolve(version)
         if v is None:
             raise FileNotFoundError(f"no committed version at {self.root}")
         return self._read_dirs(self._manifest(v))
@@ -849,8 +776,7 @@ class PartitionedAtomicTable:
     def partition_dirs(self, version: int | None = None) -> dict:
         """{partition value -> dir name} — the identity-reuse audit
         surface (untouched partitions keep their dir across versions)."""
-        v = version if version is not None else self.current_version()
-        return dict(self._manifest(v)["partitions"])
+        return dict(self._manifest(self._resolve(version))["partitions"])
 
     def read_pruned(
         self,
@@ -867,37 +793,22 @@ class PartitionedAtomicTable:
         at every level: a dir without ``_stats.json`` (written before
         stats_cols was set, or carried from such a version) contributes
         all its files."""
-        v = version if version is not None else self.current_version()
-        manifest = self._manifest(v)
+        manifest = self._manifest(self._resolve(version))
         parts = manifest["partitions"]
         vals = list(parts) if values is None else [x for x in values if x in parts]
         pred = F.col(col).between(lo, hi)
         keep: list[str] = []
         for val in vals:
             dpath = os.path.join(self.root, parts[val])
-            try:
-                with open(os.path.join(dpath, STATS)) as fh:
-                    stats = json.load(fh)
-            except (OSError, ValueError):
-                stats = None
-            for fn in sorted(os.listdir(dpath)):
-                if not fn.endswith(".parquet"):
-                    continue
-                if stats is not None:
-                    z = stats.get(fn, {}).get(col)
-                    if z is not None and (z[1] < lo or z[0] > hi):
-                        continue
-                keep.append(os.path.join(dpath, fn))
+            stats = _load_json(os.path.join(dpath, STATS), {})
+            keep += [
+                os.path.join(dpath, fn)
+                for fn in sorted(os.listdir(dpath))
+                if fn.endswith(".parquet") and _zone_hit(stats.get(fn, {}), col, lo, hi)
+            ]
         if not keep:
             return self._read_dirs(manifest, []).where(pred)
-        base = self.spark.read.parquet(*keep)
-        mapping = F.create_map(
-            *[x for val in vals for x in (F.lit(parts[val]), F.lit(val))]
-        )
-        dirname = F.regexp_extract(F.input_file_name(), r"/(p_[0-9a-f]{32})/", 1)
-        return base.withColumn(
-            self.pcol, mapping[dirname].cast(manifest["ptype"])
-        ).where(pred)
+        return self._attach_pcol(self.spark.read.parquet(*keep), manifest, vals).where(pred)
 
     def upsert(
         self,
@@ -910,12 +821,11 @@ class PartitionedAtomicTable:
         by reference. The touched-value collect is partition-count
         scale (driver-safe); the merge job reads just the touched dirs.
         ``txn=(app_id, txn_version)`` makes the commit idempotent via
-        the pointer's transaction ledger (see AtomicTable.upsert)."""
+        the pointer's transaction ledger (see AtomicTable.upsert). An
+        empty table is a full ``write`` of ``updates``."""
         expected = self.current_version()
-        if txn is not None:
-            last = self.last_txn_version(txn[0])
-            if last is not None and last >= int(txn[1]):
-                return expected or 0
+        if self._replayed(txn):
+            return expected or 0
         if expected is None:
             return self.write(updates, txn=txn)
         manifest = self._manifest(expected)
@@ -933,13 +843,9 @@ class PartitionedAtomicTable:
         merged = merged.select(
             *[F.col(f.name).cast(f.dataType) for f in old_touched.schema.fields]
         )
-        new_parts, ptype = self._write_partitions(merged)
-        # re-apply the persisted zone-map property to the REWRITTEN dirs
-        # only — carried-by-reference dirs keep their immutable stats
-        self._write_dir_stats(new_parts, self.table_props().get("stats_cols"))
-        parts = dict(manifest["partitions"])
-        parts.update(new_parts)
-        return self._commit_manifest(parts, ptype, expected, txn)
+        props = manifest.get("table_props", {})
+        parts, ptype = self._write_partitions(merged, props, manifest["partitions"])
+        return self._commit_manifest(parts, ptype, expected, txn, props=props)
 
     def delete_partitions(self, values: Sequence[str]) -> int:
         """Drop whole partitions — a manifest-only commit, no data job."""
@@ -980,16 +886,16 @@ def compact_partition(
     ``n_files``, commit as a new version — every OTHER partition rides
     along by reference, so compaction cost is one partition's data, and
     readers see old-or-new atomically (the streaming-ingest small-file
-    problem, solved per partition)."""
+    problem, solved per partition). The rewritten dir gets the table's
+    zone maps, like any other commit."""
     expected = table.current_version()
     manifest = table._manifest(expected)
     if value not in manifest["partitions"]:
         raise KeyError(f"no partition {value!r}")
     part_df = table._read_dirs(manifest, [value]).coalesce(n_files)
-    new_parts, ptype = table._write_partitions(part_df)
-    parts = dict(manifest["partitions"])
-    parts.update(new_parts)
-    return table._commit_manifest(parts, manifest["ptype"], expected)
+    props = manifest.get("table_props", {})
+    parts, _ = table._write_partitions(part_df, props, manifest["partitions"])
+    return table._commit_manifest(parts, manifest["ptype"], expected, props=props)
 
 
 def table_changes(

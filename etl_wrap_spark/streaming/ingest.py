@@ -257,10 +257,7 @@ def stream_upsert_to_lake(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        txn = (app, int(batch_id))
-        if table.current_version() is None:
-            table.write(batch_df, txn=txn)
-        else:
-            table.upsert(batch_df, keys, txn=txn)
+        # both table kinds' upsert commit the first batch of an empty table
+        table.upsert(batch_df, keys, txn=(app, int(batch_id)))
 
     return run_foreach_batch(stream_df, checkpoint, _apply, mode="update")

@@ -87,6 +87,13 @@ def test_transaction_batches_multiple_ops_into_one_version(spark, table):
     assert _rows(table) == {(2, "b"), (3, "c")}
 
 
+def test_transaction_delete_keys_on_empty_table_commits_nothing(spark, table):
+    # deleting from a table that has no version yet leaves it empty
+    with table.transaction() as tx:
+        tx.delete_keys(spark.createDataFrame([(1,)], "k int"), ["k"])
+    assert table.current_version() is None
+
+
 def test_concurrent_writer_conflict_not_corruption(spark, table):
     table.write(spark.createDataFrame([(1, "a")], "k int, v string"))
     slow = table.transaction()
@@ -486,5 +493,15 @@ def test_partitioned_stats_survive_partition_merge(spark, ptable):
     import os as _os
     from etl_wrap_spark.sinks.lake import STATS as _S
     assert _os.path.exists(_os.path.join(ptable.root, after["2"], _S))
+    got = ptable.read_pruned("k", 123000, 124000, values=["2"])
+    assert 123456 in {r.k for r in got.collect()}
+    # compaction rewrites partition "2" into a fresh dir: the table's
+    # zone maps must be re-applied to it like any other commit
+    from etl_wrap_spark.sinks.lake import compact_partition
+
+    compact_partition(ptable, "2")
+    compacted = ptable.partition_dirs()["2"]
+    assert compacted != after["2"]
+    assert _os.path.exists(_os.path.join(ptable.root, compacted, _S))
     got = ptable.read_pruned("k", 123000, 124000, values=["2"])
     assert 123456 in {r.k for r in got.collect()}
