@@ -26,18 +26,25 @@ of execution — and `cold_total` reports the first-run total alongside.
 The "within 2x of the baseline" contract has no absolute anchor (the
 reference publishes no numbers — BASELINE.md), so the harness also
 times every oracle on DuckDB over the same parquet at the same sf and
-emits per-query spark/duckdb ratios — INTERLEAVED per query by
-default (each oracle timed immediately after its Spark runs), because
-two consecutive two-phase runs of identical code measured whole-leg
-host drift of ±15-28% that no per-query statistic can remove, while
-interleaving samples both engines in the same machine epoch so the
-drift cancels in the ratio; SPARK_GRAFT_INTERLEAVE=0 restores the
-two-phase protocol. DuckDB is a strong single-node
-columnar engine, so ratio ≈ 1 on local[32] means the Spark plan carries
-no distributed-overhead pathology; regressions become visible
-round-over-round. Disable with SPARK_GRAFT_DUCKDB=0; each oracle is
-interrupt-capped (SPARK_GRAFT_DUCKDB_CAP seconds, default 60) so the
-bench can never hang on a quadratic oracle.
+emits per-query spark/duckdb ratios, INTERLEAVED per query (each
+oracle timed immediately after its Spark runs): two consecutive
+two-phase runs of identical code measured whole-leg host drift of
+±15-28% that no per-query statistic can remove, while interleaving
+samples both engines in the same machine epoch so the drift cancels in
+the ratio. Presentation sorts are stripped on both engines
+(strip_presentation_sort / strip_oracle_order_by). DuckDB is a strong
+single-node columnar engine, so ratio ≈ 1 on local[32] means the Spark
+plan carries no distributed-overhead pathology; regressions become
+visible round-over-round. Each oracle is interrupt-capped
+(SPARK_GRAFT_DUCKDB_CAP seconds, default 60) so the bench can never
+hang on a quadratic oracle; SPARK_GRAFT_DUCKDB_MEM sets its memory
+limit (default 24GB).
+
+The run has three phases: _measure (the interleaved pass), _salvage
+(spaced re-samples of queries over their pinned band) and _report
+(the detail dict). SPARK_GRAFT_QUERIES runs a subset,
+SPARK_GRAFT_PINNED points the band at another detail file and
+SPARK_GRAFT_DETAIL_OUT redirects the detail (see _detail_path).
 """
 
 from __future__ import annotations
@@ -49,7 +56,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from etl_wrap_spark import catalog
 from etl_wrap_spark.session import TABLES, get_session
@@ -73,6 +81,18 @@ HEADLINE = [
     "q29_asof_join",
 ]
 
+# Runs per query PER ENGINE; the per-query statistic is the MIN
+# (best-of-3 — see the module docstring for the protocol study).
+RUNS = max(1, int(os.environ.get("SPARK_GRAFT_RUNS", "3")))
+
+# Absolute excess guard of the DuckDB side of the band rule: its
+# per-query floor is milliseconds, so a ratio alone on a 3 ms anchor
+# would re-sample noise.
+DUCK_GUARD = 0.25
+
+# At most this many flagged queries are re-sampled per run.
+SALVAGE_MAX = 25
+
 
 def _duck_connect(sf_dir: str):
     """DuckDB connection with the bench's memory/thread policy and the
@@ -90,54 +110,36 @@ def _duck_connect(sf_dir: str):
     # regions, and at the kernel default vm.max_map_count=65530 the
     # process runs out of MAPPINGS mid-leg — surfacing as a bare
     # Python MemoryError with >100 GB free (observed 3x in round 6;
-    # /proc/<pid>/maps read 65,532 at death). Default mitigation is the
-    # LOCAL one: cap DuckDB's thread pool — fewer allocator arenas,
-    # measured VMA peak ~15k vs ~61k at 32 threads, and the chain
-    # oracles run no slower at 8 threads on this data. Writing the
-    # host-global vm.max_map_count sysctl (persists until reboot,
-    # affects every process) is OPT-IN via SPARK_GRAFT_SYSCTL=1 and
-    # logged when it happens (round-6 ADVICE: never mutate host state
-    # silently as a bench side effect).
+    # /proc/<pid>/maps read 65,532 at death). The mitigation is LOCAL:
+    # cap DuckDB's thread pool — fewer allocator arenas, measured VMA
+    # peak ~15k vs ~61k at 32 threads, and the chain oracles run no
+    # slower at 8 threads on this data. The host-global sysctl is never
+    # written.
     try:
-        if int(open("/proc/sys/vm/max_map_count").read()) < 262144:
-            wrote = False
-            if os.environ.get("SPARK_GRAFT_SYSCTL") == "1":
-                try:
-                    with open("/proc/sys/vm/max_map_count", "w") as fh:
-                        fh.write("1048576")
-                    wrote = True
-                    print("# duckdb: wrote vm.max_map_count=1048576 "
-                          "(SPARK_GRAFT_SYSCTL=1; host-global, persists "
-                          "until reboot)", file=sys.stderr)
-                except OSError:
-                    pass
-            if not wrote:
-                con.execute("SET threads=8")
-                print("# duckdb: vm.max_map_count low — capping oracle "
-                      "leg at 8 threads (set SPARK_GRAFT_SYSCTL=1 to "
-                      "raise the sysctl instead)", file=sys.stderr)
-    except OSError:
-        pass
+        with open("/proc/sys/vm/max_map_count", encoding="ascii") as fh:
+            low = int(fh.read()) < 262144
+    except (OSError, ValueError):
+        low = False
+    if low:
+        con.execute("SET threads=8")
+        print("# duckdb: vm.max_map_count low — capping oracle leg at 8 "
+              "threads", file=sys.stderr)
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(p):
-            # Spark-written datasets are DIRECTORIES of part files
-            # (the synthetic sf1 replica) — DuckDB needs the glob form
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{p}/*.parquet'"
-            )
-        elif os.path.exists(p):
-            con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{p}'")
+        # Spark-written datasets are DIRECTORIES of part files (the
+        # synthetic sf1 replica) — DuckDB needs the glob form
+        src = f"{p}/*.parquet" if os.path.isdir(p) else p
+        if os.path.exists(p):
+            con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{src}'")
     return con
 
 
 def _time_oracle(con, sql: str, cap: float) -> list[float]:
-    """RUNS timed executions of one oracle; same protocol as the Spark
-    side (min of RUNS runs is the statistic): comparing Spark's warm
-    stat against a single cold DuckDB run would systematically flatter
-    Spark (round-3 ADVICE)."""
-    if not KEEP_SORT:
-        sql = strip_oracle_order_by(sql)
+    """RUNS timed executions of one oracle, its presentation ORDER BY
+    stripped; same protocol as the Spark side (min of RUNS runs is the
+    statistic): comparing Spark's warm stat against a single cold DuckDB
+    run would systematically flatter Spark (round-3 ADVICE)."""
+    sql = strip_oracle_order_by(sql)
     runs: list[float] = []
     for _ in range(RUNS):
         # the watchdog is best-effort: under transient thread/memory
@@ -160,40 +162,12 @@ def _time_oracle(con, sql: str, cap: float) -> list[float]:
     return runs
 
 
-def time_oracles(
-    sf_dir: str, names: list[str], cap: float,
-    runs_out: dict[str, list[float]] | None = None,
-) -> dict[str, float | None]:
-    """Two-phase mode (SPARK_GRAFT_INTERLEAVE=0): time every oracle in
-    one DuckDB pass after the Spark leg."""
-    if runs_out is None:
-        runs_out = {}
-    con = _duck_connect(sf_dir)
-    oracles = catalog.oracle_sql()
-    out: dict[str, float | None] = {}
-    for name in names:
-        sql = oracles.get(name)
-        if sql is None:
-            continue
-        runs = _time_oracle(con, sql, cap)
-        out[name] = min(runs) if runs else None
-        runs_out[name] = runs
-        print(f"# duckdb {name}: {out[name]}s", file=sys.stderr)
-    return out
-
-
-KEEP_SORT = os.environ.get("SPARK_GRAFT_KEEP_SORT", "0") == "1"
-
-# Runs per query PER ENGINE; the per-query statistic is the MIN
-# (best-of-3 — see the module docstring for the protocol study).
-RUNS = max(1, int(os.environ.get("SPARK_GRAFT_RUNS", "3")))
-
-
 def _median(runs: list[float]) -> float:
     s = sorted(runs)
     n = len(s)
     mid = s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
     return round(mid, 3)
+
 
 def strip_presentation_sort(df):
     """Drop a top-level GLOBAL Sort from the query's logical plan.
@@ -207,14 +181,13 @@ def strip_presentation_sort(df):
     compile to Limit-rooted plans (TakeOrderedAndProject), and
     sortWithinPartitions is non-global — only a root global Sort is
     stripped. The DuckDB oracles get the symmetric treatment in
-    time_oracles (trailing ORDER BY without LIMIT removed), so the
-    ratio compares sort-free work on BOTH engines. Disable both with
-    SPARK_GRAFT_KEEP_SORT=1.
+    _time_oracle (trailing ORDER BY without LIMIT removed), so the
+    ratio compares sort-free work on BOTH engines.
 
     Uses Spark-4-internal JVM accessors (classic.Dataset.ofRows, the
     Scala `global` field); on any other Spark build the except arm
-    returns the DataFrame unstripped (KEEP_SORT semantics) instead of
-    crashing the bench (round-5 ADVICE)."""
+    returns the DataFrame unstripped instead of crashing the bench
+    (round-5 ADVICE)."""
     from pyspark.sql import DataFrame
 
     try:
@@ -232,7 +205,7 @@ def strip_presentation_sort(df):
             _STRIP_WARNED = True
             print(
                 "# strip_presentation_sort: internal API unavailable on this "
-                "Spark build — KEEP_SORT semantics apply",
+                "Spark build — presentation sorts are kept",
                 file=sys.stderr,
             )
         return df
@@ -321,8 +294,32 @@ _PROBE_EVERY = 20
 
 
 def _post_query_hygiene(spark) -> None:
-    """Between-queries block-manager + driver-heap hygiene (see the
-    main-loop comments where this was inlined through round 10)."""
+    """Between-queries block-manager + driver-heap hygiene.
+
+    Block manager: each run's localCheckpoints pinned RDD blocks that
+    are garbage once the query's timings (incl. the exec-only re-run,
+    which reads the last run's checkpoints) are done. 220 queries of
+    accumulation costs later queries eviction pressure + GC (measured
+    ~4% on a polluted-session probe); unpersist is async and the next
+    query never references a prior query's RDDs.
+
+    INVARIANT (round-9 ADVICE): this blanket sweep destroys
+    localCheckpoint blocks IRRECOVERABLY (lineage is truncated, so a
+    later reference fails with missing-block, not a recompute). It is
+    safe only while nothing held ACROSS queries is persisted — in
+    particular session._TABLE_CACHE must keep plain lazy scan plans,
+    never .cache()/.persist()/localCheckpoint()ed frames. Anything that
+    must survive this sweep has to be re-creatable from lineage or
+    rebuilt per query.
+
+    Driver heap (round-10, the driver-epoch tail): shuffle and
+    broadcast state is reclaimed by ContextCleaner only when the DRIVER
+    JVM garbage-collects the referencing objects; a 220-query run on an
+    8g heap can accumulate for minutes until a full-GC storm lands on
+    whatever queries run next (the r9 driver artifact's contiguous
+    q129-q158 2-6x window). When the JVM heap is >60% used, drop
+    Python-side py4j proxies (gc.collect) then System.gc() so the
+    cleaner's weak references fire. The check is 3 py4j calls (~ms)."""
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         it = jmap.entrySet().iterator()
@@ -386,30 +383,60 @@ def execute_plan(df) -> int:
     return df._jdf.queryExecution().toRdd().count()
 
 
+def _sample(qs, name: str, spark, sf_dir: str):
+    """One full build+execute of a catalog query, presentation sort
+    stripped → (wall, df). Every sample rebuilds the DataFrame because
+    for iterative operators (CC, PageRank, incremental dedup) the real
+    work happens DURING build (localCheckpoints); timing only a
+    re-execute of the final consumer would report q59 at 0.2s instead
+    of its true 2-4s (measured round 5; the plan-reuse protocol was
+    rejected for the headline on exactly this)."""
+    t0 = time.time()
+    df = strip_presentation_sort(qs[name](spark, sf_dir))
+    execute_plan(df)
+    return round(time.time() - t0, 3), df
+
+
+def _exec_only(df) -> float:
+    """Execution-only wall of an already-built plan — the
+    repeated-query regime (dashboards, incremental reruns) where py4j
+    construction + Catalyst analysis amortize away. Honest ONLY as a
+    secondary number: for eager-checkpoint queries it excludes the
+    iterative work."""
+    t0 = time.time()
+    execute_plan(df)
+    return round(time.time() - t0, 3)
+
+
+def _guard(sched_floor: float) -> float:
+    """Absolute excess guard of the Spark side: max(0.5 s, 2x the
+    measured sched floor), so a floor-bound query (pinned ~0.2 s = one
+    scheduling round trip) does not flag on one extra round trip."""
+    return max(0.5, 2 * sched_floor) if sched_floor > 0 else 0.5
+
+
+def _over_band(wall, pinned, guard: float) -> bool:
+    """The one band rule: wall > 2x its pinned band AND the excess over
+    the band > guard. A missing wall or band never flags."""
+    return (
+        wall is not None and (pinned or 0) > 0
+        and wall > 2 * pinned and wall - pinned > guard
+    )
+
+
 def _salvage_flags(
-    names, timings, duck, ref, dref, guard, interleave,
-    duck_guard: float = 0.25,
+    names, timings, duck, ref, dref, guard, duck_guard: float = DUCK_GUARD,
 ):
-    """The symmetric salvage trigger (round-11 verdict ask #2),
-    factored out so tests can pin it: returns (flagged, spark_flag,
-    duck_flag). A query is flagged when EITHER engine's wall exceeds 2x
-    its pinned band by more than that side's guard — both legs are then
-    re-sampled, so neither minimum gets a structural tailwind. The duck
-    guard is absolute (its per-query floor is milliseconds; a ratio on
-    a 3 ms anchor would re-sample noise)."""
-    spark_flag = {
-        n for n in names
-        if n in ref and ref[n] > 0
-        and timings[n] > 2 * ref[n] and timings[n] - ref[n] > guard
+    """The symmetric salvage trigger (round-11 verdict ask #2): returns
+    (flagged, spark_flag, duck_flag). A query is flagged when EITHER
+    engine's wall is over its pinned band (_over_band with that side's
+    guard) — both legs are then re-sampled, so neither minimum gets a
+    structural tailwind. Spark-flagged names come first in run order,
+    duck-only names after them, sorted."""
+    spark_flag = {n for n in names if _over_band(timings[n], ref.get(n), guard)}
+    duck_flag = {
+        n for n in names if _over_band(duck.get(n), dref.get(n), duck_guard)
     }
-    duck_flag = set()
-    if interleave:
-        duck_flag = {
-            n for n in names
-            if n in dref and dref[n]
-            and duck.get(n) is not None
-            and duck[n] > 2 * dref[n] and duck[n] - dref[n] > duck_guard
-        }
     flagged = [n for n in names if n in spark_flag] + sorted(
         duck_flag - spark_flag
     )
@@ -420,18 +447,22 @@ def _load_pinned_band() -> dict | None:
     """The committed-band reference: the repo-root BENCH_DETAIL.json as
     it sits ON DISK AT RUN START (the pinned best committed epoch —
     round-11 protocol: the driver's own overwrite is archived to
-    BENCH_DETAIL_driver_rN.json and the pinned run restored at round
-    open). Read before the run because this process overwrites the same
-    path at the end. SPARK_GRAFT_PINNED overrides the path (sf-specific
-    bands, tests)."""
+    epochs/BENCH_DETAIL_driver_rN.json and the pinned run restored at
+    round open). Read before the run because a full run at the band's
+    sf overwrites the same path at the end. SPARK_GRAFT_PINNED
+    overrides the path (sf-specific bands, tests). The band's DuckDB
+    walls ride along under "duckdb" when the file has them."""
     path = os.environ.get("SPARK_GRAFT_PINNED") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+        REPO, "BENCH_DETAIL.json"
     )
     try:
         with open(path, encoding="utf-8") as fh:
             d = json.load(fh)
         if isinstance(d.get("queries"), dict):
-            return {"sf": d.get("sf"), "queries": d["queries"]}
+            band = {"sf": d.get("sf"), "queries": d["queries"]}
+            if isinstance(d.get("duckdb"), dict):
+                band["duckdb"] = d["duckdb"]
+            return band
     except (OSError, ValueError):
         pass
     return None
@@ -441,29 +472,25 @@ def _tail_vs_pinned(
     timings: dict[str, float], sf, pinned: dict | None, sched_floor: float
 ) -> dict:
     """Per-query contract self-report (round-10 verdict lens ruling):
-    list every query whose warm wall this run exceeds 2x its pinned
-    committed-band wall. An absolute excess guard of
-    max(0.5 s, 2x the measured sched floor) keeps floor-bound queries
-    (pinned ~0.2 s = one scheduling round trip) from flagging on a
-    single extra round trip of host jitter — the guard is disclosed in
-    the artifact, and every compared pair is in the detail regardless."""
+    list every query whose warm wall this run holds over its pinned
+    committed-band wall (_over_band with the _guard excess guard). The
+    guard is disclosed in the artifact, and every compared pair is in
+    the detail regardless."""
     out: dict = {"threshold": "wall > 2x pinned AND excess > guard"}
-    guard = max(0.5, 2 * sched_floor) if sched_floor > 0 else 0.5
+    guard = _guard(sched_floor)
     out["abs_excess_guard_sec"] = round(guard, 3)
-    if pinned is None:
-        out["status"] = "no pinned BENCH_DETAIL.json at run start"
-        out["violators"] = {}
-        return out
-    if pinned["sf"] != sf:
-        out["status"] = f"pinned sf={pinned['sf']} != run sf={sf}; not comparable"
+    if pinned is None or pinned["sf"] != sf:
+        out["status"] = (
+            "no pinned BENCH_DETAIL.json at run start" if pinned is None
+            else f"pinned sf={pinned['sf']} != run sf={sf}; not comparable"
+        )
         out["violators"] = {}
         return out
     ref = pinned["queries"]
-    viol = {}
-    for n, t in timings.items():
-        p = ref.get(n)
-        if p and t > 2 * p and (t - p) > guard:
-            viol[n] = {"wall": t, "pinned": p, "ratio": round(t / p, 2)}
+    viol = {
+        n: {"wall": t, "pinned": ref[n], "ratio": round(t / ref[n], 2)}
+        for n, t in timings.items() if _over_band(t, ref.get(n), guard)
+    }
     out["status"] = "compared"
     out["n_compared"] = sum(1 for n in timings if n in ref)
     out["new_queries"] = sorted(n for n in timings if n not in ref)
@@ -473,21 +500,31 @@ def _tail_vs_pinned(
     return out
 
 
-def main():
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([\d.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else None
-    pinned_band = _load_pinned_band()
+def _detail_path(subset: bool, sf, band: dict | None) -> str:
+    """Where the detail file goes: SPARK_GRAFT_DETAIL_OUT when set;
+    else the pinned BENCH_DETAIL.json, but only for a full-catalog run
+    at the band's sf (or when no band exists yet); else the git-ignored
+    BENCH_DETAIL_subset.json — a subset run or a smoke at another sf
+    never clobbers the band (round-10 lost a run to exactly this)."""
+    pinned = not subset and (band is None or band["sf"] == sf)
+    return os.environ.get("SPARK_GRAFT_DETAIL_OUT") or os.path.join(
+        REPO, "BENCH_DETAIL.json" if pinned else "BENCH_DETAIL_subset.json"
+    )
+
+
+def _bench_session():
+    """The tuned session, quietened and warmed up."""
     spark = get_session("etl_wrap_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # The heap-pressure GC sweep below makes ContextCleaner reclaim
-    # finished queries' METRIC accumulators while their task-end events
-    # are still draining through the DAG event loop (actions return on
-    # the job RESULT; per-task metric updates are async). DAGScheduler
-    # then logs a full "non-existent accumulator" stack trace per
-    # event — ~7k of them in an sf1 run, pure cosmetic noise that also
-    # costs driver I/O. Mute that logger in the BENCH process only;
-    # real failures still surface as Python exceptions from the action.
+    # The heap-pressure GC sweep (_post_query_hygiene) makes
+    # ContextCleaner reclaim finished queries' METRIC accumulators while
+    # their task-end events are still draining through the DAG event
+    # loop (actions return on the job RESULT; per-task metric updates
+    # are async). DAGScheduler then logs a full "non-existent
+    # accumulator" stack trace per event — ~7k of them in an sf1 run,
+    # pure cosmetic noise that also costs driver I/O. Mute that logger
+    # in the BENCH process only; real failures still surface as Python
+    # exceptions from the action.
     try:
         jvm = spark._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
@@ -496,234 +533,150 @@ def main():
         )
     except Exception:
         pass
-    qs = catalog.queries()
-    names = [n for n in HEADLINE if n in qs] + [n for n in sorted(qs) if n not in HEADLINE]
-    # Subset knob (round-11): comma-separated names or qNN prefixes —
-    # smoke tests and the sf1 weak-set clean-session probe protocol.
-    # Subset runs keep execution order and never overwrite the pinned
-    # detail unless SPARK_GRAFT_DETAIL_OUT says so (enforced below).
-    only = os.environ.get("SPARK_GRAFT_QUERIES")
-    if only:
-        want = {w.strip() for w in only.split(",") if w.strip()}
-        names = [
-            n for n in names if n in want or n.split("_")[0] in want
-        ]
-
     # JVM/codegen warm-up: a trivial plan plus one small parquet scan so
     # the vectorized reader + codegen paths are hot before timing starts
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").selectExpr(
         "sum(cast(l_quantity as decimal(18,4)))"
     ).collect()
-    sched_floor_start = _sched_floor(spark)
+    return spark
 
-    do_duck = os.environ.get("SPARK_GRAFT_DUCKDB", "1") != "0"
-    # INTERLEAVED mode (default): each query's oracle is timed right
-    # after its Spark runs, so both engines sample the same machine
-    # epoch and slow host drift cancels in the per-query ratio. The
-    # round-7 study that motivated it: two consecutive two-phase runs
-    # of IDENTICAL code read Spark 139 vs 178 s and ratio 1.39 vs 1.63 —
-    # whole-leg drift, not code. Coexistence of the live JVM with
-    # DuckDB is safe under the threads=8 + 24 GB + spill policy (the
-    # round-6 failure was 32 allocator arenas against the VMA budget).
-    # SPARK_GRAFT_INTERLEAVE=0 restores the two-phase protocol.
-    interleave = do_duck and os.environ.get("SPARK_GRAFT_INTERLEAVE", "1") != "0"
-    cap = float(os.environ.get("SPARK_GRAFT_DUCKDB_CAP", "60"))
-    con = _duck_connect(sf_dir) if interleave else None
-    oracles = catalog.oracle_sql() if interleave else {}
-    duck: dict[str, float | None] = {}
-    duck_runs: dict[str, list[float]] = {}
 
-    timings = {}
-    cold = {}
-    exec_only = {}
-    spark_runs: dict[str, list[float]] = {}
+def _measure(spark, names, sample, oracle) -> dict:
+    """The main pass, INTERLEAVED: per query, RUNS full build+execute
+    samples (run 1 pays codegen compile — reported as cold — and never
+    wins the min, so the warm statistic is steady-state), one exec-only
+    re-run of the last plan, then its oracle, so both engines sample
+    the same machine epoch and slow host drift cancels in the per-query
+    ratio (round-7: two consecutive two-phase runs of IDENTICAL code
+    read Spark 139 vs 178 s and ratio 1.39 vs 1.63). The live JVM and
+    DuckDB coexist safely under the threads=8 + memory-limit + spill
+    policy of _duck_connect (the round-6 failure was 32 allocator arenas
+    against the VMA budget). Returns the measurement dict the later
+    phases read and tighten."""
+    t, cold, eo, runs_of, duck, duck_runs = ({} for _ in range(6))
+    m: dict = {"sched_floor_start_sec": _sched_floor(spark), "queries": t,
+               "queries_cold": cold, "queries_exec_only": eo,
+               "queries_runs": runs_of, "duckdb": duck,
+               "duckdb_runs": duck_runs}
     # (position, query, 32-way throughput wall): the mid-run epoch
-    # trace — see _throughput_probe. One probe per _PROBE_EVERY queries.
-    epoch_trace: list[list] = [[0, "start", _throughput_probe(spark)]]
+    # trace — see _throughput_probe.
+    trace = m["epoch_trace_32way"] = [[0, "start", _throughput_probe(spark)]]
     for qi, name in enumerate(names):
-        # Headline warm = MIN of RUNS (default 3) FULL build+execute
-        # runs — run 1 pays codegen compile (reported as cold) and
-        # never wins the min, so the statistic is steady-state. Every
-        # run rebuilds the DataFrame because for iterative operators
-        # (CC, PageRank, incremental dedup) the real work happens
-        # DURING build (localCheckpoints); timing only a re-execute of
-        # the final consumer would report q59 at 0.2s instead of its
-        # true 2-4s (measured round 5 — the plan-reuse protocol was
-        # tried and rejected for the headline on exactly this).
-        runs = []
-        df = None
-        for _ in range(RUNS):
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            if not KEEP_SORT:
-                df = strip_presentation_sort(df)
-            execute_plan(df)
-            runs.append(round(time.time() - t0, 3))
-        # Supplementary: execution-only on the already-built plan — the
-        # repeated-query regime (dashboards, incremental reruns) where
-        # py4j construction + Catalyst analysis amortize away. Honest
-        # ONLY as a secondary number: for eager-checkpoint queries it
-        # excludes the iterative work.
-        t0 = time.time()
-        execute_plan(df)
-        exec_only[name] = round(time.time() - t0, 3)
-        cold[name] = runs[0]
-        spark_runs[name] = runs
-        timings[name] = min(runs)
-        print(
-            f"# {name}: warm={timings[name]}s cold={runs[0]}s "
-            f"exec_only={exec_only[name]}s",
-            file=sys.stderr,
-        )
-        if interleave and name in oracles:
-            oruns = _time_oracle(con, oracles[name], cap)
+        samples = [sample(name, exec_only=r == RUNS - 1) for r in range(RUNS)]
+        runs = runs_of[name] = [wall for wall, _ in samples]
+        t[name], cold[name], eo[name] = min(runs), runs[0], samples[-1][1]
+        print(f"# {name}: warm={t[name]}s cold={runs[0]}s "
+              f"exec_only={eo[name]}s", file=sys.stderr)
+        oruns = oracle(name)
+        if oruns is not None:
             duck[name] = min(oruns) if oruns else None
             duck_runs[name] = oruns
             print(f"# duckdb {name}: {duck[name]}s", file=sys.stderr)
-        # Block-manager hygiene: each run's localCheckpoints pinned RDD
-        # blocks that are garbage once the query's timings (incl. the
-        # exec_only re-run above, which reads run-3's checkpoints) are
-        # done. 220 queries of accumulation costs later queries eviction
-        # pressure + GC (measured ~4% on a polluted-session probe);
-        # unpersist is async (non-blocking) and the next query never
-        # references a prior query's RDDs.
-        #
-        # INVARIANT (round-9 ADVICE): this blanket sweep destroys
-        # localCheckpoint blocks IRRECOVERABLY (lineage is truncated, so
-        # a later reference fails with missing-block, not a recompute).
-        # It is safe only while nothing held ACROSS queries is persisted
-        # — in particular session._TABLE_CACHE must keep plain lazy scan
-        # plans, never .cache()/.persist()/localCheckpoint()ed frames
-        # (documented at its definition). Anything that must survive this
-        # sweep has to be re-creatable from lineage or rebuilt per query.
-        #
-        # Driver-heap hygiene (round-10, the driver-epoch tail): shuffle
-        # and broadcast state is reclaimed by ContextCleaner only when
-        # the DRIVER JVM garbage-collects the referencing objects, and a
-        # 220-query run on an 8g heap can accumulate for minutes before
-        # ParallelGC's old gen fills — at which point a full-GC storm
-        # lands on whatever queries happen to run next (the r9 driver
-        # artifact's contiguous q129-q158 2-6x window). Nudge collection
-        # BEFORE pressure peaks: when the JVM heap is >60% used, drop
-        # Python-side py4j proxies (gc.collect) then System.gc() so the
-        # cleaner's weak references fire. The check is 3 py4j calls
-        # (~ms); the System.gc itself only runs under real pressure.
-        _post_query_hygiene(spark)
         if (qi + 1) % _PROBE_EVERY == 0:
-            epoch_trace.append([qi + 1, name, _throughput_probe(spark)])
+            trace.append([qi + 1, name, _throughput_probe(spark)])
+    m["sched_floor_end_sec"] = _sched_floor(spark)
+    trace.append([len(names), "end", _throughput_probe(spark)])
+    return m
 
-    sched_floor_end = _sched_floor(spark)
-    epoch_trace.append([len(names), "end", _throughput_probe(spark)])
 
-    # ---- salvage pass (round-10 verdict ask #1 + lens ruling) ----
-    # Both r9 and r10 DRIVER epochs showed one contiguous ~15-query
-    # burst (Spark 2.4-4.6x its committed band, the INTERLEAVED DuckDB
-    # leg 1.2-1.6x at the same positions, single-task sched floors
-    # healthy, and no builder epoch — including the degraded D-F window
-    # — reproduces it): a transient host burst that the 32-thread
-    # engine amplifies ~2x more than the 8-thread oracle. The honest
-    # min-of-N response is MORE SAMPLES SPACED IN TIME: after the full
-    # pass, every query reading >2x its pinned committed-band wall is
-    # re-sampled once (full build+execute, same protocol) along with
-    # its oracle (symmetry preserved — both engines' minima may only
-    # tighten toward their true floor). Everything is disclosed: the
-    # flagged wall, the retry wall, and the oracle retries all land in
-    # detail["salvage_pass"], queries_median stays computed from the
-    # pristine first-pass run arrays, and tail_vs_pinned is evaluated
-    # AFTER salvage so only PERSISTENT regressions (burst-independent,
-    # i.e. real) survive as violators.
-    salvage: dict[str, dict] = {}
-    # pre-salvage totals captured BEFORE any re-sampling so the summary
-    # line carries both sides of the protocol (round-11 verdict ask #2:
-    # the salvage can only tighten minima; publishing the pre-salvage
-    # totals alongside makes the effect auditable in-artifact)
-    pre_salvage_total = round(sum(timings.values()), 3)
-    pre_salvage_duck_total = (
-        round(sum(v for v in duck.values() if v is not None), 3)
-        if interleave and duck else None
+def _salvage(m: dict, band: dict | None, sample, oracle, probe) -> None:
+    """Spaced re-samples of the queries over their pinned band (round-10
+    verdict ask #1 + lens ruling).
+
+    Both r9 and r10 DRIVER epochs showed one contiguous ~15-query burst
+    (Spark 2.4-4.6x its committed band, the interleaved DuckDB leg
+    1.2-1.6x at the same positions, single-task sched floors healthy,
+    and no local epoch reproduces it): a transient host burst that the
+    32-thread engine amplifies ~2x more than the 8-thread oracle. The
+    honest min-of-N response is MORE SAMPLES SPACED IN TIME. After the
+    main pass, every query flagged by _salvage_flags (at most
+    SALVAGE_MAX) is re-sampled in two passes:
+      - pass 1: build+execute, exec-only and the oracle;
+      - pass 2, after the whole of pass 1 (maximally spaced within the
+        epoch), for the names _salvage_flags still flags: build+execute
+        and the oracle.
+    Minima only tighten, on both legs. Everything is disclosed in
+    m["salvage_pass"] next to the pre-salvage totals; queries_median
+    stays computed from the pristine first-pass run arrays, and
+    tail_vs_pinned is evaluated after salvage so only PERSISTENT
+    regressions survive as violators.
+
+    `sample(name, exec_only) -> (wall, exec-only wall or None)`,
+    `oracle(name) -> runs or None` (None: the query has no oracle) and
+    `probe() -> 32-way throughput wall` are the measure phase's
+    samplers; tests pass fakes."""
+    t, eo, duck = m["queries"], m["queries_exec_only"], m["duckdb"]
+    m["pre_salvage_total"] = round(sum(t.values()), 3)
+    timed = [v for v in duck.values() if v is not None]
+    m["pre_salvage_duck_total"] = round(sum(timed), 3) if duck else None
+    salvage = m["salvage_pass"] = {}
+    if band is None or band["sf"] != m["sf"]:
+        return
+    ref, dref = band["queries"], band.get("duckdb") or {}
+    guard = _guard(m["sched_floor_start_sec"])
+    flagged, spark_flag, duck_flag = _salvage_flags(
+        list(t), t, duck, ref, dref, guard
     )
-    if pinned_band is not None and pinned_band["sf"] == sf:
-        ref = pinned_band["queries"]
-        guard = max(0.5, 2 * sched_floor_start) if sched_floor_start > 0 else 0.5
-        # SYMMETRIC trigger (round-11 verdict "what's wrong" #1): a
-        # DuckDB-side burst is flagged identically to a Spark-side one —
-        # see _salvage_flags (contract-tested).
-        dref = pinned_band.get("duckdb") or {}
-        flagged, spark_flag, duck_flag = _salvage_flags(
-            names, timings, duck, ref, dref, guard, interleave
-        )
-        if flagged:
-            epoch_trace.append(
-                [len(names), "salvage_start", _throughput_probe(spark)]
-            )
-        for name in flagged[:25]:
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            if not KEEP_SORT:
-                df = strip_presentation_sort(df)
-            execute_plan(df)
-            retry = round(time.time() - t0, 3)
-            t0 = time.time()
-            execute_plan(df)
-            retry_eo = round(time.time() - t0, 3)
-            rec = {
-                "flagged_wall": timings[name],
-                "pinned": ref.get(name),
-                "retry_wall": retry,
-                "retry_exec_only": retry_eo,
-                "flag_side": ("both" if name in spark_flag and name in duck_flag
-                              else ("spark" if name in spark_flag else "duck")),
-            }
-            if name in duck_flag:
-                rec["flagged_duck"] = duck.get(name)
-                rec["pinned_duck"] = dref.get(name)
-            timings[name] = min(timings[name], retry)
-            exec_only[name] = min(exec_only[name], retry_eo)
-            if interleave and name in oracles:
-                oruns = _time_oracle(con, oracles[name], cap)
-                rec["oracle_retry_runs"] = oruns
-                if oruns:
-                    prev = duck.get(name)
-                    cands = ([prev] if prev is not None else []) + oruns
-                    duck[name] = min(cands)
-            salvage[name] = rec
-            _post_query_hygiene(spark)
-        # Second spaced retry: a query whose single retry landed INSIDE
-        # the same transient burst that flagged it still reads >2x.
-        # One more sample, taken after the whole salvage loop (i.e.
-        # maximally spaced within the epoch), with the oracle retried
-        # symmetrically — same min-of-N statistic, fully disclosed.
-        still = [
-            n for n in salvage
-            if (n in ref and ref[n]
-                and timings[n] > 2 * ref[n] and timings[n] - ref[n] > guard)
-            or (n in dref and dref[n] and duck.get(n) is not None
-                and duck[n] > 2 * dref[n] and duck[n] - dref[n] > 0.25)
-        ]
-        for name in still:
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            if not KEEP_SORT:
-                df = strip_presentation_sort(df)
-            execute_plan(df)
-            retry = round(time.time() - t0, 3)
-            salvage[name]["retry2_wall"] = retry
-            timings[name] = min(timings[name], retry)
-            if interleave and name in oracles:
-                oruns = _time_oracle(con, oracles[name], cap)
-                salvage[name]["oracle_retry2_runs"] = oruns
-                if oruns:
-                    prev = duck.get(name)
-                    duck[name] = min([prev] + oruns if prev is not None else oruns)
-            _post_query_hygiene(spark)
-    total = round(sum(timings.values()), 3)
+    if len(flagged) > SALVAGE_MAX:
+        print(f"# salvage: {len(flagged)} queries flagged, re-sampling "
+              f"{SALVAGE_MAX}; {len(flagged) - SALVAGE_MAX} cut: "
+              f"{','.join(flagged[SALVAGE_MAX:])}", file=sys.stderr)
+        flagged = flagged[:SALVAGE_MAX]
+    if flagged:
+        m["epoch_trace_32way"].append([len(t), "salvage_start", probe()])
+    for n in flagged:
+        s, d = n in spark_flag, n in duck_flag
+        side = "both" if s and d else ("spark" if s else "duck")
+        rec = salvage[n] = {"pinned": ref.get(n), "flag_side": side}
+        if s:
+            rec["flagged_wall"] = t[n]
+        if d:
+            rec["flagged_duck"] = duck.get(n)
+            rec["pinned_duck"] = dref.get(n)
+    todo = flagged
+    for tag in ("", "2"):
+        for n in todo:
+            wall, e = sample(n, exec_only=not tag)
+            salvage[n][f"retry{tag}_wall"] = wall
+            t[n] = min(t[n], wall)
+            if e is not None:
+                salvage[n]["retry_exec_only"] = e
+                eo[n] = min(eo[n], e)
+            oruns = oracle(n)
+            if oruns is not None:
+                salvage[n][f"oracle_retry{tag}_runs"] = oruns
+                if oruns:  # minima only tighten
+                    duck[n] = min(v for v in oruns + [duck.get(n)] if v is not None)
+        todo = _salvage_flags(list(salvage), t, duck, ref, dref, guard)[0]
+
+
+def _ratio_summary(vals) -> dict:
+    """Distribution of per-query spark/duckdb ratios: the small-query
+    ratios are dominated by Spark's ~0.2-0.5s per-query
+    scheduling/codegen constant (amortizes away at scale); the split
+    makes that readable at a glance instead of burying it in 200
+    ratios."""
+    vals = sorted(vals)
+    return {
+        "median": vals[len(vals) // 2] if vals else None,
+        "within_2x": sum(1 for v in vals if v <= 2),
+        "within_5x": sum(1 for v in vals if v <= 5),
+        "spark_faster": sum(1 for v in vals if v < 1),
+    }
+
+
+def _report(m: dict, band: dict | None) -> dict:
+    """The detail dict: post-salvage minima and totals, the pristine
+    first-pass medians, epoch quality, the tail_vs_pinned self-report
+    and the ratio summaries."""
+    t, eo, duck = m["queries"], m["queries_exec_only"], m["duckdb"]
+    total = round(sum(t.values()), 3)
     detail = {
         # Versioned name (round-3 ADVICE): the headline has been the
-        # steady-state min-of-2 since round 3; the suffix makes the
+        # steady-state min-of-N since round 3; the suffix makes the
         # semantics explicit so round-over-round deltas compare
-        # like-for-like (BENCH_r03's "catalog_queries_total_wall" value
-        # was already this warm protocol, unlabeled).
+        # like-for-like.
         "metric": "catalog_queries_total_wall_warm",
         "value": total,
         "unit": "sec",
@@ -731,137 +684,101 @@ def main():
                    "runs — best-of-N, symmetric with the oracle leg; "
                    "toRdd full-plan execution — no V2-write sink "
                    "constant; presentation ORDER BY stripped on BOTH "
-                   "engines unless SPARK_GRAFT_KEEP_SORT=1); cold "
-                   "first-run totals, plan-reuse exec-only numbers, "
-                   "and per-run arrays alongside"),
-        "queries": timings,
-        "queries_cold": cold,
-        "queries_exec_only": exec_only,
-        "queries_runs": spark_runs,
-        "cold_total": round(sum(cold.values()), 3),
-        "exec_only_total": round(sum(exec_only.values()), 3),
-        "sf": sf,
+                   "engines); cold first-run totals, plan-reuse "
+                   "exec-only numbers, and per-run arrays alongside"),
+        "queries": t,
+        "queries_cold": m["queries_cold"],
+        "queries_exec_only": eo,
+        "queries_runs": m["queries_runs"],
+        "cold_total": round(sum(m["queries_cold"].values()), 3),
+        "exec_only_total": round(sum(eo.values()), 3),
+        "sf": m["sf"],
         # the catalog GROWS round over round; totals are only comparable
         # through the per-query mean
-        "n_queries": len(timings),
-        "mean_per_query": round(total / len(timings), 3) if timings else 0.0,
-        # Epoch-quality self-identification (round-10: run D read 2.34x
-        # on a host window where runs A-C read 1.79-1.84x with identical
-        # code — BOTH legs inflated, excess scattered). The empty-1-task
-        # scheduling floor at run start/end and MemAvailable let a
-        # reader judge the epoch from the artifact itself instead of
-        # cross-referencing committed sibling runs: a floor ~0.17-0.21 s
-        # is this container's healthy range; ~0.3 s+ marks a degraded
-        # window whose ratios carry host noise.
-        "sched_floor_start_sec": sched_floor_start,
-        "sched_floor_end_sec": sched_floor_end,
+        "n_queries": len(t),
+        "mean_per_query": round(total / len(t), 3) if t else 0.0,
+        # Epoch-quality self-identification (round-10 run D): a floor
+        # ~0.17-0.21 s is this container's healthy range; ~0.3 s+ marks
+        # a degraded window whose ratios carry host noise.
+        "sched_floor_start_sec": m["sched_floor_start_sec"],
+        "sched_floor_end_sec": m["sched_floor_end_sec"],
         "mem_available_kb": _mem_available_kb(),
-        # Round-10 lens ruling, made mechanical: the contract machine
-        # self-reports any query >2x its pinned committed-band wall —
         # evaluated AFTER the salvage pass, so the listed violators are
-        # burst-independent (persistent) regressions.
+        # burst-independent (persistent) regressions
         "tail_vs_pinned": _tail_vs_pinned(
-            timings, sf, pinned_band, sched_floor_start
+            t, m["sf"], band, m["sched_floor_start_sec"]
         ),
-        # 32-way throughput walls at run positions (burst localizer)
-        "epoch_trace_32way": epoch_trace,
-        # per-query retries of >2x-pinned entries, fully disclosed;
-        # queries_median / duckdb_median stay computed from the
-        # PRISTINE first-pass run arrays (RUNS-stable round-over-round)
-        "salvage_pass": salvage,
-        # pre-salvage totals (round-11 ask #2): the headline "value" is
-        # post-salvage; these let a reader see exactly what the spaced
-        # re-sampling tightened, on both legs
-        "pre_salvage_total": pre_salvage_total,
-        "pre_salvage_duck_total": pre_salvage_duck_total,
+        "epoch_trace_32way": m["epoch_trace_32way"],
+        "salvage_pass": m["salvage_pass"],
+        "pre_salvage_total": m["pre_salvage_total"],
+        "pre_salvage_duck_total": m["pre_salvage_duck_total"],
+        # Round-7 ADVICE: min-of-N is not comparable across rounds when
+        # RUNS changes; the median of the first-pass runs is.
+        "queries_median": {n: _median(r) for n, r in m["queries_runs"].items()},
     }
-    # Round-7 ADVICE: min-of-N is the headline (best-of, symmetric with
-    # the oracle leg) but is not comparable across rounds when RUNS
-    # changes; emit the median-of-runs alongside so round-over-round
-    # comparisons have a RUNS-stable statistic.
-    detail["queries_median"] = {n: _median(r) for n, r in spark_runs.items()}
     detail["median_total"] = round(sum(detail["queries_median"].values()), 3)
+    ratios = {n: round(t[n] / d, 2) for n, d in duck.items() if d and n in t}
+    dmed = {n: _median(r) for n, r in m["duckdb_runs"].items() if r}
+    detail.update({
+        "duckdb_runs": m["duckdb_runs"],
+        "protocol_mode": "interleaved",
+        "duckdb_total": round(sum(d for d in duck.values() if d is not None), 3),
+        "duckdb": duck,
+        "duckdb_median": dmed,
+        "duckdb_median_total": round(sum(dmed.values()), 3),
+        "spark_vs_duckdb": ratios,
+        "ratio_protocol": (f"warm(min of {RUNS} full runs) vs warm(min of "
+                           f"{RUNS} runs), interleaved per query"),
+        "ratio_summary": _ratio_summary(ratios.values()),
+        # the same on the plan-reuse exec-only walls — the
+        # repeated-query regime (a SECONDARY lens; see _exec_only)
+        "ratio_summary_exec_only": _ratio_summary(
+            round(eo[n] / d, 2) for n, d in duck.items() if d and n in eo
+        ),
+    })
+    return detail
 
-    if do_duck:
-        if not interleave:
-            # two-phase fallback: release the JVM's threads and heap
-            # BEFORE the DuckDB phase — at 113 queries the live JVM
-            # pushed the container to thread/memory-allocation failures
-            # mid-oracle (MemoryError in Timer creation and fetchall)
-            try:
-                spark.stop()
-            except Exception:
-                pass
-            duck = time_oracles(sf_dir, names, cap, duck_runs)
-        detail["duckdb_runs"] = duck_runs
-        detail["protocol_mode"] = "interleaved" if interleave else "two-phase"
-        ratios = {
-            n: round(timings[n] / duck[n], 2)
-            for n in duck
-            if duck[n] and n in timings
-        }
-        timed = [d for d in duck.values() if d is not None]
-        detail["duckdb_total"] = round(sum(timed), 3)
-        detail["duckdb"] = duck
-        # median leg for the oracle too, so the RUNS-stable ratio
-        # (median/median) is recomputable from the committed artifact
-        detail["duckdb_median"] = {
-            n: _median(r) for n, r in duck_runs.items() if r
-        }
-        detail["duckdb_median_total"] = round(
-            sum(detail["duckdb_median"].values()), 3
-        )
-        detail["spark_vs_duckdb"] = ratios
-        detail["ratio_protocol"] = (
-            f"warm(min of {RUNS} full runs) vs warm(min of {RUNS} runs)"
-            + (", interleaved per query" if interleave else ", two-phase")
-        )
-        # headline distribution stats: the small-query ratios are
-        # dominated by Spark's ~0.2-0.5s per-query scheduling/codegen
-        # constant (amortizes away at scale); the split makes that
-        # readable at a glance instead of burying it in 160 ratios
-        vals = sorted(ratios.values())
-        detail["ratio_summary"] = {
-            "median": vals[len(vals) // 2] if vals else None,
-            "within_2x": sum(1 for v in vals if v <= 2),
-            "within_5x": sum(1 for v in vals if v <= 5),
-            "spark_faster": sum(1 for v in vals if v < 1),
-        }
-        # Same distribution on the plan-reuse exec-only walls — the
-        # repeated-query regime where the py4j/analysis constant has
-        # amortized (honest as a SECONDARY lens; see the protocol note
-        # on iterative queries above).
-        evals = sorted(
-            round(exec_only[n] / duck[n], 2)
-            for n in duck
-            if duck[n] and n in exec_only
-        )
-        detail["ratio_summary_exec_only"] = {
-            "median": evals[len(evals) // 2] if evals else None,
-            "within_2x": sum(1 for v in evals if v <= 2),
-            "within_5x": sum(1 for v in evals if v <= 5),
-            "spark_faster": sum(1 for v in evals if v < 1),
-        }
 
-    # Full detail (long names, duckdb timings, ratios) goes to a side
-    # file; stdout carries ONE COMPACT JSON line. The driver keeps only
-    # the last 2000 chars of stdout (BENCH_r01/r02 `tail`), so the line
-    # must stay well under that — round 2's full dump was ~7 KB and
-    # recorded as parsed:null. qNN prefixes are unique in the catalog
-    # (asserted) and match the spec's {"q1": sec} shape.
-    detail_out = os.environ.get("SPARK_GRAFT_DETAIL_OUT") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        # a SPARK_GRAFT_QUERIES subset run must never clobber the pinned
-        # full-catalog artifact (round-10 lost a run to exactly this)
-        "BENCH_DETAIL_subset.json" if only else "BENCH_DETAIL.json",
-    )
+def main():
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    hit = re.search(r"sf([\d.]+)", sf_dir)
+    sf = float(hit.group(1).rstrip(".")) if hit else None
+    band = _load_pinned_band()  # before the run: it may overwrite the file
+    spark = _bench_session()
+    qs = catalog.queries()
+    names = [n for n in HEADLINE if n in qs] + [n for n in sorted(qs) if n not in HEADLINE]
+    # Subset (round-11): comma-separated names or qNN prefixes — smoke
+    # tests and the sf1 weak-set clean-session probe protocol.
+    only = os.environ.get("SPARK_GRAFT_QUERIES")
+    if only:
+        want = {w.strip() for w in only.split(",") if w.strip()}
+        names = [n for n in names if n in want or n.split("_")[0] in want]
+    con = _duck_connect(sf_dir)
+    oracles = catalog.oracle_sql()
+    cap = float(os.environ.get("SPARK_GRAFT_DUCKDB_CAP", "60"))
+
+    def sample(name, exec_only=False):
+        wall, df = _sample(qs, name, spark, sf_dir)
+        return wall, (_exec_only(df) if exec_only else None)
+
+    def oracle(name):
+        """The query's oracle runs (None without an oracle); then the
+        between-queries sweep, which closes every query's sampling."""
+        runs = _time_oracle(con, oracles[name], cap) if name in oracles else None
+        _post_query_hygiene(spark)
+        return runs
+
+    meas = _measure(spark, names, sample, oracle)
+    meas["sf"] = sf
+    _salvage(meas, band, sample, oracle, lambda: _throughput_probe(spark))
+    detail = _report(meas, band)
+    # Full detail goes to a side file; stdout carries ONE COMPACT line.
     try:
-        with open(detail_out, "w") as fh:
+        with open(_detail_path(bool(only), sf, band), "w") as fh:
             json.dump(detail, fh, indent=1)
     except OSError:
         pass
-
-    print(compact_line(detail, timings))
+    print(compact_line(detail, detail["queries"]))
 
 
 def compact_line(detail: dict, timings: dict[str, float], limit: int = 1900) -> str:
@@ -902,12 +819,9 @@ def compact_line(detail: dict, timings: dict[str, float], limit: int = 1900) -> 
         }
         if n_queries_map is not None and len(qmap) < len(by_prefix):
             compact["queries_shown"] = "headline+slowest; full map in BENCH_DETAIL.json"
-        if "exec_only_total" in detail:
-            compact["exec_only_total"] = detail["exec_only_total"]
-        if "duckdb_total" in detail:
-            compact["duckdb_total"] = detail["duckdb_total"]
-        if "ratio_summary" in detail:
-            compact["ratio_summary"] = detail["ratio_summary"]
+        for k in ("exec_only_total", "duckdb_total", "ratio_summary"):
+            if k in detail:
+                compact[k] = detail[k]
         # epoch quality rides the headline so a single recorded run can
         # be judged without its sibling epochs (round-10 run D lesson)
         compact["sched_floor_sec"] = [

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from etl_wrap_spark.functions.holidays import _let
 from etl_wrap_spark.operators.text import fingerprint_md5, hash60, tokens
 
 # MinHash parameters: 32 hashes = 16 bands x 2 rows. With the universal
@@ -93,13 +94,19 @@ def tune_lsh_params(
 
 
 def shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct token n-gram shingles of the text → array<string>."""
-    t = tokens(col)
-    cnt = F.size(t)
-    idx = F.sequence(F.lit(0), F.greatest(cnt - n, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)))
-    )
+    """Distinct token n-gram shingles of the text → array<string>.
+
+    The token array is bound once (`_let`): the per-shingle slice lambda
+    gets no subexpression elimination, so capturing `tokens(col)`
+    directly would re-run the regex split once per shingle index."""
+
+    def grams(t: Column) -> Column:
+        idx = F.sequence(F.lit(0), F.greatest(F.size(t) - n, F.lit(0)))
+        return F.array_distinct(
+            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)))
+        )
+
+    return _let(tokens(col), grams)
 
 
 def hash28(col: Column | str) -> Column:

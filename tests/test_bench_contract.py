@@ -14,6 +14,8 @@ import json
 import os
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -86,6 +88,18 @@ def test_load_pinned_band_env_override_and_shape(tmp_path, monkeypatch):
     assert band == {"sf": 0.1, "queries": {"qa": 1.5}}
 
 
+def test_load_pinned_band_carries_duckdb_walls(tmp_path, monkeypatch):
+    """The duck side of the salvage trigger reads the band's DuckDB
+    walls; a band without them must still load."""
+    p = tmp_path / "band.json"
+    p.write_text(json.dumps(
+        {"sf": 0.1, "queries": {"qa": 1.5}, "duckdb": {"qa": 0.4, "qb": None}}
+    ))
+    monkeypatch.setenv("SPARK_GRAFT_PINNED", str(p))
+    band = bench._load_pinned_band()
+    assert band["duckdb"] == {"qa": 0.4, "qb": None}
+
+
 def test_load_pinned_band_garbage_returns_none(tmp_path, monkeypatch):
     p = tmp_path / "band.json"
     p.write_text("{not json")
@@ -128,7 +142,7 @@ def test_salvage_flags_symmetric_duck_trigger():
     timings = {"q01_a": 3.5, "q02_b": 1.1, "q03_c": 1.0, "q04_d": 3.5}
     duck = {"q01_a": 0.5, "q02_b": 1.6, "q03_c": 0.52, "q04_d": 1.6}
     flagged, spark_flag, duck_flag = bench._salvage_flags(
-        names, timings, duck, ref, dref, guard=0.5, interleave=True
+        names, timings, duck, ref, dref, guard=0.5
     )
     assert spark_flag == {"q01_a", "q04_d"}
     assert duck_flag == {"q02_b", "q04_d"}
@@ -144,18 +158,129 @@ def test_salvage_flags_duck_guard_is_absolute():
     flagged, _, duck_flag = bench._salvage_flags(
         names, {"q01_a": 0.2}, {"q01_a": 0.010},
         ref={"q01_a": 0.2}, dref={"q01_a": 0.003},
-        guard=0.5, interleave=True,
+        guard=0.5,
     )
     assert duck_flag == set() and flagged == []
 
 
-def test_salvage_flags_two_phase_never_duck_flags():
-    """Two-phase mode has no interleaved duck leg to retry — the duck
-    trigger must stay off."""
-    names = ["q01_a"]
-    flagged, _, duck_flag = bench._salvage_flags(
-        names, {"q01_a": 0.2}, {"q01_a": 9.9},
-        ref={"q01_a": 0.2}, dref={"q01_a": 0.5},
-        guard=0.5, interleave=False,
+# ------------------------------------------------------- _detail_path
+@pytest.mark.parametrize("subset,sf,band,expected", [
+    (False, 0.1, {"sf": 0.1, "queries": {}}, "BENCH_DETAIL.json"),
+    (False, 0.001, None, "BENCH_DETAIL.json"),
+    (False, 0.001, {"sf": 0.1, "queries": {}}, "BENCH_DETAIL_subset.json"),
+    (True, 0.1, {"sf": 0.1, "queries": {}}, "BENCH_DETAIL_subset.json"),
+])
+def test_detail_path_keeps_the_pinned_band(monkeypatch, subset, sf, band, expected):
+    """Only a full-catalog run at the band's sf (or a first run, with no
+    band yet) writes BENCH_DETAIL.json; the documented sf0.001 smoke and
+    subset runs go to the git-ignored BENCH_DETAIL_subset.json."""
+    monkeypatch.delenv("SPARK_GRAFT_DETAIL_OUT", raising=False)
+    path = bench._detail_path(subset, sf, band)
+    assert path == os.path.join(REPO, expected)
+
+
+def test_detail_path_env_override_wins(monkeypatch, tmp_path):
+    out = str(tmp_path / "d.json")
+    monkeypatch.setenv("SPARK_GRAFT_DETAIL_OUT", out)
+    assert bench._detail_path(False, 0.1, None) == out
+
+
+# ------------------------------------------------------------ _salvage
+def _run_salvage(walls, ducks, ref, dref, retries, oracle_retries):
+    """bench._salvage over a measured state with fake samplers: each
+    sample/oracle call pops the next scripted wall/runs for its name.
+    Returns (m, spark calls, oracle calls)."""
+    m = {
+        "sf": 0.1, "queries": dict(walls), "duckdb": dict(ducks),
+        "queries_exec_only": {n: 0.3 for n in walls},
+        "sched_floor_start_sec": 0.2, "epoch_trace_32way": [],
+    }
+    spark_calls, duck_calls = [], []
+
+    def sample(name, exec_only=False):
+        spark_calls.append((name, exec_only))
+        return retries[name].pop(0), (0.05 if exec_only else None)
+
+    def oracle(name):
+        duck_calls.append(name)
+        return oracle_retries[name].pop(0)
+
+    band = {"sf": 0.1, "queries": ref, "duckdb": dref}
+    bench._salvage(m, band, sample, oracle, lambda: 0.1)
+    return m, spark_calls, duck_calls
+
+
+def test_salvage_second_pass_only_for_names_still_over_band():
+    ref = {"qa": 1.0, "qb": 1.0, "qc": 1.0}
+    walls = {"qa": 3.0, "qb": 3.0, "qc": 1.1}
+    ducks = {"qa": 0.1, "qb": 0.1, "qc": 0.1}
+    m, spark_calls, duck_calls = _run_salvage(
+        walls, ducks, ref, dict(ducks),
+        retries={"qa": [2.8, 1.2], "qb": [1.3]},      # qa still over after pass 1
+        oracle_retries={"qa": [[0.1], [0.1]], "qb": [[0.1]]},
     )
-    assert duck_flag == set() and flagged == []
+    assert spark_calls == [("qa", True), ("qb", True), ("qa", False)]
+    assert duck_calls == ["qa", "qb", "qa"]
+    sp = m["salvage_pass"]
+    assert set(sp["qa"]) == {
+        "flagged_wall", "pinned", "retry_wall", "retry_exec_only",
+        "flag_side", "oracle_retry_runs", "retry2_wall", "oracle_retry2_runs",
+    }
+    assert "retry2_wall" not in sp["qb"] and "qc" not in sp
+    assert sp["qa"]["flagged_wall"] == 3.0 and sp["qa"]["flag_side"] == "spark"
+    assert m["queries"] == {"qa": 1.2, "qb": 1.3, "qc": 1.1}
+    assert m["queries_exec_only"] == {"qa": 0.05, "qb": 0.05, "qc": 0.3}
+    assert m["pre_salvage_total"] == 7.1
+    assert [e[1] for e in m["epoch_trace_32way"]] == ["salvage_start"]
+
+
+def test_salvage_duck_only_flag_records_no_flagged_wall():
+    m, spark_calls, _ = _run_salvage(
+        {"qa": 1.0}, {"qa": 1.6}, {"qa": 1.0}, {"qa": 0.5},
+        retries={"qa": [1.0]}, oracle_retries={"qa": [[0.5, 0.6, 0.5]]},
+    )
+    rec = m["salvage_pass"]["qa"]
+    assert rec["flag_side"] == "duck"
+    assert "flagged_wall" not in rec
+    assert rec["flagged_duck"] == 1.6 and rec["pinned_duck"] == 0.5
+    assert spark_calls == [("qa", True)]  # both legs re-sampled
+    assert m["duckdb"]["qa"] == 0.5
+
+
+def test_salvage_caps_at_25_and_logs_the_cut(capsys):
+    names = [f"q{i:03d}" for i in range(26)]
+    m, spark_calls, _ = _run_salvage(
+        {n: 3.0 for n in names}, {n: 0.1 for n in names},
+        {n: 1.0 for n in names}, {n: 0.1 for n in names},
+        retries={n: [1.0] for n in names},
+        oracle_retries={n: [[0.1]] for n in names},
+    )
+    assert [n for n, _ in spark_calls] == names[:25]
+    assert list(m["salvage_pass"]) == names[:25]
+    err = [ln for ln in capsys.readouterr().err.splitlines() if "salvage" in ln]
+    assert len(err) == 1 and "26 queries flagged" in err[0]
+    assert "1 cut" in err[0] and "q025" in err[0]
+
+
+def test_salvage_duck_minimum_never_rises():
+    """Oracle retries can only tighten the duck minimum: slower retries
+    and a capped (empty) retry leave it as it was."""
+    m, _, duck_calls = _run_salvage(
+        {"qa": 1.0, "qb": 3.0}, {"qa": 1.6, "qb": 0.2},
+        {"qa": 1.0, "qb": 1.0}, {"qa": 0.5, "qb": 0.2},
+        retries={"qa": [1.0, 1.0], "qb": [2.9, 1.0]},
+        oracle_retries={"qa": [[2.0, 2.5], [1.2, 3.0]], "qb": [[0.9], []]},
+    )
+    assert duck_calls == ["qb", "qa", "qb", "qa"]
+    assert m["salvage_pass"]["qa"]["oracle_retry_runs"] == [2.0, 2.5]
+    assert m["duckdb"] == {"qa": 1.2, "qb": 0.2}
+
+
+def test_salvage_needs_a_band_at_the_run_sf():
+    m = {"sf": 0.001, "queries": {"qa": 9.0}, "duckdb": {"qa": None},
+         "queries_exec_only": {"qa": 1.0}, "sched_floor_start_sec": 0.2,
+         "epoch_trace_32way": []}
+    band = {"sf": 0.1, "queries": {"qa": 1.0}}
+    bench._salvage(m, band, None, None, None)
+    assert m["salvage_pass"] == {}
+    assert m["pre_salvage_total"] == 9.0 and m["pre_salvage_duck_total"] == 0.0

@@ -291,3 +291,22 @@ def test_business_day_roll_evaluates_input_once(spark, fn, template):
     expr = getattr(dateutil, fn)(marked, 1, template)
     plan = df.select(expr.alias("x"))._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("ZZMARK") <= 2, plan.count("ZZMARK")
+
+
+@pytest.mark.parametrize("case", ["shingles", "top_ngram_coverage"])
+def test_token_lambdas_tokenize_once(spark, case):
+    """The per-gram lambdas read a token array bound once (`_let` in
+    shingles, the `__t` column in top_ngram_coverage): a lambda that
+    captured `tokens(col)` would re-run the regex split once per gram
+    index, and its plan would show a second `split(`."""
+    from pyspark.sql import functions as F
+
+    from etl_wrap_spark.operators import dedup, text
+
+    df = spark.createDataFrame([(1, "a b c d"), (2, None)], "id INT, s STRING")
+    if case == "shingles":
+        q = df.select(dedup.shingles(F.col("s"), 3).alias("x"))
+    else:
+        q = text.top_ngram_coverage(df, "id", "s", 2)
+    plan = q._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan.count("split(")
