@@ -340,8 +340,10 @@ def _post_query_hygiene(spark) -> None:
 
 def _sched_floor(spark, n: int = 5) -> float:
     """Best-of-n wall for an empty 1-task job — the container's pure
-    scheduling round trip, the epoch-quality statistic floor_profile.py
-    established (healthy ~0.17-0.21 s here; ~0.3 s+ = degraded host)."""
+    scheduling round trip, the epoch-quality statistic of the round-8
+    floor decomposition (SCALING.md "Round 8"; perfbench ``--trace 1``
+    reports it as ``exec.sched_floor_s``). Healthy ~0.17-0.21 s here;
+    ~0.3 s+ = degraded host."""
     sc = spark.sparkContext
     best = None
     try:

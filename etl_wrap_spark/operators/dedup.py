@@ -23,7 +23,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from etl_wrap_spark.functions.holidays import _let
@@ -1047,6 +1046,11 @@ def contamination_check(
 
 
 # ---------------------------------------------- dedup connected components
+# ``graph._small_cols`` row limit of both CC variants: 2^17 pairs ≈ 2 MB
+# of longs on the driver
+CC_DRIVER_LIMIT = 1 << 17
+
+
 def _driver_union_find(pinned: DataFrame, u_col, v_col) -> DataFrame:
     """Small-graph fast path shared by both CC variants: exact
     min-root union-find over an already-collected (u, v) edge frame
@@ -1058,7 +1062,7 @@ def _driver_union_find(pinned: DataFrame, u_col, v_col) -> DataFrame:
     LocalRelation measured 3-4x slower to execute). Only ever called
     under a caller-enforced edge-count bound (driver memory ≈
     16 B/edge)."""
-    from etl_wrap_spark.operators.graph import _local_result_df
+    from etl_wrap_spark.operators.graph import _driver_result
 
     parent: dict = {}
 
@@ -1084,17 +1088,9 @@ def _driver_union_find(pinned: DataFrame, u_col, v_col) -> DataFrame:
                 ru, rv = rv, ru
             parent[rv] = ru
     nodes = list(parent)
-    id_type = pinned.schema[0].dataType
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", id_type),
-            T.StructField("component", id_type),
-        ]
-    )
-    return _local_result_df(
-        pinned.sparkSession,
-        {"doc_id": nodes, "component": [find(x) for x in nodes]},
-        schema,
+    return _driver_result(
+        pinned, {"doc_id": nodes, "component": [find(x) for x in nodes]},
+        ids=("doc_id", "component"),
     )
 
 
@@ -1104,7 +1100,6 @@ def connected_components(
     b_col: str = "id_b",
     max_iter: int = 20,
     rounds_out: list | None = None,
-    small_graph_limit: int = 1 << 17,
 ) -> DataFrame:
     """(node, component) labeling of the near-dup graph: component =
     min node id reachable — the canonicalization step that turns
@@ -1127,26 +1122,25 @@ def connected_components(
     rounds-vs-diameter claim without re-instrumenting (passing it also
     forces the distributed path, since the fast path has no rounds).
 
-    ``small_graph_limit``: AQE-style adaptive strategy pick. When the
-    edge list passes the ``graph._small_cols`` gate (≤ this many pairs,
-    among its other conditions) the component labeling runs as a
-    driver-side union-find instead of iterative label propagation —
-    identical output (component = min reachable id), but zero
-    per-round scheduling, which at bench scale is the entire cost
-    (q160: 256 LSH pairs spent 1.36 s building 3 rounds of
-    checkpointed plans for 0.03 s of execution). The limit bounds
-    driver memory at ~MBs (2^17 pairs ≈ 2 MB of longs; a 100-TB
-    near-dup graph blows the limit and takes the distributed path
-    unchanged). Set 0 to always run distributed.
+    AQE-style adaptive strategy pick: when the edge list passes the
+    ``graph._small_cols`` gate (≤ ``CC_DRIVER_LIMIT`` pairs, among its
+    other conditions) the component labeling runs as a driver-side
+    union-find instead of iterative label propagation — identical
+    output (component = min reachable id), but zero per-round
+    scheduling, which at bench scale is the entire cost (q160: 256 LSH
+    pairs spent 1.36 s building 3 rounds of checkpointed plans for
+    0.03 s of execution). The limit bounds driver memory at ~MBs; a
+    100-TB near-dup graph blows it and takes the distributed path
+    unchanged.
     """
     from etl_wrap_spark.operators.graph import _small_cols
 
     sym = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    if rounds_out is None and small_graph_limit > 0:
+    if rounds_out is None:
         # pinned for the gate's count and collect; the distributed
         # rounds below reuse the materialized edge list
         sym = sym.localCheckpoint(eager=False)
-        cols = _small_cols(sym, small_graph_limit)
+        cols = _small_cols(sym, CC_DRIVER_LIMIT)
         if cols is not None:
             return _driver_union_find(sym, cols["u"], cols["v"])
     edges = (
@@ -1234,7 +1228,6 @@ def connected_components_star(
     b_col: str = "id_b",
     max_iter: int = 25,
     rounds_out: list | None = None,
-    small_graph_limit: int = 1 << 17,
 ) -> DataFrame:
     """(node, component) labeling via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -1262,11 +1255,12 @@ def connected_components_star(
     O(log²n)-rounds claim against planted chain topologies (passing it
     forces the distributed path).
 
-    ``small_graph_limit``: same AQE-style adaptive pick as
-    connected_components — the deduped edge list is pinned regardless;
-    when it passes the ``graph._small_cols`` gate the labeling runs as
-    the driver union-find (identical output, none of the per-round
-    scheduling), otherwise the star alternation proceeds unchanged.
+    Same AQE-style adaptive pick as connected_components — the deduped
+    edge list is pinned regardless; when it passes the
+    ``graph._small_cols`` gate (≤ ``CC_DRIVER_LIMIT`` pairs) the
+    labeling runs as the driver union-find (identical output, none of
+    the per-round scheduling), otherwise the star alternation proceeds
+    unchanged.
     """
     edges = (
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
@@ -1277,7 +1271,7 @@ def connected_components_star(
     if rounds_out is None:
         from etl_wrap_spark.operators.graph import _small_cols
 
-        cols = _small_cols(edges, small_graph_limit)
+        cols = _small_cols(edges, CC_DRIVER_LIMIT)
         if cols is not None:
             return _driver_union_find(edges, cols["u"], cols["v"])
     prev: tuple[int, int] | None = None

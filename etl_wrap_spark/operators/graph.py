@@ -29,7 +29,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_wrap_spark.session import _scoped_conf
+
 PR_SCALE = 10**12
+# ``_small_cols`` row limits: edge lists at or under them run the driver
+# kernel (≈16-24 B per edge row on the driver), larger ones distributed
+BFS_DRIVER_LIMIT = 1 << 20  # bfs_hops, sssp_bounded
+RANK_DRIVER_LIMIT = 1 << 21  # pagerank_fixedpoint, harmonic_centrality
 
 
 def canonical_undirected(
@@ -120,8 +126,9 @@ def _driver_headroom_ok(min_available_mb: int | None = None) -> bool:
     Reads /proc/meminfo MemAvailable (the kernel's reclaimable-included
     estimate); non-Linux or unreadable → permissive True (the gates
     already bound the collect to ~tens of MB). Threshold default 1 GiB,
-    overridable via SPARK_GRAFT_FASTPATH_MIN_MB (0 disables the guard —
-    parity tests pin both paths regardless of host state)."""
+    overridable via SPARK_GRAFT_FASTPATH_MIN_MB: 0 disables the guard,
+    and a floor past any host (2^40) makes every gate decline before it
+    runs a job — the tests' parity fixture pins both routes this way."""
     if min_available_mb is None:
         min_available_mb = int(os.environ.get("SPARK_GRAFT_FASTPATH_MIN_MB", "1024"))
     if min_available_mb <= 0:
@@ -170,32 +177,37 @@ def _arrow_numpy_cols(df):
     return cols, tbl.num_rows, has_null
 
 
-def _local_result_df(spark, data: dict, schema):
-    """Driver-computed result → DataFrame as ONE Arrow batch.
+def _result_schema(pinned: DataFrame, names, ids=("node",)):
+    """Schema of a driver kernel's result: the columns named in ``ids``
+    take the type of ``pinned``'s first column (the id column the kernel
+    read), every other column is bigint; all nullable, in ``names``
+    order."""
+    id_type = pinned.schema[0].dataType
+    return T.StructType(
+        [T.StructField(c, id_type if c in ids else T.LongType()) for c in names]
+    )
+
+
+def _driver_result(pinned: DataFrame, data: dict, ids=("node",)) -> DataFrame:
+    """Driver-computed result → DataFrame as ONE Arrow batch, typed by
+    ``_result_schema(pinned, data, ids)``; ``data`` is a dict of
+    equal-length columns (numpy arrays or lists) in output order.
 
     ``createDataFrame(list-of-tuples)`` parallelizes PICKLED rows over
     defaultParallelism slices: executing the returned frame then runs
     ~32 Python-worker deserialization tasks (measured 2.42 s to count a
     16k-row result). The Arrow path ships the same rows as Arrow record
     batches decoded JVM-side — and pinning maxRecordsPerBatch to the
-    row count makes it a single batch/task (measured 0.75 s at the
-    default 10k batch size, ~0.2 s single-batch). ``data`` is a dict of
-    equal-length columns (numpy arrays or lists) matching ``schema``'s
-    field order; falls back to the plain path if pandas/Arrow are
-    unavailable."""
+    row count (for this call only, ``_scoped_conf``) makes it a single
+    batch/task (measured 0.75 s at the default 10k batch size, ~0.2 s
+    single-batch)."""
     import pandas as pd
 
+    spark = pinned.sparkSession
     n = max((len(v) for v in data.values()), default=0)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(max(n, 1)))
-    try:
-        return spark.createDataFrame(pd.DataFrame(data), schema)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    with _scoped_conf(spark, key, str(max(n, 1))):
+        return spark.createDataFrame(pd.DataFrame(data), _result_schema(pinned, data, ids))
 
 
 def _small_cols(
@@ -206,13 +218,13 @@ def _small_cols(
     when the caller must run its distributed plan.
 
     The fast paths (connected components, hierarchy flatten/closure,
-    PageRank, BFS, labeled BFS, SSSP, harmonic centrality) run an exact
-    driver-side kernel on a small input instead of scheduling per-round
-    jobs whose execution is milliseconds (~0.11 s of wall per driver job
-    at bench scale). The columns are returned only when ALL hold:
+    PageRank, BFS, SSSP, harmonic centrality) run an exact driver-side
+    kernel on a small input instead of scheduling per-round jobs whose
+    execution is milliseconds (~0.11 s of wall per driver job at bench
+    scale). The route follows the data, never a per-call flag: each
+    caller passes its module's row-limit constant, and the columns are
+    returned only when ALL hold:
 
-    - ``limit > 0`` (0 forces the distributed plan — parity tests pin
-      both paths with it);
     - the driver host has memory headroom (``_driver_headroom_ok``);
     - ``known_small``, or a map-side ``count()`` is ≤ ``limit``;
     - the Arrow collect (``_arrow_numpy_cols``) holds no NULL and
@@ -239,7 +251,7 @@ def _small_cols(
     100-TB common case), and limit(L+1).count() plans a GlobalLimit
     whose LocalLimit feeders shuffle every partition's rows to ONE task.
     count() moves only per-partition longs."""
-    if limit <= 0 or not _driver_headroom_ok():
+    if not _driver_headroom_ok():
         return None
     if not known_small and pinned.count() > limit:
         return None
@@ -251,9 +263,9 @@ def _small_cols(
 
 def _csr_adjacency(src_a, dst_a):
     """Build (node_arr, indptr, nbr) CSR arrays from numpy src/dst
-    columns — the shared substrate for the vectorized driver BFS fast
-    paths (no per-node Python loops: every frontier expansion is numpy
-    gather + unique)."""
+    columns — the substrate of bfs_hops' vectorized driver BFS (no
+    per-node Python loops: every frontier expansion is numpy gather +
+    unique)."""
     import numpy as np
 
     node_arr = np.unique(np.concatenate([src_a, dst_a]))
@@ -302,7 +314,6 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     node_col: str = "node",
-    small_graph_limit: int = 1 << 20,
 ) -> DataFrame:
     """Multi-source BFS → (node, hops) with hops = min #edges from any
     source, bounded at ``max_hops`` (unreached nodes are absent).
@@ -327,14 +338,14 @@ def bfs_hops(
     family's wall as ~0.11 s per driver job at sf0.1, so job count,
     not data volume, set the constant.
 
-    ``small_graph_limit``: edge lists the ``_small_cols`` gate admits
-    run as a vectorized CSR BFS on the driver instead (identical
-    output); 0 always runs distributed.
+    Edge lists the ``_small_cols`` gate admits (≤ ``BFS_DRIVER_LIMIT``
+    rows) run as a vectorized CSR BFS on the driver instead (identical
+    output).
     """
     e = edges.select(
         F.col(src).alias("__s"), F.col(dst).alias("__d")
     ).localCheckpoint(eager=False)
-    cols = _small_cols(e, small_graph_limit)
+    cols = _small_cols(e, BFS_DRIVER_LIMIT)
     # no .distinct() before the collect: np.unique dedups driver-side,
     # and the distinct's shuffle costs an extra AQE stage job per build
     seed_list = (
@@ -353,24 +364,14 @@ def bfs_hops(
         pos = np.searchsorted(node_arr, seed_vals)
         in_graph = (pos < len(node_arr)) & (node_arr[np.minimum(pos, len(node_arr) - 1)] == seed_vals)
         dist = _csr_bfs(indptr, nbr, pos[in_graph], max_hops)
-        id_type = e.schema[0].dataType
-        schema = T.StructType(
-            [T.StructField("node", id_type), T.StructField("hops", T.LongType())]
-        )
         reached = np.flatnonzero(dist >= 0)
         # isolated seeds (no edge row) still sit at hop 0, exactly as the
         # distributed visited-seed initialization has them
         iso = seed_vals[~in_graph]
-        return _local_result_df(
-            edges.sparkSession,
-            {
-                "node": np.concatenate([node_arr[reached], iso]),
-                "hops": np.concatenate(
-                    [dist[reached], np.zeros(len(iso), dtype=np.int64)]
-                ),
-            },
-            schema,
-        )
+        return _driver_result(e, {
+            "node": np.concatenate([node_arr[reached], iso]),
+            "hops": np.concatenate([dist[reached], np.zeros(len(iso), dtype=np.int64)]),
+        })
     visited = (
         sources.select(F.col(node_col).alias("node"))
         .distinct()
@@ -446,7 +447,6 @@ def pagerank_fixedpoint(
     checkpoint_every: int = 8,
     seeds: DataFrame | None = None,
     weight: str | None = None,
-    small_graph_limit: int = 1 << 21,
 ) -> DataFrame:
     """K-iteration PageRank → (node, rank_fp) with rank_fp a scaled
     bigint (sum ≈ ``scale``; floor-truncation leaks only downward).
@@ -484,9 +484,9 @@ def pagerank_fixedpoint(
     join+distinct) never re-executes — nodes, degrees, seeds, and every
     iteration all derive from the pinned frame.
 
-    ``small_graph_limit``: edge lists the ``_small_cols`` gate admits
-    run the same arithmetic in driver-side numpy (identical output);
-    0 always runs distributed.
+    Edge lists the ``_small_cols`` gate admits (≤ ``RANK_DRIVER_LIMIT``
+    rows) run the same arithmetic in driver-side numpy (identical
+    output).
     """
     wcols = (
         [F.col(weight).cast("bigint").alias("__w")] if weight is not None else []
@@ -501,7 +501,7 @@ def pagerank_fixedpoint(
     # truncation == floor on both engines), same duplicate-edge
     # multiplicity, same int64 overflow envelope as the distributed
     # bigint plan — instead of scheduling 2-3 jobs per iteration
-    cols = _small_cols(e, small_graph_limit)
+    cols = _small_cols(e, RANK_DRIVER_LIMIT)
     if cols is not None and len(cols["__src"]):
         import numpy as np
 
@@ -552,16 +552,7 @@ def pagerank_fixedpoint(
             acc = np.zeros(n_all, dtype=np.int64)
             np.add.at(acc, didx, t)
             r_arr = base_arr + acc
-        id_type = e.schema[0].dataType
-        schema = T.StructType(
-            [
-                T.StructField("node", id_type),
-                T.StructField("rank_fp", T.LongType()),
-            ]
-        )
-        return _local_result_df(
-            edges.sparkSession, {"node": node_arr, "rank_fp": r_arr}, schema
-        )
+        return _driver_result(e, {"node": node_arr, "rank_fp": r_arr})
     nodes = (
         e.select(F.col("__src").alias("node"))
         .union(e.select(F.col("__dst").alias("node")))
@@ -694,7 +685,6 @@ def sssp_bounded(
     dst: str = "dst",
     weight: str = "w",
     node_col: str = "node",
-    small_graph_limit: int = 1 << 20,
 ) -> DataFrame:
     """Bounded-hop weighted shortest path (multi-source) → (node, cost)
     with cost = min total edge weight over any path of ≤ ``max_hops``
@@ -717,15 +707,15 @@ def sssp_bounded(
     it); per-round best/frontier frames are node-sized and pinned
     (the CC/PageRank lineage discipline).
 
-    ``small_graph_limit``: edge lists the ``_small_cols`` gate admits
-    run the same frontier relaxation over a driver-side adjacency dict
-    (identical output); 0 always runs distributed."""
+    Edge lists the ``_small_cols`` gate admits (≤ ``BFS_DRIVER_LIMIT``
+    rows) run the same frontier relaxation over a driver-side adjacency
+    dict (identical output)."""
     e = edges.select(
         F.col(src).alias("__s"),
         F.col(dst).alias("__d"),
         F.col(weight).cast("bigint").alias("__w"),
     ).localCheckpoint(eager=False)
-    cols = _small_cols(e, small_graph_limit)
+    cols = _small_cols(e, BFS_DRIVER_LIMIT)
     if cols is not None:
         adj: dict = {}
         for u, v, w in zip(
@@ -749,15 +739,7 @@ def sssp_bounded(
             }
             best.update(improved)
             frontier = improved
-        id_type = e.schema[0].dataType
-        schema = T.StructType(
-            [T.StructField("node", id_type), T.StructField("cost", T.LongType())]
-        )
-        return _local_result_df(
-            edges.sparkSession,
-            {"node": list(best.keys()), "cost": list(best.values())},
-            schema,
-        )
+        return _driver_result(e, {"node": list(best), "cost": list(best.values())})
     best = (
         sources.select(F.col(node_col).alias("node"))
         .distinct()
@@ -863,7 +845,6 @@ def bfs_hops_labeled(
     src: str = "src",
     dst: str = "dst",
     node_col: str = "node",
-    small_graph_limit: int = 0,
 ) -> DataFrame:
     """Per-source BFS distances → (source, node, hops) with hops = min
     #edges from THAT source (≤ ``max_hops``; unreached pairs absent) —
@@ -878,65 +859,16 @@ def bfs_hops_labeled(
     at web scale this is exactly HyperBall's exact-small-seed
     counterpart).
 
-    The driver fast path stays OPT-IN (limit 0): unlike bfs_hops, the
-    OUTPUT here is the |S|·|reach| relation — driver-sized
-    materialization + re-upload of ~1M rows measured SLOWER than the
-    distributed iteration at every scale where the operator matters
-    (round 7 with dict BFS, re-measured round 8 with the vectorized CSR
-    form: 10.6 s vs 3.9 s on q205). The CSR implementation remains for
-    genuinely tiny graphs where a caller opts in (a positive
-    ``small_graph_limit``, gated by ``_small_cols``)."""
+    There is no driver fast path: the OUTPUT is the |S|·|reach|
+    relation, and driver-sized materialization + re-upload of ~1M rows
+    measured SLOWER than this distributed iteration at every scale
+    where the operator matters (round 7 with dict BFS, round 8 with a
+    vectorized CSR form: 10.6 s vs 3.9 s on q205). Small graphs that
+    only need the per-node aggregate take ``harmonic_centrality``'s
+    bitmask kernel instead."""
     e = edges.select(
         F.col(src).alias("__s"), F.col(dst).alias("__d")
     ).localCheckpoint(eager=False)
-    cols = _small_cols(e, small_graph_limit)
-    seed_vals = None
-    if cols is not None and len(cols["__s"]):
-        # dedup driver-side (dict.fromkeys keeps first-seen order) —
-        # the distinct's shuffle is an extra AQE stage job per build
-        seed_vals = list(dict.fromkeys(
-            s for (s,) in sources.select(
-                F.col(node_col).alias("source")).collect()))
-        if any(s is None for s in seed_vals):
-            # NULL seed: np.searchsorted cannot compare None against the
-            # node array (round-9 ADVICE — bfs_hops/pagerank/harmonic got
-            # this guard in round 8; this path was missed). The
-            # distributed frontier below defines the semantics: the NULL
-            # seed emits its own hops-0 row and never equi-joins an edge.
-            seed_vals = None
-    if seed_vals is not None:
-        import numpy as np
-
-        node_arr, indptr, nbr = _csr_adjacency(cols["__s"], cols["__d"])
-        srcs_out = []
-        nodes_out = []
-        hops_out = []
-        n = len(node_arr)
-        for s in seed_vals:
-            pos = int(np.searchsorted(node_arr, s))
-            if pos >= n or node_arr[pos] != s:
-                srcs_out.append(s)
-                nodes_out.append(s)
-                hops_out.append(0)
-                continue
-            dist = _csr_bfs(indptr, nbr, np.array([pos]), max_hops)
-            reached = np.flatnonzero(dist >= 0)
-            srcs_out.extend([s] * len(reached))
-            nodes_out.extend(node_arr[reached].tolist())
-            hops_out.extend(dist[reached].tolist())
-        id_type = e.schema[0].dataType
-        schema = T.StructType(
-            [
-                T.StructField("source", id_type),
-                T.StructField("node", id_type),
-                T.StructField("hops", T.LongType()),
-            ]
-        )
-        return _local_result_df(
-            edges.sparkSession,
-            {"source": srcs_out, "node": nodes_out, "hops": hops_out},
-            schema,
-        )
     visited = (
         sources.select(F.col(node_col).alias("source"))
         .distinct()
@@ -972,7 +904,6 @@ def harmonic_centrality(
     dst: str = "dst",
     node_col: str = "node",
     include_sources: bool = False,
-    small_graph_limit: int = 1 << 21,
 ) -> DataFrame:
     """Hop-bounded harmonic centrality w.r.t. a seed cohort →
     (node, n_sources, harmonic_micro): Σ over seeds s of
@@ -987,8 +918,9 @@ def harmonic_centrality(
 
     Small-graph fast path (round 8): the measure never needs per-seed
     IDENTITY, only per-node seed COUNTS at each distance — so instead
-    of materializing the |S|·|reach| labeled relation (which made a
-    driver fast path LOSE here, see bfs_hops_labeled), propagate one
+    of materializing the |S|·|reach| labeled relation (a driver
+    materialization of it measured 10.6 s vs 3.9 s distributed on q205,
+    which is why bfs_hops_labeled has no driver path), propagate one
     SEED BITMASK per node (uint64 chunks, |S| seeds = ceil(|S|/64)
     lanes): reach_d = reach_{d-1} OR-scattered over the edge list, a
     bit's first appearance at a node IS its min distance, and
@@ -996,12 +928,12 @@ def harmonic_centrality(
     Σ 10⁶ div d. Three vectorized scatter rounds over the collected
     edge arrays replace the labeled join ladder; value-parity with the
     distributed path is pytest-pinned. The path is taken when the
-    ``_small_cols`` gate admits the edge list (``small_graph_limit``
-    0 always runs distributed)."""
+    ``_small_cols`` gate admits the edge list (≤ ``RANK_DRIVER_LIMIT``
+    rows)."""
     e = edges.select(
         F.col(src).alias("__s"), F.col(dst).alias("__d")
     ).localCheckpoint(eager=False)
-    cols = _small_cols(e, small_graph_limit)
+    cols = _small_cols(e, RANK_DRIVER_LIMIT)
     if cols is not None and len(cols["__s"]):
         import numpy as np
 
@@ -1052,24 +984,12 @@ def harmonic_centrality(
             is_seed = np.zeros(n, dtype=bool)
             is_seed[gpos] = True
             keep &= ~is_seed
-        id_type = e.schema[0].dataType
-        schema = T.StructType(
-            [
-                T.StructField("node", id_type),
-                T.StructField("n_sources", T.LongType()),
-                T.StructField("harmonic_micro", T.LongType()),
-            ]
-        )
         kept = np.flatnonzero(keep)
-        return _local_result_df(
-            edges.sparkSession,
-            {
-                "node": node_arr[kept],
-                "n_sources": n_sources[kept],
-                "harmonic_micro": harmonic[kept],
-            },
-            schema,
-        )
+        return _driver_result(e, {
+            "node": node_arr[kept],
+            "n_sources": n_sources[kept],
+            "harmonic_micro": harmonic[kept],
+        })
     vis = bfs_hops_labeled(edges, sources, max_hops, src, dst, node_col)
     pos = vis.where(F.col("hops") > 0)
     out = pos.groupBy("node").agg(

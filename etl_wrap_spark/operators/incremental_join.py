@@ -30,6 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 W = "_w"
+# ``graph._small_cols`` row limit of the hierarchy fast paths (flatten,
+# closure): pointer tables at or under it are walked on the driver
+HIERARCHY_DRIVER_LIMIT = 1 << 17
 
 
 def _weighted(df: DataFrame, op_col: str | None = None) -> DataFrame:
@@ -136,7 +139,6 @@ def flatten_hierarchy(
     child_col: str = "child",
     parent_col: str = "parent",
     max_iter: int = 40,
-    small_graph_limit: int = 1 << 17,
 ) -> DataFrame:
     """(node, root, depth) for a forest given (child, parent) edges —
     the org-chart / BOM-explosion operator relational engines express
@@ -155,9 +157,9 @@ def flatten_hierarchy(
     Roots are nodes that never appear as a child, or whose parent is
     NULL/self; cycles would never converge and raise after max_iter.
 
-    ``small_graph_limit``: pointer tables the ``graph._small_cols``
-    gate admits are walked on the driver instead (identical output);
-    0 always runs the doubling loop.
+    Pointer tables the ``graph._small_cols`` gate admits (≤
+    ``HIERARCHY_DRIVER_LIMIT`` rows) are walked on the driver instead
+    (identical output).
     """
     ptr = (
         edges.where(
@@ -177,32 +179,18 @@ def flatten_hierarchy(
     # (which raises / min-resolves them). The (node, root, depth) result
     # re-enters Spark as one Arrow batch, not a row-pickled LocalRelation
     # (list-of-tuples upload measured 3-4x the Arrow route to execute).
-    from etl_wrap_spark.operators.graph import _local_result_df, _small_cols
+    from etl_wrap_spark.operators.graph import _driver_result, _small_cols
 
-    cols = _small_cols(ptr.select("node", "anc"), small_graph_limit)
+    cols = _small_cols(ptr.select("node", "anc"), HIERARCHY_DRIVER_LIMIT)
     if cols is not None:
         kids = cols["node"].tolist()
         walk = _forest_walk(kids, cols["anc"].tolist())
         if walk is not None:
-            from pyspark.sql import types as T
-
-            id_type = ptr.schema[0].dataType
-            schema = T.StructType(
-                [
-                    T.StructField("node", id_type),
-                    T.StructField("root", id_type),
-                    T.StructField("depth", T.LongType()),
-                ]
-            )
-            return _local_result_df(
-                edges.sparkSession,
-                {
-                    "node": kids,
-                    "root": [walk[k][0] for k in kids],
-                    "depth": [walk[k][1] for k in kids],
-                },
-                schema,
-            )
+            return _driver_result(ptr, {
+                "node": kids,
+                "root": [walk[k][0] for k in kids],
+                "depth": [walk[k][1] for k in kids],
+            }, ids=("node", "root"))
     # ancestors that are roots (no incoming pointer) terminate the jump
     for _ in range(max_iter):
         hop = ptr.select(
@@ -236,7 +224,6 @@ def ancestor_closure(
     child_col: str = "child",
     parent_col: str = "parent",
     max_iter: int = 40,
-    small_graph_limit: int = 1 << 17,
     known_small: bool = False,
 ) -> DataFrame:
     """ALL (node, anc, dist) ancestor pairs of a forest — the full
@@ -264,16 +251,13 @@ def ancestor_closure(
     Guarded by an output budget (Σ depths ≤ 2^22 — depth is computed
     O(N) first, so a pathological deep chain routes distributed
     without generating anything). The collect goes through the
-    ``graph._small_cols`` gate; ``small_graph_limit`` 0 always runs the
-    squaring. ``known_small=True`` is a CALLER ASSERTION that the edge
+    ``graph._small_cols`` gate (≤ ``HIERARCHY_DRIVER_LIMIT`` rows).
+    ``known_small=True`` is a CALLER ASSERTION that the edge
     list is statically bounded (e.g. q132's ``c_custkey <= 4095``
     filter), which skips the gate's size-probe job — the one scheduled
     job it saves is ~40% of such a query's total build+execute cost at
     bench scale.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     p = (
         edges.select(
             F.col(child_col).alias("node"),
@@ -284,9 +268,9 @@ def ancestor_closure(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    from etl_wrap_spark.operators.graph import _small_cols
+    from etl_wrap_spark.operators.graph import _result_schema, _small_cols
 
-    cols = _small_cols(p.select("node", "anc"), small_graph_limit, known_small)
+    cols = _small_cols(p.select("node", "anc"), HIERARCHY_DRIVER_LIMIT, known_small)
     if cols is not None:
         kids = cols["node"].tolist()
         pars = cols["anc"].tolist()
@@ -294,14 +278,6 @@ def ancestor_closure(
         if walk is not None and sum(walk[k][1] for k in kids) <= (1 << 22):
             parent = dict(zip(kids, pars))
             b_parent = edges.sparkSession.sparkContext.broadcast(parent)
-            id_type = p.schema[0].dataType
-            schema = T.StructType(
-                [
-                    T.StructField("node", id_type),
-                    T.StructField("anc", id_type),
-                    T.StructField("dist", T.LongType()),
-                ]
-            )
 
             def _walk(batches):
                 import pandas as pd
@@ -324,7 +300,9 @@ def ancestor_closure(
                         {"node": nodes, "anc": ancs, "dist": dists}
                     )
 
-            return p.select("node", "anc").mapInPandas(_walk, schema)
+            return p.select("node", "anc").mapInPandas(
+                _walk, _result_schema(p, ("node", "anc", "dist"), ids=("node", "anc"))
+            )
     # the squaring's first convergence baseline
     n_prev = p.count() if cols is None else len(cols["node"])
     for _ in range(max_iter):

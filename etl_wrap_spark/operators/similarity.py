@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_wrap_spark.session import _scoped_conf
+
 DIM = 64
 
 # deterministic hyperplanes for sign-LSH, shared with the SQL oracle
@@ -467,15 +469,10 @@ def _collect_small(df: DataFrame):
     schedules 2 extra jobs per shuffle (measured: the codebook collect is
     3 jobs with AQE, 1 without) and buys nothing for a <= few-thousand-row
     result; values are unchanged — AQE never affects results. The flip
-    is SESSION-GLOBAL around this one action: it assumes no other query
-    runs on the session meanwhile (an open ROADMAP ADVICE item)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    is session-global around this one action; ``session._scoped_conf``
+    restores it and states the single-session invariant it relies on."""
+    with _scoped_conf(df.sparkSession, "spark.sql.adaptive.enabled", "false"):
         return df.collect()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def _centroid_rows(cent: DataFrame, n_cells: int | None):

@@ -15,8 +15,36 @@ broadcast threshold governs the dimension-join strategy.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def _scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set the runtime conf ``key`` to ``value`` for one ``with`` block,
+    then put it back: a key that was unset before is unset again (not
+    pinned to its default), a set key gets its old value.
+
+    Runtime conf is SESSION-GLOBAL, so the scope is exact only under the
+    single-session invariant: no other thread runs a query on this
+    session while the block runs. The module lock serialises every flip
+    made through this helper, so two scoped flips never interleave their
+    restores; it cannot fence a query another thread starts without it.
+    """
+    with _CONF_LOCK:
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
 
 def session_builder(
@@ -223,14 +251,8 @@ def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict:
         # six conf round trips entirely (round 9: at ~1-2 ms per py4j
         # conf call, the dance was a measurable slice of the ~55 ms
         # per-call constant the bench pays ~660 times).
-        _scoped = {
-            "spark.sql.legacy.parquet.nanosAsLong": "true",
-            "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        }
-        prev = {k: spark.conf.get(k, None) for k in _scoped}
-        for k, v in _scoped.items():
-            spark.conf.set(k, v)
-        try:
+        with _scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"), \
+                _scoped_conf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled", "false"):
             for name in missing:
                 if name == "events":
                     cache[(sf_dir, name)] = _read_events(spark, sf_dir)
@@ -238,12 +260,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict:
                     cache[(sf_dir, name)] = spark.read.parquet(
                         f"{sf_dir}/{name}.parquet"
                     )
-        finally:
-            for k, v in prev.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
     # View registration is memoized per session: re-register a name only
     # when it points at a DIFFERENT sf_dir (callers alternate sf_dirs and
     # SQL-passthrough queries resolve views by name) — each

@@ -17,7 +17,10 @@ Protocol (manifest swap):
 - A writer stages the complete new state into a uniquely-named
   ``_staging/<uuid>`` directory, atomically ``os.rename``s it to
   ``v{N}`` (the rename doubles as the writer lock — it fails if another
-  writer claimed that version number), then commits by renaming a fresh
+  writer claimed that version number; N is one past the highest version
+  on disk or in the pointer, so versions left newer than the pointer by
+  a rollback or an interrupted commit are skipped, never reused), then
+  commits by renaming a fresh
   ``_manifest.json.tmp`` over the manifest. POSIX rename is atomic, so
   a concurrent reader sees the old manifest or the new one — never a
   torn file and never a half-written version directory (staging dirs
@@ -180,6 +183,29 @@ class _Pointer:
         last = self.last_txn_version(txn[0])
         return last is not None and last >= int(txn[1])
 
+    def _disk_versions(self) -> list[int]:
+        """Every version number claimed on disk, ascending — referenced
+        by the pointer or not (subclasses say where versions live)."""
+        raise NotImplementedError
+
+    def _next_version(self) -> int:
+        """One past the highest version claimed on disk or named by the
+        pointer. A rollback leaves newer versions on disk, and a commit
+        interrupted between its claim and the pointer swap leaves an
+        orphan; both are skipped, never reused. The claim itself (the
+        version-dir rename or manifest link) stays the writer lock."""
+        return max([*self._disk_versions(), self.current_version() or 0]) + 1
+
+    def rollback(self, to_version: int) -> None:
+        """Point the table back at an earlier immutable version; the
+        pointer's other keys (AtomicTable's table properties) carry
+        over. Later commits still take fresh numbers."""
+        if to_version not in self._disk_versions():
+            raise FileNotFoundError(f"no version v{to_version} at {self.root}")
+        ptr = self._pointer()
+        extra = {k: v for k, v in ptr.items() if k not in ("version", "committed_at", "txns")}
+        self._swap(to_version, self.current_version(), **extra)
+
     def _check(self, expected: int | None) -> None:
         found = self.current_version()
         if found != expected:
@@ -221,6 +247,11 @@ class AtomicTable(_Pointer):
 
     def _version_dir(self, version: int) -> str:
         return os.path.join(self.root, f"v{version}")
+
+    def _disk_versions(self) -> list[int]:
+        return sorted(
+            int(d[1:]) for d in os.listdir(self.root) if d.startswith("v") and d[1:].isdigit()
+        )
 
     # ------------------------------------------------------------ readers
     def read(self, version: int | None = None) -> DataFrame:
@@ -433,7 +464,7 @@ class AtomicTable(_Pointer):
     ) -> int:
         """The one stage-and-promote sequence: stage `df` indexed by
         `props` (None = the table's persisted properties), then install
-        the staged dir as version ``expected + 1``. The dir rename is
+        the staged dir as version ``_next_version()``. The dir rename is
         the writer lock: two writers racing for the same version number
         can't both rename onto ``v{N}`` — the loser gets ConflictError
         and its staged dir is removed, leaving the winner's committed
@@ -441,10 +472,10 @@ class AtomicTable(_Pointer):
         if self._replayed(txn):
             return self.current_version() or 0
         props = self.table_props() if props is None else props
-        new_v = (expected or 0) + 1
         staged = self._stage(df, props=props, cluster_expr=cluster_expr)
         try:
             self._check(expected)
+            new_v = self._next_version()
             try:
                 os.rename(staged, self._version_dir(new_v))
             except OSError as e:
@@ -562,22 +593,12 @@ class AtomicTable(_Pointer):
             return self.write(cur, cluster_files=int(target_files))
         return self.write(cur.repartition(int(target_files)))
 
-    def rollback(self, to_version: int) -> None:
-        """Point the manifest back at an earlier immutable version."""
-        if not os.path.isdir(self._version_dir(to_version)):
-            raise FileNotFoundError(f"no version dir v{to_version}")
-        self._swap(to_version, self.current_version(), table_props=self.table_props())
-
     def vacuum(self, keep: int = 2) -> list[int]:
         """Remove version dirs older than the newest `keep` (never the
         current one) plus any orphaned staging dirs; returns removed
         version ids."""
         cur = self.current_version()
-        versions = sorted(
-            int(d[1:])
-            for d in os.listdir(self.root)
-            if d.startswith("v") and d[1:].isdigit()
-        )
+        versions = self._disk_versions()
         removable = [v for v in versions if v != cur][: max(0, len(versions) - keep)]
         for v in removable:
             shutil.rmtree(self._version_dir(v), ignore_errors=True)
@@ -659,6 +680,10 @@ class PartitionedAtomicTable(_Pointer):
         with open(os.path.join(self.root, "_versions", f"{version}.json")) as fh:
             return json.load(fh)
 
+    def _disk_versions(self) -> list[int]:
+        vdir = os.path.join(self.root, "_versions")
+        return sorted(int(f[:-5]) for f in os.listdir(vdir) if f.endswith(".json"))
+
     def table_props(self) -> dict:
         """Persistent indexing properties (as AtomicTable.table_props,
         stored in the version manifest): currently ``stats_cols`` —
@@ -678,7 +703,8 @@ class PartitionedAtomicTable(_Pointer):
         props: dict | None = None,
     ) -> int:
         eff_props = props if props is not None else self.table_props()
-        new_v = (expected or 0) + 1
+        self._check(expected)
+        new_v = self._next_version()
         mpath = os.path.join(self.root, "_versions", f"{new_v}.json")
         body = {"pcol": self.pcol, "ptype": ptype, "partitions": parts, "table_props": eff_props}
         tmp = _fsynced_tmp(mpath, body)
@@ -860,7 +886,7 @@ class PartitionedAtomicTable(_Pointer):
         current one) plus orphaned staging dirs; returns removed dirs."""
         cur = self.current_version() or 0
         vdir = os.path.join(self.root, "_versions")
-        versions = sorted(int(f[:-5]) for f in os.listdir(vdir) if f.endswith(".json"))
+        versions = self._disk_versions()
         retained = set(versions[-keep:]) | {cur}
         for v in versions:
             if v not in retained:

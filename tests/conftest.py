@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -13,3 +14,26 @@ def spark():
     s = get_session("etl_wrap_spark-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Pins the route of the size-gated graph/dedup/hierarchy operators
+    through their one deployment setting, the driver-headroom floor
+    ``SPARK_GRAFT_FASTPATH_MIN_MB``: the test body runs with 0 (the
+    guard is off, so a small input takes the driver kernel on any
+    host), and inside ``with distributed():`` the floor is 2^40 MB, so
+    every ``graph._small_cols`` gate declines before it runs a job and
+    the operator builds its distributed plan."""
+    key = "SPARK_GRAFT_FASTPATH_MIN_MB"
+    monkeypatch.setenv(key, "0")
+
+    @contextlib.contextmanager
+    def forced():
+        monkeypatch.setenv(key, str(1 << 40))
+        try:
+            yield
+        finally:
+            monkeypatch.setenv(key, "0")
+
+    return forced

@@ -2,7 +2,7 @@
 
 The graph/dedup size-gated fast paths cross the JVM boundary through
 `_arrow_numpy_cols` (collect → numpy columns via Arrow record batches)
-and `_local_result_df` (driver result → DataFrame as one Arrow batch).
+and `_driver_result` (driver result → DataFrame as one Arrow batch).
 These tests pin the contract the union-find / CSR consumers rely on:
 values, row counts, the null flag that routes back to the distributed
 path, the empty-frame shape, the toPandas fallback, and conf restore.
@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from etl_wrap_spark.operators.graph import _arrow_numpy_cols, _local_result_df
+from etl_wrap_spark.operators.graph import _arrow_numpy_cols, _driver_result
 
 
 def test_arrow_numpy_cols_values_and_nonnull(spark):
@@ -61,35 +61,108 @@ def test_arrow_numpy_cols_topandas_fallback(spark):
     assert sorted(int(v) for v in cols["src"].tolist()) == [1, 2]
 
 
-def test_local_result_df_roundtrip_and_conf_restore(spark):
+def _set_conf(spark, key, value):
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
+
+
+def test_driver_result_roundtrip_and_conf_restore(spark):
     import numpy as np
 
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key, None)
-    schema = StructType(
-        [StructField("node", LongType(), False), StructField("comp", LongType(), False)]
-    )
-    out = _local_result_df(
-        spark,
-        {"node": np.arange(5, dtype=np.int64), "comp": np.zeros(5, dtype=np.int64)},
-        schema,
-    )
-    assert out.schema == schema
-    got = sorted((r.node, r.comp) for r in out.collect())
-    assert got == [(i, 0) for i in range(5)]
-    assert spark.conf.get(key, None) == prev  # batch-size pin is scoped
+    from etl_wrap_spark.operators.similarity import _collect_small
+
+    pinned = spark.createDataFrame([(1, 2)], "u long, v long")
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    aqe = "spark.sql.adaptive.enabled"
+    saved = {k: spark.conf.get(k, None) for k in (batch, aqe)}
+    try:
+        # both keys, each from an unset and from a set state: the scoped
+        # flip must leave the session exactly as it found it
+        for prev in (None, "7"):
+            _set_conf(spark, batch, prev)
+            out = _driver_result(
+                pinned,
+                {"node": np.arange(5, dtype=np.int64), "comp": np.zeros(5, dtype=np.int64)},
+            )
+            assert out.schema == StructType(
+                [StructField("node", LongType(), True), StructField("comp", LongType(), True)]
+            )
+            got = sorted((r.node, r.comp) for r in out.collect())
+            assert got == [(i, 0) for i in range(5)]
+            assert spark.conf.get(batch, None) == prev  # batch-size pin is scoped
+        for prev in (None, "true"):
+            _set_conf(spark, aqe, prev)
+            assert sorted(r.id for r in _collect_small(spark.range(3))) == [0, 1, 2]
+            assert spark.conf.get(aqe, None) == prev  # the AQE flip is scoped
+    finally:
+        for k, v in saved.items():
+            _set_conf(spark, k, v)
 
 
-def test_local_result_df_empty(spark):
-    schema = StructType([StructField("node", LongType(), True)])
-    out = _local_result_df(spark, {"node": []}, schema)
+def test_driver_result_empty(spark):
+    pinned = spark.range(0).select(F.col("id").alias("node"))
+    out = _driver_result(pinned, {"node": []})
     assert out.count() == 0
-    assert out.schema == schema
+    assert out.schema == StructType([StructField("node", LongType(), True)])
 
 
-def test_local_result_df_string_column(spark):
-    schema = StructType(
+def test_driver_result_string_column(spark):
+    # id columns take the pinned frame's first-column type; the rest bigint
+    pinned = spark.createDataFrame([("x", 1)], "k string, n long")
+    out = _driver_result(pinned, {"k": ["x", "y"], "v": [1, 2]}, ids=("k",))
+    assert out.schema == StructType(
         [StructField("k", StringType(), True), StructField("v", LongType(), True)]
     )
-    out = _local_result_df(spark, {"k": ["x", "y"], "v": [1, 2]}, schema)
     assert sorted((r.k, r.v) for r in out.collect()) == [("x", 1), ("y", 2)]
+
+
+def test_scoped_conf_flips_from_threads_restore_the_session():
+    # the module lock serialises scoped flips: without it a thread's
+    # restore interleaves with another's get/set, and the key ends set
+    # to some thread's value instead of unset (a dict-backed conf keeps
+    # this off the JVM)
+    import sys
+    import threading
+
+    from etl_wrap_spark.session import _scoped_conf
+
+    class _Conf:
+        def __init__(self):
+            self.d = {}
+
+        def get(self, key, default=None):
+            return self.d.get(key, default)
+
+        def set(self, key, value):
+            self.d[key] = value
+
+        def unset(self, key):
+            self.d.pop(key, None)
+
+    class _Session:
+        conf = _Conf()
+
+    spark = _Session()
+    errors = []
+
+    def flip(t):
+        for i in range(300):
+            with _scoped_conf(spark, "k", f"{t}.{i}"):
+                if spark.conf.get("k") != f"{t}.{i}":
+                    errors.append((t, i))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=flip, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors
+    assert "k" not in spark.conf.d

@@ -116,6 +116,39 @@ def test_time_travel_and_rollback(spark, table):
     assert _rows(table) == {(1, "a")}
 
 
+class _Crash(BaseException):
+    """The process dies between a commit's version claim and its
+    pointer swap (raised from the patched swap)."""
+
+
+def _crash(*args, **kwargs):
+    raise _Crash()
+
+
+def test_write_after_rollback_takes_a_fresh_version(spark, table):
+    # the rolled-back-over v2 still exists: the next commit must skip it
+    # (and keep it readable), not collide with it
+    table.write(spark.createDataFrame([(1, "a")], "k int, v string"))
+    table.write(spark.createDataFrame([(1, "b")], "k int, v string"))
+    table.rollback(1)
+    assert table.write(spark.createDataFrame([(1, "c")], "k int, v string")) == 3
+    assert _rows(table) == {(1, "c")}
+    assert _rows(table, version=2) == {(1, "b")}
+
+
+def test_write_after_interrupted_commit_skips_the_orphan(spark, table, monkeypatch):
+    table.write(spark.createDataFrame([(1, "a")], "k int, v string"))
+    with monkeypatch.context() as m:
+        m.setattr(table, "_swap", _crash)
+        with pytest.raises(_Crash):
+            table.write(spark.createDataFrame([(1, "lost")], "k int, v string"))
+    assert table.current_version() == 1
+    assert os.path.isdir(table._version_dir(2))  # the unreferenced orphan
+    assert _rows(table) == {(1, "a")}
+    assert table.write(spark.createDataFrame([(1, "b")], "k int, v string")) == 3
+    assert _rows(table) == {(1, "b")}
+
+
 def test_vacuum_keeps_current_and_recent(spark, table):
     for i in range(4):
         table.write(spark.createDataFrame([(i, "x")], "k int, v string"))
@@ -251,6 +284,30 @@ def test_partitioned_vacuum_keeps_referenced(spark, ptable, tmp_path):
     assert os.path.isdir(os.path.join(root, d1["us"]))
     got = {(r.k, r.v) for r in ptable.read().where("region = 'eu'").collect()}
     assert got == {(1, 12)}
+
+
+def test_partitioned_upsert_after_rollback_takes_a_fresh_version(spark, ptable):
+    ptable.write(_pdata(spark, [(1, "eu", 10)]))
+    ptable.upsert(_pdata(spark, [(1, "eu", 11)]), ["k"])
+    ptable.rollback(1)
+    assert {(r.k, r.v) for r in ptable.read().collect()} == {(1, 10)}
+    assert ptable.upsert(_pdata(spark, [(2, "us", 20)]), ["k"]) == 3
+    assert {(r.k, r.v) for r in ptable.read().collect()} == {(1, 10), (2, 20)}
+    assert {(r.k, r.v) for r in ptable.read(2).collect()} == {(1, 11)}
+
+
+def test_partitioned_upsert_after_interrupted_commit_skips_the_orphan(
+    spark, ptable, tmp_path, monkeypatch
+):
+    ptable.write(_pdata(spark, [(1, "eu", 10)]))
+    with monkeypatch.context() as m:
+        m.setattr(ptable, "_swap", _crash)
+        with pytest.raises(_Crash):
+            ptable.upsert(_pdata(spark, [(1, "eu", 99)]), ["k"])
+    assert ptable.current_version() == 1
+    assert os.path.exists(str(tmp_path / "ptbl" / "_versions" / "2.json"))  # orphan
+    assert ptable.upsert(_pdata(spark, [(2, "us", 20)]), ["k"]) == 3
+    assert {(r.k, r.v) for r in ptable.read().collect()} == {(1, 10), (2, 20)}
 
 
 def test_partitioned_concurrent_writer_conflict(spark, ptable, tmp_path):

@@ -2751,10 +2751,10 @@ def test_value_class_collapse_equivalence(spark):
     assert key(f3) == key(d3) and f3.count() >= 5
 
 
-def test_connected_components_fast_path_matches_distributed(spark):
-    # the small_graph_limit union-find must be label-identical to BOTH
-    # distributed algorithms on chains, cliques, self-loops, string ids,
-    # and random graphs (small_graph_limit=0 forces the distributed run).
+def test_connected_components_fast_path_matches_distributed(spark, distributed):
+    # the driver union-find must be label-identical to BOTH distributed
+    # algorithms on chains, cliques, self-loops, string ids, and random
+    # graphs (the ``distributed`` fixture forces the distributed run).
     import random as _r
 
     _r.seed(13)
@@ -2771,25 +2771,27 @@ def test_connected_components_fast_path_matches_distributed(spark):
         pairs = spark.createDataFrame(edges, f"id_a {typ}, id_b {typ}")
         fast = {r.doc_id: r.component
                 for r in dedup.connected_components(pairs).collect()}
-        slow = {r.doc_id: r.component
-                for r in dedup.connected_components(
-                    pairs, max_iter=60, small_graph_limit=0).collect()}
+        with distributed():
+            slow = {r.doc_id: r.component
+                    for r in dedup.connected_components(
+                        pairs, max_iter=60).collect()}
         assert fast == slow
         if not any(u == v for u, v in edges):
             star_fast = {r.doc_id: r.component
                          for r in dedup.connected_components_star(pairs).collect()}
-            star_slow = {r.doc_id: r.component
-                         for r in dedup.connected_components_star(
-                             pairs, small_graph_limit=0).collect()}
+            with distributed():
+                star_slow = {r.doc_id: r.component
+                             for r in dedup.connected_components_star(
+                                 pairs).collect()}
             assert star_fast == star_slow == fast
 
 
-def test_pagerank_fast_path_matches_distributed(spark):
-    # the small_graph_limit numpy fixed-point must be value-identical to
-    # the distributed iteration (same scaled-int floor divisions, same
+def test_pagerank_fast_path_matches_distributed(spark, distributed):
+    # the driver numpy fixed-point must be value-identical to the
+    # distributed iteration (same scaled-int floor divisions, same
     # duplicate-edge multiplicity) across plain / weighted /
-    # personalized variants; small_graph_limit=0 forces the distributed
-    # run.
+    # personalized variants; the ``distributed`` fixture forces the
+    # distributed run.
     import random as _r
 
     from etl_wrap_spark.operators.graph import pagerank_fixedpoint
@@ -2804,9 +2806,10 @@ def test_pagerank_fast_path_matches_distributed(spark):
     for kw in ({}, {"weight": "w"}, {"seeds": seeds}):
         fast = {r.node: r.rank_fp
                 for r in pagerank_fixedpoint(edges, iterations=3, **kw).collect()}
-        slow = {r.node: r.rank_fp
-                for r in pagerank_fixedpoint(
-                    edges, iterations=3, small_graph_limit=0, **kw).collect()}
+        with distributed():
+            slow = {r.node: r.rank_fp
+                    for r in pagerank_fixedpoint(
+                        edges, iterations=3, **kw).collect()}
         assert fast == slow and len(fast) > 0
 
 
@@ -2839,13 +2842,13 @@ def test_minhash_signatures_from_text_matches_groupby_form(spark):
     assert old == new and len(old) == 6 and 6 in new
 
 
-def test_bfs_fast_paths_match_distributed(spark):
-    # the CSR numpy BFS (multi-source and labeled) must agree with the
-    # distributed frontier iteration row-for-row, incl. isolated seeds
-    # and out-of-graph seeds (small_graph_limit=0 forces distributed)
+def test_bfs_fast_paths_match_distributed(spark, distributed):
+    # the CSR numpy BFS must agree with the distributed frontier
+    # iteration row-for-row, incl. isolated seeds and out-of-graph seeds
+    # (the ``distributed`` fixture forces the distributed run)
     import random as _r
 
-    from etl_wrap_spark.operators.graph import bfs_hops, bfs_hops_labeled
+    from etl_wrap_spark.operators.graph import bfs_hops
 
     _r.seed(41)
     raw = [(_r.randint(0, 79), _r.randint(0, 79)) for _ in range(240)]
@@ -2854,18 +2857,13 @@ def test_bfs_fast_paths_match_distributed(spark):
         [(1,), (5,), (500,)], "node LONG"  # 500 is not in the graph
     )
     fast = {(r.node, r.hops) for r in bfs_hops(edges, seeds, max_hops=3).collect()}
-    slow = {(r.node, r.hops)
-            for r in bfs_hops(edges, seeds, max_hops=3, small_graph_limit=0).collect()}
+    with distributed():
+        slow = {(r.node, r.hops)
+                for r in bfs_hops(edges, seeds, max_hops=3).collect()}
     assert fast == slow and fast
-    lf = {(r.source, r.node, r.hops)
-          for r in bfs_hops_labeled(edges, seeds, max_hops=3).collect()}
-    ls = {(r.source, r.node, r.hops)
-          for r in bfs_hops_labeled(edges, seeds, max_hops=3,
-                                    small_graph_limit=0).collect()}
-    assert lf == ls and lf
 
 
-def test_harmonic_bitmask_fast_path_matches_distributed(spark):
+def test_harmonic_bitmask_fast_path_matches_distributed(spark, distributed):
     # the seed-bitmask propagation must agree with the labeled-BFS
     # aggregation on (n_sources, harmonic_micro) — random graph, >64
     # seeds (two uint64 lanes), out-of-graph seed, include_sources both
@@ -2883,19 +2881,19 @@ def test_harmonic_bitmask_fast_path_matches_distributed(spark):
         fast = {r.node: (r.n_sources, r.harmonic_micro)
                 for r in harmonic_centrality(
                     edges, seeds, max_hops=3, include_sources=inc).collect()}
-        slow = {r.node: (r.n_sources, r.harmonic_micro)
-                for r in harmonic_centrality(
-                    edges, seeds, max_hops=3, include_sources=inc,
-                    small_graph_limit=0).collect()}
+        with distributed():
+            slow = {r.node: (r.n_sources, r.harmonic_micro)
+                    for r in harmonic_centrality(
+                        edges, seeds, max_hops=3, include_sources=inc).collect()}
         assert fast == slow and len(fast) > 50
 
 
-def test_graph_fast_paths_tolerate_nulls(spark):
+def test_graph_fast_paths_tolerate_nulls(spark, distributed):
     # round-8 ADVICE: a NULL seed or NULL edge endpoint must not
     # TypeError the numpy fast paths — the adaptive pick falls through
     # to the distributed plan (which DEFINES null semantics: equi-joins
     # drop null matches, bfs emits the (NULL, 0) seed row), so default
-    # and small_graph_limit=0 invocations stay value-identical.
+    # and forced-distributed invocations stay value-identical.
     from etl_wrap_spark.operators.graph import (
         bfs_hops,
         harmonic_centrality,
@@ -2907,42 +2905,41 @@ def test_graph_fast_paths_tolerate_nulls(spark):
     )
     seeds = spark.createDataFrame([(1,), (None,)], "node LONG")
     f = {(r.node, r.hops) for r in bfs_hops(edges, seeds, max_hops=2).collect()}
-    s = {(r.node, r.hops)
-         for r in bfs_hops(edges, seeds, max_hops=2, small_graph_limit=0).collect()}
+    with distributed():
+        s = {(r.node, r.hops)
+             for r in bfs_hops(edges, seeds, max_hops=2).collect()}
     assert f == s and (None, 0) in f
     fh = {r.node: (r.n_sources, r.harmonic_micro)
           for r in harmonic_centrality(edges, seeds, max_hops=2).collect()}
-    sh = {r.node: (r.n_sources, r.harmonic_micro)
-          for r in harmonic_centrality(
-              edges, seeds, max_hops=2, small_graph_limit=0).collect()}
+    with distributed():
+        sh = {r.node: (r.n_sources, r.harmonic_micro)
+              for r in harmonic_centrality(edges, seeds, max_hops=2).collect()}
     assert fh == sh and fh
-    # bfs_hops_labeled (round-9 ADVICE — the opt-in fast path missed the
-    # round-8 hardening): a NULL seed routes the whole call distributed;
-    # the per-source relation must agree either way.
+    # bfs_hops_labeled (distributed only): a NULL seed emits its own
+    # hops-0 row and never equi-joins an edge
     from etl_wrap_spark.operators.graph import bfs_hops_labeled
 
-    fl = {(r.source, r.node, r.hops)
-          for r in bfs_hops_labeled(
-              edges, seeds, max_hops=2, small_graph_limit=1 << 20).collect()}
     sl = {(r.source, r.node, r.hops)
           for r in bfs_hops_labeled(edges, seeds, max_hops=2).collect()}
-    assert fl == sl and (None, None, 0) in fl
+    assert (None, None, 0) in sl
     # null-free edges + a NULL seed: pagerank's personalized fast path
     # must filter the seed exactly as the distributed semi-join does
     clean = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src LONG, dst LONG")
     fp = {r.node: r.rank_fp
           for r in pagerank_fixedpoint(clean, iterations=2, seeds=seeds).collect()}
-    sp = {r.node: r.rank_fp
-          for r in pagerank_fixedpoint(
-              clean, iterations=2, seeds=seeds, small_graph_limit=0).collect()}
+    with distributed():
+        sp = {r.node: r.rank_fp
+              for r in pagerank_fixedpoint(
+                  clean, iterations=2, seeds=seeds).collect()}
     assert fp == sp and fp
 
 
-def test_fast_paths_decline_without_driver_headroom(spark, monkeypatch):
+def test_fast_paths_decline_without_driver_headroom(spark, monkeypatch, distributed):
     # every size-gated fast path honours the driver-headroom gate: with
     # the MemAvailable floor out of reach nothing is collected (the
-    # collect helper raises if reached) and each operator returns its
-    # forced-distributed (small_graph_limit=0) output
+    # collect helper raises if reached) and each operator returns the
+    # rows its driver kernel gives (the fixture's default pins that
+    # route)
     from etl_wrap_spark.operators import graph
     from etl_wrap_spark.operators.incremental_join import (
         ancestor_closure,
@@ -2959,32 +2956,29 @@ def test_fast_paths_decline_without_driver_headroom(spark, monkeypatch):
         [(i, i // 2) for i in range(2, 24)], "child LONG, parent LONG"
     )
     runs = {
-        "cc": lambda **kw: dedup.connected_components(pairs, **kw),
-        "cc_star": lambda **kw: dedup.connected_components_star(pairs, **kw),
-        "flatten": lambda **kw: flatten_hierarchy(tree, **kw),
-        "closure": lambda **kw: ancestor_closure(tree, **kw),
-        "closure_known_small": lambda **kw: ancestor_closure(
-            tree, known_small=True, **kw),
-        "pagerank": lambda **kw: graph.pagerank_fixedpoint(edges, **kw),
-        "bfs": lambda **kw: graph.bfs_hops(edges, seeds, **kw),
-        "sssp": lambda **kw: graph.sssp_bounded(edges, seeds, **kw),
-        "harmonic": lambda **kw: graph.harmonic_centrality(edges, seeds, **kw),
-        "bfs_labeled": lambda **kw: graph.bfs_hops_labeled(edges, seeds, **kw),
+        "cc": lambda: dedup.connected_components(pairs),
+        "cc_star": lambda: dedup.connected_components_star(pairs),
+        "flatten": lambda: flatten_hierarchy(tree),
+        "closure": lambda: ancestor_closure(tree),
+        "closure_known_small": lambda: ancestor_closure(tree, known_small=True),
+        "pagerank": lambda: graph.pagerank_fixedpoint(edges),
+        "bfs": lambda: graph.bfs_hops(edges, seeds),
+        "sssp": lambda: graph.sssp_bounded(edges, seeds),
+        "harmonic": lambda: graph.harmonic_centrality(edges, seeds),
     }
-    want = {k: sorted(run(small_graph_limit=0).collect()) for k, run in runs.items()}
+    want = {k: sorted(run().collect()) for k, run in runs.items()}
 
     def _no_collect(df):
         raise AssertionError("fast path collected without driver headroom")
 
-    monkeypatch.setenv("SPARK_GRAFT_FASTPATH_MIN_MB", str(1 << 40))
     monkeypatch.setattr(graph, "_arrow_numpy_cols", _no_collect)
-    for k, run in runs.items():
-        kw = {"small_graph_limit": 1 << 20} if k == "bfs_labeled" else {}
-        assert sorted(run(**kw).collect()) == want[k], k
-        assert want[k], k
+    with distributed():
+        for k, run in runs.items():
+            assert sorted(run().collect()) == want[k], k
+            assert want[k], k
 
 
-def test_ancestor_closure_fast_path_matches_squaring(spark):
+def test_ancestor_closure_fast_path_matches_squaring(spark, distributed):
     # forest fast path must equal the repeated-squaring closure
     # (node, anc, dist) for trees and chains; a multi-parent DAG and a
     # cycle must route to (and in the cycle's case, be rejected by) the
@@ -2999,9 +2993,10 @@ def test_ancestor_closure_fast_path_matches_squaring(spark):
         edges = spark.createDataFrame(raw, "child LONG, parent LONG")
         fast = {(r.node, r.anc, r.dist) for r in ancestor_closure(edges).collect()}
         # fast == DISTRIBUTED parity pinned directly (round-8 ADVICE):
-        # small_graph_limit=0 forces the repeated-squaring path
-        dist = {(r.node, r.anc, r.dist)
-                for r in ancestor_closure(edges, small_graph_limit=0).collect()}
+        # the ``distributed`` fixture forces the repeated-squaring path
+        with distributed():
+            dist = {(r.node, r.anc, r.dist)
+                    for r in ancestor_closure(edges).collect()}
         assert fast == dist
         parent = dict(raw)
         want = set()
@@ -3027,7 +3022,7 @@ def test_ancestor_closure_fast_path_matches_squaring(spark):
     assert got == {(1, 2): 1, (2, 1): 1, (1, 1): 2, (2, 2): 2}
 
 
-def test_flatten_hierarchy_fast_path_matches_doubling(spark):
+def test_flatten_hierarchy_fast_path_matches_doubling(spark, distributed):
     from etl_wrap_spark.operators.incremental_join import flatten_hierarchy
 
     tree = [(i, i // 2) for i in range(2, 128)]
@@ -3037,9 +3032,10 @@ def test_flatten_hierarchy_fast_path_matches_doubling(spark):
         fast = {(r.node, r.root, r.depth)
                 for r in flatten_hierarchy(edges).collect()}
         # fast == DISTRIBUTED parity pinned directly (round-8 ADVICE):
-        # small_graph_limit=0 forces the pointer-doubling path
-        dist = {(r.node, r.root, r.depth)
-                for r in flatten_hierarchy(edges, small_graph_limit=0).collect()}
+        # the ``distributed`` fixture forces the pointer-doubling path
+        with distributed():
+            dist = {(r.node, r.root, r.depth)
+                    for r in flatten_hierarchy(edges).collect()}
         assert fast == dist
         parent = dict(raw)
         want = set()
@@ -3109,7 +3105,7 @@ def test_interpolate_linear_skips_null_valued_observations(spark):
     assert len(got) == 7
 
 
-def test_connected_components_null_endpoint_fast_path_guard(spark):
+def test_connected_components_null_endpoint_fast_path_guard(spark, distributed):
     """Round-10 ADVICE regression: a NULL edge endpoint makes Arrow
     render int64 ids as float64/NaN in the driver union-find collect —
     both CC variants must route such graphs distributed and agree with
@@ -3117,9 +3113,9 @@ def test_connected_components_null_endpoint_fast_path_guard(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, None), (3, 4), (None, 5)], "id_a LONG, id_b LONG"
     )
-    want = {r["doc_id"]: r["component"]
-            for r in dedup.connected_components(
-                pairs, small_graph_limit=0).collect()}
+    with distributed():
+        want = {r["doc_id"]: r["component"]
+                for r in dedup.connected_components(pairs).collect()}
     got = {r["doc_id"]: r["component"]
            for r in dedup.connected_components(pairs).collect()}
     star = {r["doc_id"]: r["component"]
@@ -3131,11 +3127,14 @@ def test_connected_components_null_endpoint_fast_path_guard(spark):
     assert want[1] == want[2] == 1 and want[3] == want[4] == 3
 
 
-def test_ancestor_closure_known_small_matches_and_survives_wrong_bound(spark):
+def test_ancestor_closure_known_small_matches_and_survives_wrong_bound(
+    spark, monkeypatch, distributed
+):
     """known_small=True skips the size-probe job but must return the
     identical closure; a WRONG caller bound (limit smaller than the
     forest) must fall through to the distributed squaring, not
     mislabel."""
+    from etl_wrap_spark.operators import incremental_join
     from etl_wrap_spark.operators.incremental_join import ancestor_closure
 
     edges = spark.createDataFrame(
@@ -3146,7 +3145,7 @@ def test_ancestor_closure_known_small_matches_and_survives_wrong_bound(spark):
     fast = {(r["node"], r["anc"], r["dist"])
             for r in ancestor_closure(edges, known_small=True).collect()}
     assert fast == want
+    monkeypatch.setattr(incremental_join, "HIERARCHY_DRIVER_LIMIT", 2)
     wrong = {(r["node"], r["anc"], r["dist"])
-             for r in ancestor_closure(
-                 edges, known_small=True, small_graph_limit=2).collect()}
+             for r in ancestor_closure(edges, known_small=True).collect()}
     assert wrong == want

@@ -228,6 +228,36 @@ def test_driver_job_budget_per_query_build(spark):
     )
 
 
+@pytest.mark.parametrize("name", ["q157_bfs_hops", "q117_hierarchy_flatten"])
+def test_catalog_floor_graph_queries_keep_the_driver_route(
+    spark, monkeypatch, distributed, name
+):
+    """The perfbench ``catalog_floor`` workload builds q157 (bfs_hops)
+    and q117 (flatten_hierarchy) on its sf0.01 tables. Both inputs must
+    stay under their operators' row-limit constants, so every
+    ``_small_cols`` call of the build hands back columns (the driver
+    kernel) rather than None (the distributed plan). Headroom is pinned
+    off by the ``distributed`` fixture, so only size decides."""
+    import os
+
+    from etl_wrap_spark.operators import graph
+
+    sf = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench", "data", "sf0.01",
+    )
+    seen = []
+    gate = graph._small_cols
+
+    def recorded(pinned, limit, known_small=False):
+        seen.append(gate(pinned, limit, known_small))
+        return seen[-1]
+
+    monkeypatch.setattr(graph, "_small_cols", recorded)
+    queries()[name](spark, sf)
+    assert seen and all(cols is not None for cols in seen), name
+
+
 def test_no_unbounded_unpartitioned_window_catalog_wide(spark):
     """Every unpartitioned WindowExec in every catalog query must sit
     over a limit-bounded subtree (the orderBy+limit-then-rank pattern)

@@ -870,10 +870,10 @@ def test_sssp_multi_source_min(spark):
     assert got == {0: 0, 9: 0, 1: 2}
 
 
-def test_sssp_fast_path_matches_distributed(spark):
+def test_sssp_fast_path_matches_distributed(spark, distributed):
     """The driver relaxation must agree with the distributed frontier
-    Bellman-Ford (small_graph_limit=0 forces it) on a random weighted
-    graph with duplicate edges and zero weights, a seed outside the
+    Bellman-Ford (forced by the ``distributed`` fixture) on a random
+    weighted graph with duplicate edges and zero weights, a seed outside the
     graph, a NULL seed (both keep its (NULL, 0) row) and a NULL
     endpoint (routes the default call distributed)."""
     import random as _r
@@ -885,7 +885,8 @@ def test_sssp_fast_path_matches_distributed(spark):
 
     def both(edges, sources):
         fast = _sssp(spark, edges, sources, max_hops=3)
-        slow = _sssp(spark, edges, sources, max_hops=3, small_graph_limit=0)
+        with distributed():
+            slow = _sssp(spark, edges, sources, max_hops=3)
         assert fast == slow
         return fast
 

@@ -5,8 +5,10 @@ the epoch — q212 read 2.3x inside the full sf1 bench but 0.42x in a
 clean session with no code change, and four 21-291 ms floor-adjacent
 entries swapped in/out between runs. Protocol fix: before a candidate
 is COUNTED into the weak set, it is re-probed in a FRESH PROCESS (one
-clean Spark session per query, the q134_q212_sf1_probe pattern folded
-into the protocol), via bench.py's subset mode so the statistic is
+clean Spark session per query — the protocol of the round-10 q134/q212
+stage probe, folded in here; that probe is retired and its numbers are
+in Q134_Q212_SF1_PROBE.json and SCALING.md), via bench.py's subset
+mode so the statistic is
 identical (min of SPARK_GRAFT_RUNS full build+execute walls, interleaved
 oracle, same toRdd execution). The probe artifact is committed as
 SF1_WEAK_PROBE.json and merged into BENCH_SF1_DETAIL.json as the
