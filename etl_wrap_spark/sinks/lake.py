@@ -16,11 +16,10 @@ Protocol (manifest swap):
   exactly the version it names.
 - A writer stages the complete new state into a uniquely-named
   ``_staging/<uuid>`` directory, atomically ``os.rename``s it to
-  ``v{N}`` (the rename doubles as the writer lock — it fails if another
-  writer claimed that version number; N is one past the highest version
-  on disk or in the pointer, so versions left newer than the pointer by
-  a rollback or an interrupted commit are skipped, never reused), then
-  commits by renaming a fresh
+  ``v{N}`` (N is one past the highest version on disk or in the
+  pointer, so versions left newer than the pointer by a rollback or an
+  interrupted commit are skipped, never reused; the rename fails if
+  another writer claimed that number), then commits by renaming a fresh
   ``_manifest.json.tmp`` over the manifest. POSIX rename is atomic, so
   a concurrent reader sees the old manifest or the new one — never a
   torn file and never a half-written version directory (staging dirs
@@ -33,7 +32,12 @@ Protocol (manifest swap):
   directory is garbage-collected by ``vacuum()``.
 - Concurrent writers: optimistic concurrency. The transaction records
   the manifest version it read; if the manifest moved by commit time,
-  ``ConflictError`` — the loser retries on fresh state (multi-writer
+  ``ConflictError`` — the loser retries on fresh state. The check and
+  the manifest rename run under an exclusive ``flock`` on the table
+  root (the writer lock), so of two writers from one manifest exactly
+  one commits; the kernel drops the lock when its holder dies, so a
+  crash never wedges the table. The lock is host-local: writers on
+  several hosts need the conditional-PUT seam above (multi-writer
   last-write-wins corruption is structurally impossible: committed
   version directories are immutable and never edited in place).
 
@@ -45,6 +49,7 @@ use ``replace_where`` on the partition column for the same effect here).
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import shutil
@@ -192,8 +197,9 @@ class _Pointer:
         """One past the highest version claimed on disk or named by the
         pointer. A rollback leaves newer versions on disk, and a commit
         interrupted between its claim and the pointer swap leaves an
-        orphan; both are skipped, never reused. The claim itself (the
-        version-dir rename or manifest link) stays the writer lock."""
+        orphan; both are skipped, never reused. The claim (the
+        version-dir rename or manifest link) only reserves the number;
+        the locked ``_swap`` decides which writer commits."""
         return max([*self._disk_versions(), self.current_version() or 0]) + 1
 
     def rollback(self, to_version: int) -> None:
@@ -219,14 +225,24 @@ class _Pointer:
         **extra,
     ) -> None:
         """Point the table at `version` if it still names `expected`,
-        recording `txn` in the ledger; `extra` keys ride in the pointer."""
-        self._check(expected)
-        txns = dict(self._pointer().get("txns", {}))
-        if txn is not None:
-            txns[txn[0]] = int(txn[1])
-        body = {"version": version, "committed_at": time.time(), "txns": txns, **extra}
-        tmp = _fsynced_tmp(self._pointer_path(), body)
-        os.rename(tmp, self._pointer_path())  # the atomic commit point
+        recording `txn` in the ledger; `extra` keys ride in the pointer.
+        The check, the ledger read and the rename run under the writer
+        lock (an exclusive ``flock`` on the root, released on close or
+        when the holder dies), so two writers that read the same
+        pointer can't both pass the check: the second gets
+        ConflictError."""
+        fd = os.open(self.root, os.O_RDONLY)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            self._check(expected)
+            txns = dict(self._pointer().get("txns", {}))
+            if txn is not None:
+                txns[txn[0]] = int(txn[1])
+            body = {"version": version, "committed_at": time.time(), "txns": txns, **extra}
+            tmp = _fsynced_tmp(self._pointer_path(), body)
+            os.rename(tmp, self._pointer_path())  # the atomic commit point
+        finally:
+            os.close(fd)
 
     def _staging_dir(self) -> str:
         return os.path.join(self.root, "_staging", uuid.uuid4().hex)
@@ -464,11 +480,11 @@ class AtomicTable(_Pointer):
     ) -> int:
         """The one stage-and-promote sequence: stage `df` indexed by
         `props` (None = the table's persisted properties), then install
-        the staged dir as version ``_next_version()``. The dir rename is
-        the writer lock: two writers racing for the same version number
-        can't both rename onto ``v{N}`` — the loser gets ConflictError
-        and its staged dir is removed, leaving the winner's committed
-        files untouched."""
+        the staged dir as version ``_next_version()``. Two writers
+        can't both rename onto ``v{N}``, and of two writers from one
+        pointer only one passes the locked swap: the loser gets
+        ConflictError and its staged or claimed dir is removed, leaving
+        the winner's committed files untouched."""
         if self._replayed(txn):
             return self.current_version() or 0
         props = self.table_props() if props is None else props
@@ -480,7 +496,11 @@ class AtomicTable(_Pointer):
                 os.rename(staged, self._version_dir(new_v))
             except OSError as e:
                 raise ConflictError(f"version dir v{new_v} already claimed") from e
-            self._swap(new_v, expected, txn, table_props=props)
+            try:
+                self._swap(new_v, expected, txn, table_props=props)
+            except ConflictError:
+                shutil.rmtree(self._version_dir(new_v), ignore_errors=True)
+                raise
         except BaseException:
             shutil.rmtree(staged, ignore_errors=True)
             raise
@@ -716,7 +736,11 @@ class PartitionedAtomicTable(_Pointer):
             raise ConflictError(f"manifest v{new_v} already claimed") from e
         finally:
             os.unlink(tmp)
-        self._swap(new_v, expected, txn)
+        try:
+            self._swap(new_v, expected, txn)
+        except ConflictError:
+            os.unlink(mpath)  # never referenced: the pointer moved first
+            raise
         return new_v
 
     # ------------------------------------------------------------ writers

@@ -8,7 +8,9 @@ rollback on error).
 
 from __future__ import annotations
 
+import fcntl
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -147,6 +149,66 @@ def test_write_after_interrupted_commit_skips_the_orphan(spark, table, monkeypat
     assert _rows(table) == {(1, "a")}
     assert table.write(spark.createDataFrame([(1, "b")], "k int, v string")) == 3
     assert _rows(table) == {(1, "b")}
+
+
+def _race_same_parent(table, monkeypatch, commit_a, commit_b) -> dict:
+    """Writers A and B commit from the same pointer. A claims its version
+    and pauses just before its pointer rename; B runs its whole commit
+    meanwhile, until it finishes or reaches the writer lock, and only
+    then is A released. Returns {"A"/"B": committed version or the
+    raised exception}."""
+    ptr = table._pointer_path()
+    a_paused, b_at_lock, release = threading.Event(), threading.Event(), threading.Event()
+    real_rename, real_flock = os.rename, fcntl.flock
+
+    def rename(src, dst):
+        if dst == ptr and threading.current_thread().name == "A":
+            a_paused.set()
+            release.wait(120)
+        return real_rename(src, dst)
+
+    def flock(fd, op):
+        if threading.current_thread().name == "B":
+            b_at_lock.set()
+        return real_flock(fd, op)
+
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(fcntl, "flock", flock)
+    out = {}
+
+    def run(name, commit):
+        try:
+            out[name] = commit()
+        except Exception as e:  # noqa: BLE001 — the outcome under test
+            out[name] = e
+
+    a = threading.Thread(target=run, args=("A", commit_a), name="A")
+    a.start()
+    assert a_paused.wait(120)
+    b = threading.Thread(target=run, args=("B", commit_b), name="B")
+    b.start()
+    while b.is_alive() and not b_at_lock.wait(0.05):
+        pass
+    release.set()
+    a.join(120)
+    b.join(120)
+    return out
+
+
+def test_same_parent_writers_exactly_one_commits(spark, table, monkeypatch):
+    # B claims v3 while A (claimed v2) is between its check and its
+    # pointer rename: B must lose, not silently overwrite A's upsert
+    table.write(spark.createDataFrame([(1, "a")], "k int, v string"))
+    a_df = spark.createDataFrame([(2, "A")], "k int, v string")
+    b_df = spark.createDataFrame([(3, "B")], "k int, v string")
+    out = _race_same_parent(
+        table, monkeypatch, lambda: table.upsert(a_df, ["k"]), lambda: table.upsert(b_df, ["k"])
+    )
+    assert out["A"] == 2
+    assert isinstance(out["B"], ConflictError)
+    assert table.current_version() == 2
+    assert _rows(table) == {(1, "a"), (2, "A")}
+    assert not os.path.isdir(table._version_dir(3))  # the loser's claim is gone
 
 
 def test_vacuum_keeps_current_and_recent(spark, table):
@@ -308,6 +370,24 @@ def test_partitioned_upsert_after_interrupted_commit_skips_the_orphan(
     assert os.path.exists(str(tmp_path / "ptbl" / "_versions" / "2.json"))  # orphan
     assert ptable.upsert(_pdata(spark, [(2, "us", 20)]), ["k"]) == 3
     assert {(r.k, r.v) for r in ptable.read().collect()} == {(1, 10), (2, 20)}
+
+
+def test_partitioned_same_parent_writers_exactly_one_commits(
+    spark, ptable, tmp_path, monkeypatch
+):
+    ptable.write(_pdata(spark, [(1, "eu", 10)]))
+    a_df, b_df = _pdata(spark, [(2, "eu", 20)]), _pdata(spark, [(3, "us", 30)])
+    out = _race_same_parent(
+        ptable,
+        monkeypatch,
+        lambda: ptable.upsert(a_df, ["k"]),
+        lambda: ptable.upsert(b_df, ["k"]),
+    )
+    assert out["A"] == 2
+    assert isinstance(out["B"], ConflictError)
+    assert ptable.current_version() == 2
+    assert {(r.k, r.v) for r in ptable.read().collect()} == {(1, 10), (2, 20)}
+    assert not os.path.exists(str(tmp_path / "ptbl" / "_versions" / "3.json"))
 
 
 def test_partitioned_concurrent_writer_conflict(spark, ptable, tmp_path):
