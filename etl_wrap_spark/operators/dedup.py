@@ -1046,17 +1046,20 @@ def contamination_check(
 
 
 # ---------------------------------------------- dedup connected components
-# ``graph._small_cols`` row limit of both CC variants: 2^17 pairs ≈ 2 MB
-# of longs on the driver
+# ``graph._small_cols`` row limit of connected_components: 2^17 pairs ≈
+# 2 MB of longs on the driver
 CC_DRIVER_LIMIT = 1 << 17
+# star-round bound of connected_components' distributed route: measured
+# rounds are about log2(n) + 1 (7 on a 2^6-node chain, 11 on 2^10)
+CC_MAX_ROUNDS = 64
 
 
 def _driver_union_find(pinned: DataFrame, u_col, v_col) -> DataFrame:
-    """Small-graph fast path shared by both CC variants: exact
-    min-root union-find over an already-collected (u, v) edge frame
+    """Small-graph route of connected_components: exact min-root
+    union-find over an already-collected (u, v) edge frame
     (``u_col``/``v_col`` — the numpy columns ``graph._small_cols``
     returned; no second row-based collect() job).
-    Output identical to the distributed algorithms — (doc_id,
+    Output identical to the distributed route — (doc_id,
     component = min reachable id) for every node that appears in an
     edge, re-entering Spark as a single Arrow batch (a row-pickled
     LocalRelation measured 3-4x slower to execute). Only ever called
@@ -1098,193 +1101,72 @@ def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    max_iter: int = 20,
     rounds_out: list | None = None,
 ) -> DataFrame:
-    """(node, component) labeling of the near-dup graph: component =
+    """(doc_id, component) labeling of the near-dup graph: component =
     min node id reachable — the canonicalization step that turns
     pairwise LSH output into dedup groups.
 
-    Min-label propagation: each round every node takes the min of its
-    own label and its neighbors' labels; converged when no label
-    changes. Rounds needed ≈ graph diameter, minus one because the
-    label bootstrap is itself a propagation step (init label =
-    min(id, min neighbor) — the first round folded into an aggregation
-    with no join). Dedup components are near-cliques, so 1-2 counted
-    rounds in practice; `max_iter` bounds pathological chains. Each round is one shuffle join + aggregation; the labels
-    frame is persisted per round and lineage is truncated via
-    localCheckpoint so plans don't grow with iterations — the standard
-    shape for iterative algorithms on a cluster. Driver-side work is
-    one scalar count per round (the convergence test), never the data.
+    Contract (both routes below return the same rows): every endpoint of
+    an edge with no NULL endpoint is a node; a self-loop makes its node a
+    singleton component; an edge with a NULL endpoint is ignored.
 
-    ``rounds_out``: optional list that receives one entry per executed
-    round (the changed-label count) — scale probes use it to verify the
-    rounds-vs-diameter claim without re-instrumenting (passing it also
-    forces the distributed path, since the fast path has no rounds).
-
-    AQE-style adaptive strategy pick: when the edge list passes the
+    The route follows the data: when the edge list passes the
     ``graph._small_cols`` gate (≤ ``CC_DRIVER_LIMIT`` pairs, among its
-    other conditions) the component labeling runs as a driver-side
-    union-find instead of iterative label propagation — identical
-    output (component = min reachable id), but zero per-round
-    scheduling, which at bench scale is the entire cost (q160: 256 LSH
-    pairs spent 1.36 s building 3 rounds of checkpointed plans for
-    0.03 s of execution). The limit bounds driver memory at ~MBs; a
-    100-TB near-dup graph blows it and takes the distributed path
-    unchanged.
-    """
-    from etl_wrap_spark.operators.graph import _small_cols
-
-    sym = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    if rounds_out is None:
-        # pinned for the gate's count and collect; the distributed
-        # rounds below reuse the materialized edge list
-        sym = sym.localCheckpoint(eager=False)
-        cols = _small_cols(sym, CC_DRIVER_LIMIT)
-        if cols is not None:
-            return _driver_union_find(sym, cols["u"], cols["v"])
-    edges = (
-        # NO .distinct(): every consumer is a min-aggregation (the label
-        # bootstrap's groupBy and each round's neighbor-min), which is
-        # duplicate-tolerant — deduping here would add a full shuffle of
-        # the edge list purely to shrink inputs that LSH already emits
-        # distinct (round-7: one fewer AQE stage for every CC caller).
-        # Pinned once (lazy checkpoint — computed+cached at the first
-        # round's convergence probe): every round joins against edges,
-        # and without this the whole upstream pair-generation pipeline
-        # (e.g. the LSH near-dup cascade) would re-execute per round.
-        sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=False)
-    )
-    # initialize with min(id, min neighbor): one aggregation performs
-    # the first propagation round for free (the groupBy is over the
-    # symmetric edge list, so every node appears as u) — convergence
-    # then takes diameter−1 counted rounds instead of diameter
-    labels = (
-        edges.groupBy(F.col("u").alias("id"))
-        .agg(F.min("v").alias("__mn"))
-        .select("id", F.least(F.col("id"), F.col("__mn")).alias("label"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["v"] == labels["id"])
-            .groupBy("u")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["u"], "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias("label"),
-                (F.col("nlabel") < F.col("label")).alias("changed"),
-            )
-        )
-        updated = updated.localCheckpoint(eager=False)
-        n_changed = updated.where(F.col("changed")).count()
-        labels = updated.drop("changed")
-        if rounds_out is not None:
-            rounds_out.append(n_changed)
-        if n_changed == 0:
-            break
-    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component"))
-
-
-def select_canonicals(
-    components: DataFrame,
-    scores: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "score",
-) -> DataFrame:
-    """Pick the keeper per dedup component by QUALITY, not by id →
-    (doc_id, component, keep).
-
-    `components` is (doc_id, component) from either connected-components
-    variant; `scores` maps doc_id → a numeric quality score (e.g. the
-    negated flag count from gopher_flags, a classifier logit). Winner is
-    max score, ties to lowest id — one max_by-style aggregation (the
-    (score, -id) struct max combines map-side), one join back. This is
-    the policy layer that turns "drop all but the first" into "drop all
-    but the best", which is what a curation pipeline actually wants."""
-    joined = components.join(scores.select(F.col(id_col), F.col(score_col)), on=id_col)
-    # two-stage argmax (max score, then min id among the maximal rows):
-    # id-type-generic, and both aggregations combine map-side
-    mx = joined.groupBy("component").agg(F.max(score_col).alias("__msc"))
-    best = (
-        joined.join(mx, on="component")
-        .where(F.col(score_col) == F.col("__msc"))
-        .groupBy("component")
-        .agg(F.min(id_col).alias("__winner"))
-    )
-    return (
-        components.join(best, on="component")
-        .select(id_col, "component", (F.col(id_col) == F.col("__winner")).alias("keep"))
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 25,
-    rounds_out: list | None = None,
-) -> DataFrame:
-    """(node, component) labeling via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the scale path when component DIAMETER is unbounded.
-
-    Min-label propagation (connected_components) needs diameter-many
-    rounds: a 10^6-node chain means 10^6 shuffles. The star operations
-    instead rewire edges toward each neighborhood's minimum:
+    other conditions) the labeling runs as the driver union-find — zero
+    per-round scheduling, which at bench scale is the entire cost (q160:
+    256 LSH pairs spent 1.36 s building 3 rounds of checkpointed plans
+    for 0.03 s of execution). Otherwise it runs alternating
+    large-star/small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond"), which rewires edges toward each
+    neighborhood's minimum:
 
     - large-star: for every node u, connect each strictly-GREATER
       neighbor v > u to min(N(u) ∪ {u});
     - small-star: orient edges large→small, connect each neighbor
       (all <= u) and u itself to that minimum.
 
-    Both keep the partition structure of the graph while halving tree
-    heights, so convergence is O(log^2 n) rounds on ANY topology —
-    dedup chains (A~B~C~... from transitive near-dup links) no longer
-    set the round count. Each round is two self-contained
-    aggregate+join shuffles; lineage is truncated per round via
-    localCheckpoint and the convergence probe pulls two scalars
-    (edge count + checksum), never data, to the driver.
+    Both keep the partition while halving tree heights, so the round
+    count follows log n, not the diameter (a 2^10-node chain converges
+    in 11 rounds, where one hop per round would take 1023). Each
+    round is two aggregate+join shuffles, lineage is truncated per round
+    via localCheckpoint, and the convergence probe pulls two scalars
+    (edge count + checksum), never data, to the driver. Raises
+    RuntimeError when ``CC_MAX_ROUNDS`` rounds do not converge, rather
+    than returning a partial labeling.
 
     ``rounds_out``: optional list receiving one entry per executed round
-    (the surviving edge count) — scale probes use it to verify the
-    O(log²n)-rounds claim against planted chain topologies (passing it
-    forces the distributed path).
-
-    Same AQE-style adaptive pick as connected_components — the deduped
-    edge list is pinned regardless; when it passes the
-    ``graph._small_cols`` gate (≤ ``CC_DRIVER_LIMIT`` pairs) the
-    labeling runs as the driver union-find (identical output, none of
-    the per-round scheduling), otherwise the star alternation proceeds
-    unchanged.
+    (the surviving edge count) — scale probes use it to check the
+    rounds-vs-log n claim; passing it forces the distributed route.
     """
-    edges = (
+    from etl_wrap_spark.operators.graph import _small_cols
+
+    # NO .distinct() before the gate: the union-find tolerates duplicate
+    # edges, and LSH already emits distinct pairs. Pinned for the gate's
+    # count and collect; the distributed route reads it twice (edges and
+    # nodes), and without the pin the whole upstream pair-generation
+    # pipeline would re-execute.
+    pinned = (
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
+        .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .localCheckpoint(eager=False)
     )
     if rounds_out is None:
-        from etl_wrap_spark.operators.graph import _small_cols
-
-        cols = _small_cols(edges, CC_DRIVER_LIMIT)
+        cols = _small_cols(pinned, CC_DRIVER_LIMIT)
         if cols is not None:
-            return _driver_union_find(edges, cols["u"], cols["v"])
+            return _driver_union_find(pinned, cols["u"], cols["v"])
+    edges = pinned.where(F.col("u") != F.col("v")).distinct()
     prev: tuple[int, int] | None = None
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # large-star over the symmetric neighborhood
-        sym = edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        nbrs = edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = (
-            sym.groupBy("u")
+            nbrs.groupBy("u")
             .agg(F.min("v").alias("minv"))
             .select("u", F.least("u", "minv").alias("mn"))
         )
         edges = (
-            sym.join(mins, on="u")
+            nbrs.join(mins, on="u")
             .where(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("mn").alias("v"))
             .where(F.col("u") != F.col("v"))
@@ -1312,14 +1194,47 @@ def connected_components_star(
         if cur == prev:
             break
         prev = cur
-    # converged edge set points every non-root node at its component root
-    roots = edges.select(F.col("v").alias("id")).distinct().exceptAll(
-        edges.select(F.col("u").alias("id")).distinct()
+    else:
+        raise RuntimeError(f"connected_components did not converge in {CC_MAX_ROUNDS} rounds")
+    # the converged edges point every non-root node at its component
+    # min; every node they do not label (roots, self-loop-only nodes)
+    # is its own component
+    labels = edges.select(F.col("u").alias("doc_id"), F.col("v").alias("component"))
+    nodes = pinned.select(F.col("u").alias("doc_id")).unionByName(pinned.select(F.col("v").alias("doc_id")))
+    return nodes.distinct().join(labels, on="doc_id", how="left").select(
+        "doc_id", F.coalesce("component", "doc_id").alias("component")
+    )
+
+
+def select_canonicals(
+    components: DataFrame,
+    scores: DataFrame,
+    id_col: str = "doc_id",
+    score_col: str = "score",
+) -> DataFrame:
+    """Pick the keeper per dedup component by QUALITY, not by id →
+    (doc_id, component, keep).
+
+    `components` is (doc_id, component) from connected_components;
+    `scores` maps doc_id → a numeric quality score (e.g. the negated
+    flag count from gopher_flags, a classifier logit). Winner is
+    max score, ties to lowest id — one max_by-style aggregation (the
+    (score, -id) struct max combines map-side), one join back. This is
+    the policy layer that turns "drop all but the first" into "drop all
+    but the best", which is what a curation pipeline actually wants."""
+    joined = components.join(scores.select(F.col(id_col), F.col(score_col)), on=id_col)
+    # two-stage argmax (max score, then min id among the maximal rows):
+    # id-type-generic, and both aggregations combine map-side
+    mx = joined.groupBy("component").agg(F.max(score_col).alias("__msc"))
+    best = (
+        joined.join(mx, on="component")
+        .where(F.col(score_col) == F.col("__msc"))
+        .groupBy("component")
+        .agg(F.min(id_col).alias("__winner"))
     )
     return (
-        edges.select(F.col("u").alias("doc_id"), F.col("v").alias("component"))
-        .unionByName(roots.select(F.col("id").alias("doc_id"), F.col("id").alias("component")))
-        .distinct()
+        components.join(best, on="component")
+        .select(id_col, "component", (F.col(id_col) == F.col("__winner")).alias("keep"))
     )
 
 
@@ -1552,7 +1467,7 @@ def golden_record(
       rule needing its own (component, value) count aggregation; every
       other rule rides ONE map-side-combined groupBy.
 
-    ``comp`` is (id, component) from connected_components[_star];
+    ``comp`` is (id, component) from connected_components;
     ``records`` carries id + the attributes named in ``rules``.
     Returns one row per component with the surviving attributes."""
     joined = records.join(comp, on=id_col)

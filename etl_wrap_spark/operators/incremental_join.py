@@ -148,11 +148,11 @@ def flatten_hierarchy(
     node's current ancestor pointer onto that ancestor's own pointer,
     squaring the jump length (1, 2, 4, ...), so a depth-D hierarchy
     converges in ceil(log2 D) + 1 rounds instead of D — the same
-    O(log) discipline as connected_components_star, and the difference
-    between 14 rounds and 10,000 on a deep bill-of-materials. Each
-    round is one self-join on the ancestor key + localCheckpoint
-    (truncates the exponentially growing lineage); the convergence
-    probe is a scalar count.
+    O(log) discipline as connected_components' star rounds, and the
+    difference between 14 rounds and 10,000 on a deep
+    bill-of-materials. Each round is one self-join on the ancestor key
+    + localCheckpoint (truncates the exponentially growing lineage);
+    the convergence probe is a scalar count.
 
     Roots are nodes that never appear as a child, or whose parent is
     NULL/self; cycles would never converge and raise after max_iter.

@@ -9,7 +9,7 @@ canonical order.
       → PII redaction             (text.redact_pii)
       → exact dedup               (dedup.exact_duplicates)
       → near-dup components       (dedup.near_dup_pairs_minhash
-                                   → connected_components_star)
+                                   → connected_components)
       → quality-aware canonicals  (dedup.select_canonicals)
       → token budgeting           (text.bpe_token_count)
       → deterministic split       (sampling.assign_split)
@@ -120,7 +120,7 @@ def curate(
     pairs = dedup.near_dup_pairs_minhash(
         after_exact, id_col, text_col, num=jaccard_num, den=jaccard_den
     )
-    comps = dedup.connected_components_star(pairs)
+    comps = dedup.connected_components(pairs)
     toks = text.tokens(text_col)
     score = (F.size(F.array_distinct(toks)) / F.size(toks)).alias("score")
     scores = after_exact.select(F.col(id_col), score)
@@ -200,7 +200,7 @@ def curate(
         loose = dedup.near_dup_pairs_minhash(
             clean, id_col, text_col, num=ln, den=ld
         )
-        loose_cc = dedup.connected_components_star(loose)
+        loose_cc = dedup.connected_components(loose)
         clean = (
             clean.join(loose_cc, on=id_col, how="left")
             .withColumn("component", F.coalesce(F.col("component"), F.col(id_col)))

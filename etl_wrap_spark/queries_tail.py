@@ -297,8 +297,8 @@ def q55_dedup_components(spark, sf_dir):
     turns pairwise dedup output into keep/drop groups. The oracle
     computes the same components from exact Jaccard pairs via a
     bounded closure (q23 established LSH==exact on this corpus at the
-    J>=0.5 cut), exercising the iterative min-label-propagation
-    operator against a closed-form ground truth."""
+    J>=0.5 cut), exercising the connected-components operator against
+    a closed-form ground truth."""
     t = load_tables(spark, sf_dir, ["documents"])
     pairs = dedup.near_dup_pairs_minhash(t["documents"], "doc_id", "text", n=3, num=2, den=1)
     return dedup.connected_components(pairs).orderBy("doc_id")
@@ -469,13 +469,13 @@ def q58_bpe_token_budget(spark, sf_dir):
 
 @register("q59_dedup_components_star", oracle=_CC_ORACLE)
 def q59_dedup_components_star(spark, sf_dir):
-    """Same contract as q55 but labeled via the large-star/small-star
-    alternation (connected_components_star) — oracle-proving that the
-    O(log^2 n)-round scale path computes the identical component map
-    the exact-closure ground truth defines."""
+    """Same contract and operator as q55 (connected_components), kept in
+    the catalog under its original name: the component map must equal
+    the exact-closure ground truth. The large-star/small-star variant it
+    once ran is now connected_components' only distributed route."""
     t = load_tables(spark, sf_dir, ["documents"])
     pairs = dedup.near_dup_pairs_minhash(t["documents"], "doc_id", "text", n=3, num=2, den=1)
-    return dedup.connected_components_star(pairs).orderBy("doc_id")
+    return dedup.connected_components(pairs).orderBy("doc_id")
 
 
 # -------------------------------------------------- semantic dedup (q60)

@@ -531,13 +531,23 @@ def test_contamination_check_verbatim_and_clean(spark):
     assert (2, 10) not in rows              # clean doc never pairs
 
 
-def test_connected_components_chain_and_singleton_free(spark):
-    # components: {1,2,3,4} via a chain (diameter 3), {7,9}; 100 has no edges
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (9, 7)], ["id_a", "id_b"]
-    )
-    got = {r["doc_id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 9: 7}
+def test_connected_components_chain_and_singleton_free(spark, distributed):
+    # components: {1,2,3,4} via a chain (diameter 3), {7,9}; 100 has no
+    # edges; a pair listed in both orders, (10, 11) and (11, 10), is one
+    # component — the same rows on the driver and distributed routes
+    cases = [
+        ([(1, 2), (2, 3), (3, 4), (9, 7)],
+         {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 9: 7}),
+        ([(1, 2), (2, 3), (3, 4), (9, 7), (10, 11), (11, 10)],
+         {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 9: 7, 10: 10, 11: 10}),
+    ]
+    for edges, want in cases:
+        pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+        got = {r["doc_id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
+        assert got == want
+        with distributed():
+            got = {r["doc_id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
+        assert got == want
 
 
 def test_tune_lsh_params_properties():
@@ -571,29 +581,28 @@ def test_near_dup_pairs_auto_tuned_matches_default(spark, docs):
     assert tuned <= default | {(1, 2), (1, 4), (2, 4)}
 
 
-def test_connected_components_star_matches_minlabel(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (9, 7), (10, 11), (11, 10)], ["id_a", "id_b"]
-    )
-    star = {r["doc_id"]: r["component"] for r in dedup.connected_components_star(pairs).collect()}
-    assert star == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 9: 7, 10: 10, 11: 10}
-
-
-def test_connected_components_star_long_chain(spark):
-    # a 64-node chain: diameter 63 — min-label would need 63 rounds, the
-    # star alternation must finish well inside its default budget
+def test_connected_components_long_chain(spark, monkeypatch):
+    # a 64-edge chain: diameter 64, one hop per round would need 64; the
+    # distributed star rounds (forced by rounds_out) follow log2 n
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], ["id_a", "id_b"]
     )
-    got = {r["doc_id"]: r["component"] for r in dedup.connected_components_star(pairs, max_iter=10).collect()}
+    rounds: list = []
+    got = {r["doc_id"]: r["component"]
+           for r in dedup.connected_components(pairs, rounds_out=rounds).collect()}
     assert got == {i: 0 for i in range(65)}
+    assert 0 < len(rounds) <= 8
+    # an exhausted round bound raises instead of returning a partial labeling
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 3)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(pairs, rounds_out=[])
 
 
-def test_connected_components_star_string_ids(spark):
+def test_connected_components_string_ids(spark):
     pairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], ["id_a", "id_b"]
     )
-    got = {r["doc_id"]: r["component"] for r in dedup.connected_components_star(pairs).collect()}
+    got = {r["doc_id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
@@ -2752,8 +2761,8 @@ def test_value_class_collapse_equivalence(spark):
 
 
 def test_connected_components_fast_path_matches_distributed(spark, distributed):
-    # the driver union-find must be label-identical to BOTH distributed
-    # algorithms on chains, cliques, self-loops, string ids, and random
+    # the driver union-find must be label-identical to the distributed
+    # star rounds on chains, cliques, self-loops, string ids, and random
     # graphs (the ``distributed`` fixture forces the distributed run).
     import random as _r
 
@@ -2773,17 +2782,8 @@ def test_connected_components_fast_path_matches_distributed(spark, distributed):
                 for r in dedup.connected_components(pairs).collect()}
         with distributed():
             slow = {r.doc_id: r.component
-                    for r in dedup.connected_components(
-                        pairs, max_iter=60).collect()}
+                    for r in dedup.connected_components(pairs).collect()}
         assert fast == slow
-        if not any(u == v for u, v in edges):
-            star_fast = {r.doc_id: r.component
-                         for r in dedup.connected_components_star(pairs).collect()}
-            with distributed():
-                star_slow = {r.doc_id: r.component
-                             for r in dedup.connected_components_star(
-                                 pairs).collect()}
-            assert star_fast == star_slow == fast
 
 
 def test_pagerank_fast_path_matches_distributed(spark, distributed):
@@ -2957,7 +2957,6 @@ def test_fast_paths_decline_without_driver_headroom(spark, monkeypatch, distribu
     )
     runs = {
         "cc": lambda: dedup.connected_components(pairs),
-        "cc_star": lambda: dedup.connected_components_star(pairs),
         "flatten": lambda: flatten_hierarchy(tree),
         "closure": lambda: ancestor_closure(tree),
         "closure_known_small": lambda: ancestor_closure(tree, known_small=True),
@@ -3106,25 +3105,21 @@ def test_interpolate_linear_skips_null_valued_observations(spark):
 
 
 def test_connected_components_null_endpoint_fast_path_guard(spark, distributed):
-    """Round-10 ADVICE regression: a NULL edge endpoint makes Arrow
-    render int64 ids as float64/NaN in the driver union-find collect —
-    both CC variants must route such graphs distributed and agree with
-    the forced-distributed output instead of crashing/mislabeling."""
+    """A NULL edge endpoint would make Arrow render int64 ids as
+    float64/NaN in the driver union-find collect: an edge with a NULL
+    endpoint is ignored (its other endpoint is no node), a self-loop-only
+    node is its own component, and both routes return the same rows."""
     pairs = spark.createDataFrame(
-        [(1, 2), (2, None), (3, 4), (None, 5)], "id_a LONG, id_b LONG"
+        [(1, 2), (2, None), (3, 4), (None, 5), (7, 7)], "id_a LONG, id_b LONG"
     )
-    with distributed():
-        want = {r["doc_id"]: r["component"]
-                for r in dedup.connected_components(pairs).collect()}
+    want = {1: 1, 2: 1, 3: 3, 4: 3, 7: 7}
     got = {r["doc_id"]: r["component"]
            for r in dedup.connected_components(pairs).collect()}
-    star = {r["doc_id"]: r["component"]
-            for r in dedup.connected_components_star(pairs).collect()}
     assert got == want
-    # star's u != v predicate drops NULL-endpoint edges entirely (NULL
-    # comparisons are NULL), so only the intact components surface there
-    assert star == {1: 1, 2: 1, 3: 3, 4: 3}
-    assert want[1] == want[2] == 1 and want[3] == want[4] == 3
+    with distributed():
+        got = {r["doc_id"]: r["component"]
+               for r in dedup.connected_components(pairs).collect()}
+    assert got == want
 
 
 def test_ancestor_closure_known_small_matches_and_survives_wrong_bound(

@@ -167,7 +167,7 @@ BUILD_JOB_BUDGETS = {
     # connected-components family: LSH cascade stages materialize at the
     # lazy-checkpoint calls + 1 convergence probe per CC round
     "q55_dedup_components": 30,
-    "q59_dedup_components_star": 50,  # large/small-star: 2 joins/round
+    "q59_dedup_components_star": 30,  # same operator and route as q55
     "q60_semantic_dedup": 6,
     "q107_canonical_selection": 32,
     "q141_golden_record": 30,

@@ -11,9 +11,9 @@ Measures, per corpus size, in one warmed session:
   + chain-adjacent edges);
 - df-capped exact Jaccard (the production inverted-index path);
 - contamination scan (0.5% of docs as the eval side);
-- connected components, both variants, on the verified pairs: wall,
-  ROUND count (rounds_out instrumentation), component count + max size
-  vs the planted 10-node chains;
+- connected components on the verified pairs, forced onto the
+  distributed large-star/small-star route (rounds_out): wall, ROUND
+  count, component count + max size vs the planted 10-node chains;
 - incremental dedup: 1% batch vs the signature index of the rest;
 - repeated-segment removal (the 10 planted boilerplate lines).
 
@@ -159,19 +159,16 @@ def probe(spark, corpus_dir: str, n_docs: int) -> dict:
     out["contamination_rows"] = cont.count()
     out["contamination_wall"] = round(time.time() - t0, 2)
 
-    # ---- connected components, both variants, on the verified pairs
-    for name, fn in (("cc", dedup.connected_components), ("ccstar", dedup.connected_components_star)):
-        rounds: list = []
-        t0 = time.time()
-        comp = fn(verified, rounds_out=rounds)
-        sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
-        stats = sizes.agg(
-            F.count(F.lit(1)).alias("n"), F.max("sz").alias("mx")
-        ).first()
-        out[f"{name}_wall"] = round(time.time() - t0, 2)
-        out[f"{name}_rounds"] = len(rounds)
-        out[f"{name}_components"] = stats["n"]
-        out[f"{name}_max_size"] = stats["mx"]
+    # ---- connected components on the verified pairs (distributed route)
+    rounds: list = []
+    t0 = time.time()
+    comp = dedup.connected_components(verified, rounds_out=rounds)
+    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
+    stats = sizes.agg(F.count(F.lit(1)).alias("n"), F.max("sz").alias("mx")).first()
+    out["cc_wall"] = round(time.time() - t0, 2)
+    out["cc_rounds"] = len(rounds)
+    out["cc_components"] = stats["n"]
+    out["cc_max_size"] = stats["mx"]
 
     # ---- incremental dedup: 1% batch vs index of the rest
     t0 = time.time()
