@@ -115,7 +115,7 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     )
 
 
-def _driver_headroom_ok(min_available_mb: int | None = None) -> bool:
+def _driver_headroom_ok() -> bool:
     """True when the driver HOST has enough available memory for a
     bounded fast-path collect (round-9 VERDICT #1: the numpy fast paths
     are correct and gated, but on a memory-constrained driver host they
@@ -129,8 +129,7 @@ def _driver_headroom_ok(min_available_mb: int | None = None) -> bool:
     overridable via SPARK_GRAFT_FASTPATH_MIN_MB: 0 disables the guard,
     and a floor past any host (2^40) makes every gate decline before it
     runs a job — the tests' parity fixture pins both routes this way."""
-    if min_available_mb is None:
-        min_available_mb = int(os.environ.get("SPARK_GRAFT_FASTPATH_MIN_MB", "1024"))
+    min_available_mb = int(os.environ.get("SPARK_GRAFT_FASTPATH_MIN_MB", "1024"))
     if min_available_mb <= 0:
         return True
     try:
@@ -218,8 +217,9 @@ def _small_cols(
     when the caller must run its distributed plan.
 
     The fast paths (connected components, hierarchy flatten/closure,
-    PageRank, BFS, SSSP, harmonic centrality) run an exact driver-side
-    kernel on a small input instead of scheduling per-round jobs whose
+    PageRank, BFS, SSSP, harmonic centrality, and the IVF centroid / PQ
+    codebook literals of similarity.py) run an exact driver-side kernel
+    on a small input instead of scheduling per-round jobs whose
     execution is milliseconds (~0.11 s of wall per driver job at bench
     scale). The route follows the data, never a per-call flag: each
     caller passes its module's row-limit constant, and the columns are
@@ -231,15 +231,27 @@ def _small_cols(
       ≤ ``limit`` rows.
 
     ``known_small`` is a caller assertion that the input is statically
-    bounded (e.g. q132's ``c_custkey <= 4095`` filter): the probe job is
-    then redundant. The post-collect row check still enforces the
-    limit, so a wrong assertion costs one oversized collect, never a
-    wrong result.
+    bounded (e.g. q132's ``c_custkey <= 4095`` filter, an IVF
+    centroid frame of ``n_cells`` rows): the probe job is then
+    redundant. The post-collect row check still enforces the limit, so
+    a wrong assertion costs one oversized collect, never a wrong
+    result. The seeded operators pass it for their seed lists too: a
+    seed plan is often unpinned (q197's derives from a join), so a
+    probe would compute it twice. Seeds are collected without
+    ``.distinct()`` — the kernels dedup on the driver (np.unique), and
+    the distinct's shuffle would cost an extra stage job per build.
 
     NULLs: equi-joins never match them, but a NULL node still surfaces
     in union-distinct node sets, so the distributed plans DEFINE the
     semantics; numpy's unique/searchsorted cannot represent None, and
     Arrow would widen NULL-bearing int64 ids to float64/NaN.
+
+    AQE is off for this call's jobs (``session._scoped_conf``; values
+    never depend on it). AQE runs every shuffle stage as a job of its
+    own, so the probe's count() — a partial aggregate and its final
+    merge — costs two jobs where the static plan runs one, and a
+    collect of at most ``limit`` rows gains nothing from re-planning
+    (the codebook collect measured 3 jobs with AQE, 1 without).
 
     ``pinned`` should read a localCheckpoint-pinned frame (the caller's
     distributed plan joins it every round, so the pin happens either
@@ -253,9 +265,10 @@ def _small_cols(
     count() moves only per-partition longs."""
     if not _driver_headroom_ok():
         return None
-    if not known_small and pinned.count() > limit:
-        return None
-    cols, n_rows, has_null = _arrow_numpy_cols(pinned)
+    with _scoped_conf(pinned.sparkSession, "spark.sql.adaptive.enabled", "false"):
+        if not known_small and pinned.count() > limit:
+            return None
+        cols, n_rows, has_null = _arrow_numpy_cols(pinned)
     if has_null or n_rows > limit:
         return None
     return cols
@@ -346,21 +359,18 @@ def bfs_hops(
         F.col(src).alias("__s"), F.col(dst).alias("__d")
     ).localCheckpoint(eager=False)
     cols = _small_cols(e, BFS_DRIVER_LIMIT)
-    # no .distinct() before the collect: np.unique dedups driver-side,
-    # and the distinct's shuffle costs an extra AQE stage job per build
-    seed_list = (
-        [s for (s,) in sources.select(
-            F.col(node_col).alias("node")).collect()]
-        if cols is not None and len(cols["__s"]) else None
-    )
     # A NULL seed is representable distributed (the visited-seed
     # initialization emits the (NULL, 0) row) but not in the numpy
-    # arrays (round-8 ADVICE) — fall through.
-    if seed_list is not None and not any(s is None for s in seed_list):
+    # arrays (round-8 ADVICE) — the gate declines it and we fall through.
+    seeds = (
+        _small_cols(sources.select(F.col(node_col).alias("node")), BFS_DRIVER_LIMIT, True)
+        if cols is not None and len(cols["__s"]) else None
+    )
+    if seeds is not None:
         import numpy as np
 
         node_arr, indptr, nbr = _csr_adjacency(cols["__s"], cols["__d"])
-        seed_vals = np.unique(np.array(seed_list))
+        seed_vals = np.unique(seeds["node"])
         pos = np.searchsorted(node_arr, seed_vals)
         in_graph = (pos < len(node_arr)) & (node_arr[np.minimum(pos, len(node_arr) - 1)] == seed_vals)
         dist = _csr_bfs(indptr, nbr, pos[in_graph], max_hops)
@@ -502,6 +512,14 @@ def pagerank_fixedpoint(
     # multiplicity, same int64 overflow envelope as the distributed
     # bigint plan — instead of scheduling 2-3 jobs per iteration
     cols = _small_cols(e, RANK_DRIVER_LIMIT)
+    if cols is not None and len(cols["__src"]) and seeds is not None:
+        # NULL seeds drop out of the distributed left-semi join against
+        # the node set, so filtering them first is value-identical; a
+        # seed list the gate declines sends the call distributed
+        seed_cols = _small_cols(
+            seeds.select("node").where(F.col("node").isNotNull()), RANK_DRIVER_LIMIT, True
+        )
+        cols = cols if seed_cols is not None else None
     if cols is not None and len(cols["__src"]):
         import numpy as np
 
@@ -523,17 +541,7 @@ def pagerank_fixedpoint(
             )
             r_arr = np.full(n_all, scale // n_all, dtype=np.int64)
         else:
-            # NULL seeds drop out of the distributed left-semi join
-            # against the node set; filtering here is value-identical
-            # (and np.unique cannot hold None)
-            # collect without .distinct(): np.unique dedups, and the
-            # distinct's shuffle is an extra AQE stage job per build
-            seed_vals = np.unique(
-                np.array([row[0] for row in
-                          seeds.select("node").collect()
-                          if row[0] is not None])
-            )
-            is_seed = np.isin(node_arr, seed_vals)
+            is_seed = np.isin(node_arr, seed_cols["node"])
             n_base = int(is_seed.sum())
             if n_base == 0:
                 raise ValueError(
@@ -716,16 +724,18 @@ def sssp_bounded(
         F.col(weight).cast("bigint").alias("__w"),
     ).localCheckpoint(eager=False)
     cols = _small_cols(e, BFS_DRIVER_LIMIT)
-    if cols is not None:
+    # a NULL seed (its (NULL, 0) row) is left to the distributed plan
+    seeds = (
+        _small_cols(sources.select(F.col(node_col).alias("node")), BFS_DRIVER_LIMIT, True)
+        if cols is not None else None
+    )
+    if seeds is not None:
         adj: dict = {}
         for u, v, w in zip(
             cols["__s"].tolist(), cols["__d"].tolist(), cols["__w"].tolist()
         ):
             adj.setdefault(u, []).append((v, w))
-        # collect without .distinct(): the dict collapses duplicates,
-        # and the distinct's shuffle is an extra AQE stage job per build
-        best = {s: 0 for (s,) in sources.select(
-            F.col(node_col).alias("node")).collect()}
+        best = dict.fromkeys(seeds["node"].tolist(), 0)
         frontier = dict(best)
         for _ in range(max_hops):
             cand: dict = {}
@@ -934,7 +944,16 @@ def harmonic_centrality(
         F.col(src).alias("__s"), F.col(dst).alias("__d")
     ).localCheckpoint(eager=False)
     cols = _small_cols(e, RANK_DRIVER_LIMIT)
-    if cols is not None and len(cols["__s"]):
+    # NULL seeds never match the labeled-BFS equi-join distributed, so
+    # filtering them first is value-identical
+    seeds = (
+        _small_cols(
+            sources.select(F.col(node_col).alias("node")).where(F.col("node").isNotNull()),
+            RANK_DRIVER_LIMIT, True,
+        )
+        if cols is not None and len(cols["__s"]) else None
+    )
+    if seeds is not None:
         import numpy as np
 
         src_a = cols["__s"]
@@ -943,23 +962,11 @@ def harmonic_centrality(
         n = len(node_arr)
         sidx = np.searchsorted(node_arr, src_a)
         didx = np.searchsorted(node_arr, dst_a)
-        # NULL seeds never match the labeled-BFS equi-join distributed,
-        # so filtering them here is value-identical (sorted() would
-        # TypeError on None — round-8 ADVICE)
-        # collect without .distinct(): the set dedups, and the
-        # distinct's shuffle is an extra AQE stage job per build
-        seed_vals = sorted(
-            {row[0] for row in sources.select(
-                F.col(node_col).alias("node")).collect()
-             if row[0] is not None}
-        )
         # seeds outside the edge set reach nothing — they only matter
         # for the include_sources filter below
-        pos = np.searchsorted(node_arr, np.array(seed_vals)) if seed_vals else np.array([], dtype=np.int64)
-        in_graph = (
-            (pos < n) & (node_arr[np.minimum(pos, n - 1)] == np.array(seed_vals))
-            if seed_vals else np.array([], dtype=bool)
-        )
+        seed_vals = np.unique(seeds["node"])
+        pos = np.searchsorted(node_arr, seed_vals)
+        in_graph = (pos < n) & (node_arr[np.minimum(pos, n - 1)] == seed_vals)
         gpos = pos[in_graph]
         nchunks = max(1, -(-int(in_graph.sum()) // 64))
         reach = np.zeros((n, nchunks), dtype=np.uint64)

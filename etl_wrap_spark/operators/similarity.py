@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_wrap_spark.session import _scoped_conf
+from etl_wrap_spark.operators.graph import _small_cols
 
 DIM = 64
 
@@ -463,41 +463,34 @@ def _sql_double_arrays(arrs) -> str:
     return "array(" + ",".join(_sql_doubles(a) for a in arrs) + ")"
 
 
-def _collect_small(df: DataFrame):
-    """collect() a provably tiny index frame (centroids / codebooks) with
-    AQE off for just this action: AQE's stage-by-stage materialization
-    schedules 2 extra jobs per shuffle (measured: the codebook collect is
-    3 jobs with AQE, 1 without) and buys nothing for a <= few-thousand-row
-    result; values are unchanged — AQE never affects results. The flip
-    is session-global around this one action; ``session._scoped_conf``
-    restores it and states the single-session invariant it relies on."""
-    with _scoped_conf(df.sparkSession, "spark.sql.adaptive.enabled", "false"):
-        return df.collect()
-
-
 def _centroid_rows(cent: DataFrame, n_cells: int | None):
-    """Collect (cell, kv, kn) for the literal fast path, or None when it
-    must not apply: unknown/large cell count, non-contiguous cell ids, or
-    non-finite values (repr round-trip is only pinned for finite doubles).
-    kn is computed in the JVM BEFORE collecting so the norm bits are the
-    ones the distributed path would have used."""
-    import math
+    """Collect (cell, kv, kn) for the literal fast path through the
+    ``graph._small_cols`` gate (≤ ``IVF_DRIVER_CENT_LIMIT`` rows, no
+    probe: a centroid frame of ``n_cells`` rows is known small), or None
+    when it must not apply: unknown/large cell count, the gate declines
+    (driver headroom, a NULL cell/kv/kn), non-contiguous cell ids, or
+    non-finite values (repr round-trip is only pinned for finite
+    doubles). kn is computed in the JVM BEFORE collecting so the norm
+    bits are the ones the distributed path would have used."""
+    import numpy as np
 
     if n_cells is None or n_cells > IVF_DRIVER_CENT_LIMIT:
         return None
-    rows = _collect_small(cent.withColumn("__kn", norm_expr("kv")).select("cell", "kv", "__kn"))
-    if not rows or len(rows) > IVF_DRIVER_CENT_LIMIT:
+    cols = _small_cols(
+        cent.withColumn("__kn", norm_expr("kv")).select("cell", "kv", "__kn"),
+        IVF_DRIVER_CENT_LIMIT, True,
+    )
+    if cols is None or not len(cols["cell"]):
         return None
-    rows.sort(key=lambda r: r["cell"])
+    order = np.argsort(cols["cell"], kind="stable")
+    cells, kvs, kns = cols["cell"][order], cols["kv"][order], cols["__kn"][order]
+    if not np.array_equal(cells, np.arange(1, len(cells) + 1)):
+        return None
     out = []
-    for i, r in enumerate(rows):
-        if r["cell"] != i + 1 or r["kv"] is None or r["__kn"] is None:
+    for i, (kv, kn) in enumerate(zip(kvs, kns.tolist())):
+        if not (np.isfinite(kv).all() and np.isfinite(kn)):
             return None
-        kv = [float(x) for x in r["kv"]]
-        kn = float(r["__kn"])
-        if not all(math.isfinite(x) for x in kv) or not math.isfinite(kn):
-            return None
-        out.append((i + 1, kv, kn))
+        out.append((i + 1, np.asarray(kv, dtype=np.float64).tolist(), kn))
     return out
 
 
@@ -936,22 +929,20 @@ def _pq_residual_lit(
 
 
 def _codebook_rows(cb: DataFrame, m: int, ks: int):
-    """Collect {m: [cw for j=1..ks]} for the literal encode/LUT path, or
-    None when the codebook is not the contiguous finite m x ks grid the
-    literal indexing assumes."""
-    import math
+    """Collect {m: [cw for j=1..ks]} for the literal encode/LUT path
+    through the ``graph._small_cols`` gate (m x ks rows by construction,
+    so no probe), or None when the gate declines or the codebook is not
+    the contiguous finite m x ks grid the literal indexing assumes."""
+    import numpy as np
 
-    rows = _collect_small(cb.select("m", "j", "cw"))
-    if len(rows) != m * ks:
+    cols = _small_cols(cb.select("m", "j", "cw"), m * ks, True)
+    if cols is None or len(cols["m"]) != m * ks:
         return None
     grid: dict[int, dict[int, list[float]]] = {}
-    for r in rows:
-        if r["cw"] is None:
+    for mi, j, cw in zip(cols["m"].tolist(), cols["j"].tolist(), cols["cw"]):
+        if not np.isfinite(cw).all():
             return None
-        cw = [float(x) for x in r["cw"]]
-        if not all(math.isfinite(x) for x in cw):
-            return None
-        grid.setdefault(int(r["m"]), {})[int(r["j"])] = cw
+        grid.setdefault(mi, {})[j] = np.asarray(cw, dtype=np.float64).tolist()
     out = {}
     for mi in range(m):
         per = grid.get(mi)

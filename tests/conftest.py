@@ -19,12 +19,14 @@ def spark():
 @pytest.fixture
 def distributed(monkeypatch):
     """Pins the route of the size-gated graph/dedup/hierarchy operators
-    through their one deployment setting, the driver-headroom floor
-    ``SPARK_GRAFT_FASTPATH_MIN_MB``: the test body runs with 0 (the
-    guard is off, so a small input takes the driver kernel on any
-    host), and inside ``with distributed():`` the floor is 2^40 MB, so
-    every ``graph._small_cols`` gate declines before it runs a job and
-    the operator builds its distributed plan."""
+    and of the IVF centroid / PQ codebook literals (``ivf_topk``,
+    ``semantic_dedup``, ``ivfpq_topk``) through their one deployment
+    setting, the driver-headroom floor ``SPARK_GRAFT_FASTPATH_MIN_MB``:
+    the test body runs with 0 (the guard is off, so a small input takes
+    the driver kernel or the literal on any host), and inside
+    ``with distributed():`` the floor is 2^40 MB, so every
+    ``graph._small_cols`` gate declines before it runs a job and the
+    operator builds its distributed plan."""
     key = "SPARK_GRAFT_FASTPATH_MIN_MB"
     monkeypatch.setenv(key, "0")
 

@@ -5,7 +5,8 @@ The graph/dedup size-gated fast paths cross the JVM boundary through
 and `_driver_result` (driver result → DataFrame as one Arrow batch).
 These tests pin the contract the union-find / CSR consumers rely on:
 values, row counts, the null flag that routes back to the distributed
-path, the empty-frame shape, the toPandas fallback, and conf restore.
+path, the empty-frame shape, the toPandas fallback, and conf restore
+(the gate's scoped AQE flip included).
 """
 
 import pytest
@@ -68,10 +69,10 @@ def _set_conf(spark, key, value):
         spark.conf.set(key, value)
 
 
-def test_driver_result_roundtrip_and_conf_restore(spark):
+def test_driver_result_roundtrip_and_conf_restore(spark, distributed):
     import numpy as np
 
-    from etl_wrap_spark.operators.similarity import _collect_small
+    from etl_wrap_spark.operators.graph import _small_cols
 
     pinned = spark.createDataFrame([(1, 2)], "u long, v long")
     batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -94,8 +95,20 @@ def test_driver_result_roundtrip_and_conf_restore(spark):
             assert spark.conf.get(batch, None) == prev  # batch-size pin is scoped
         for prev in (None, "true"):
             _set_conf(spark, aqe, prev)
-            assert sorted(r.id for r in _collect_small(spark.range(3))) == [0, 1, 2]
+            assert sorted(_small_cols(spark.range(3), 3)["id"].tolist()) == [0, 1, 2]
             assert spark.conf.get(aqe, None) == prev  # the AQE flip is scoped
+        # the gate's probe and collect run as static plans: on a pinned
+        # frame with an upstream shuffle that is one count job and one
+        # collect job (AQE would run the count's map stage as a third)
+        pinned = (
+            spark.range(64).groupBy((F.col("id") % 8).alias("k")).count()
+            .localCheckpoint(eager=False)
+        )
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        j0 = dag.nextJobId()
+        cols = _small_cols(pinned, 8)
+        assert dag.nextJobId() - j0 == 2
+        assert sorted(cols["k"].tolist()) == list(range(8))
     finally:
         for k, v in saved.items():
             _set_conf(spark, k, v)

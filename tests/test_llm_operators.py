@@ -1357,11 +1357,12 @@ def test_ivf_assign_blas_equals_expression_path(spark):
         assert abs(ne[k] - nb[k]) < 1e-9
 
 
-def test_ivf_assign_lit_equals_distributed(spark):
+def test_ivf_assign_lit_equals_distributed(spark, distributed):
     """Round-12 driver-held-centroid fast path: the map-only literal
     assignment must be BIT-identical to the distributed crossJoin+groupBy
     path (same fold order, same (aff, -cell) tie-break), and the gate
-    must refuse malformed centroid frames."""
+    must refuse malformed centroid frames and a driver without
+    headroom."""
     import struct as st
 
     import numpy as np
@@ -1394,9 +1395,12 @@ def test_ivf_assign_lit_equals_distributed(spark):
 
     gappy = cent.where(F.col("cell") != 3)
     assert similarity._centroid_rows(gappy, 5) is None
+    # the literal collects through the one driver gate, headroom included
+    with distributed():
+        assert similarity._centroid_rows(cent, 5) is None
 
 
-def test_ivfpq_topk_lit_equals_distributed(spark):
+def test_ivfpq_topk_lit_equals_distributed(spark, distributed):
     """The full IVF-PQ cascade (residual -> codebook -> encode -> LUT ->
     ADC rank) must return identical rows with the literal fast path on
     and off — including the codebook grid collected for the encode."""
@@ -1421,16 +1425,12 @@ def test_ivfpq_topk_lit_equals_distributed(spark):
         ]
 
     fast = run()
-    saved = similarity.IVF_DRIVER_CENT_LIMIT
-    try:
-        similarity.IVF_DRIVER_CENT_LIMIT = 0
+    with distributed():
         slow = run()
-    finally:
-        similarity.IVF_DRIVER_CENT_LIMIT = saved
     assert fast == slow and len(fast) > 0
 
 
-def test_ivf_probe_selection_null_affinity_parity(spark):
+def test_ivf_probe_selection_null_affinity_parity(spark, distributed):
     """NULL affinities sort last in the literal probe selection, as in
     the distributed window (aff DESC NULLS LAST, cell ASC). A short
     centroid gives NULL affinity against full-length queries; a NULL or
@@ -1465,12 +1465,8 @@ def test_ivf_probe_selection_null_affinity_parity(spark):
         ]
 
     fast = run()
-    saved = similarity.IVF_DRIVER_CENT_LIMIT
-    try:
-        similarity.IVF_DRIVER_CENT_LIMIT = 0
+    with distributed():
         slow = run()
-    finally:
-        similarity.IVF_DRIVER_CENT_LIMIT = saved
     assert fast == slow
     assert {qid for qid, _, _ in fast} == set(range(1, 7))
 
@@ -2898,6 +2894,7 @@ def test_graph_fast_paths_tolerate_nulls(spark, distributed):
         bfs_hops,
         harmonic_centrality,
         pagerank_fixedpoint,
+        sssp_bounded,
     )
 
     edges = spark.createDataFrame(
@@ -2909,6 +2906,14 @@ def test_graph_fast_paths_tolerate_nulls(spark, distributed):
         s = {(r.node, r.hops)
              for r in bfs_hops(edges, seeds, max_hops=2).collect()}
     assert f == s and (None, 0) in f
+    # sssp: the NULL seed sits at cost 0 on both routes (the gate sends
+    # a seed list holding a NULL to the distributed plan)
+    fs = {(r.node, r.cost) for r in sssp_bounded(
+        edges.withColumn("w", F.lit(1)), seeds, max_hops=2).collect()}
+    with distributed():
+        ss = {(r.node, r.cost) for r in sssp_bounded(
+            edges.withColumn("w", F.lit(1)), seeds, max_hops=2).collect()}
+    assert fs == ss and (None, 0) in fs
     fh = {r.node: (r.n_sources, r.harmonic_micro)
           for r in harmonic_centrality(edges, seeds, max_hops=2).collect()}
     with distributed():
@@ -2940,6 +2945,8 @@ def test_fast_paths_decline_without_driver_headroom(spark, monkeypatch, distribu
     # collect helper raises if reached) and each operator returns the
     # rows its driver kernel gives (the fixture's default pins that
     # route)
+    import numpy as np
+
     from etl_wrap_spark.operators import graph
     from etl_wrap_spark.operators.incremental_join import (
         ancestor_closure,
@@ -2955,6 +2962,11 @@ def test_fast_paths_decline_without_driver_headroom(spark, monkeypatch, distribu
     tree = spark.createDataFrame(
         [(i, i // 2) for i in range(2, 24)], "child LONG, parent LONG"
     )
+    rng = np.random.RandomState(4)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)],
+        "vec_id LONG, embedding ARRAY<FLOAT>",
+    )
     runs = {
         "cc": lambda: dedup.connected_components(pairs),
         "flatten": lambda: flatten_hierarchy(tree),
@@ -2964,6 +2976,10 @@ def test_fast_paths_decline_without_driver_headroom(spark, monkeypatch, distribu
         "bfs": lambda: graph.bfs_hops(edges, seeds),
         "sssp": lambda: graph.sssp_bounded(edges, seeds),
         "harmonic": lambda: graph.harmonic_centrality(edges, seeds),
+        "ivf_topk": lambda: similarity.ivf_topk(
+            vecs.where("vec_id % 10 = 0"), vecs, "vec_id", "vec_id", "embedding",
+            k=3, n_cells=4, nprobe=2,
+        ),
     }
     want = {k: sorted(run().collect()) for k, run in runs.items()}
 

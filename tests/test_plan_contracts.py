@@ -258,6 +258,30 @@ def test_catalog_floor_graph_queries_keep_the_driver_route(
     assert seen and all(cols is not None for cols in seen), name
 
 
+@pytest.mark.parametrize(
+    "name, jobs", [("q117_hierarchy_flatten", 2), ("q157_bfs_hops", 5)]
+)
+def test_catalog_floor_graph_queries_build_job_diet(spark, distributed, name, jobs):
+    """Build jobs of the ``catalog_floor`` graph queries. The
+    ``_small_cols`` gate runs its probe and collect with AQE off, so the
+    probe pays no extra stage job: q117 builds in 2 jobs (probe,
+    collect) and q157 in 5, where the AQE-on gate took 3 and 6. Min of
+    2 builds; headroom pinned off by the ``distributed`` fixture."""
+    import os
+
+    sf = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench", "data", "sf0.01",
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    used = []
+    for _ in range(2):
+        j0 = dag.nextJobId()
+        queries()[name](spark, sf)
+        used.append(dag.nextJobId() - j0)
+    assert min(used) <= jobs, (name, used)
+
+
 def test_no_unbounded_unpartitioned_window_catalog_wide(spark):
     """Every unpartitioned WindowExec in every catalog query must sit
     over a limit-bounded subtree (the orderBy+limit-then-rank pattern)
