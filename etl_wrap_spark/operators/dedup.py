@@ -138,21 +138,35 @@ at small scale. Construction chatter only — plans are still analyzed,
 optimized, and executed from scratch per query."""
 
 
+def _cached(key: tuple, build):
+    """``_EXPR_CACHE[key]``, built by ``build()`` on first use."""
+    val = _EXPR_CACHE.get(key)
+    if val is None:
+        val = _EXPR_CACHE[key] = build()
+    return val
+
+
+def _num_hashes(sig: DataFrame) -> int:
+    return sum(1 for c in sig.columns if c.startswith("mh"))
+
+
 def minhash_signatures(sf: DataFrame, id_col: str, num_hashes: int = NUM_HASHES) -> DataFrame:
     """Per-doc MinHash signature columns mh0..mh{N-1} from a shingle frame.
 
-    One shuffle on `id_col`; the min aggregates combine map-side.
+    One shuffle on `id_col`; the min aggregates combine map-side. The
+    explode + groupBy reference form: engine code builds signatures
+    through the shuffle-free minhash_signatures_from_text (the parity
+    tests pin the two value-identical).
     """
-    key = ("mh_aggs", num_hashes)
-    aggs = _EXPR_CACHE.get(key)
-    if aggs is None:
+
+    def build():
         h = hash28("shingle")
-        aggs = [
+        return [
             F.min((F.lit(a) * h + F.lit(b)) % MINHASH_P).alias(f"mh{i}")
             for i, (a, b) in enumerate(minhash_ab(num_hashes))
         ]
-        _EXPR_CACHE[key] = aggs
-    return sf.groupBy(id_col).agg(*aggs)
+
+    return sf.groupBy(id_col).agg(*_cached(("mh_aggs", num_hashes), build))
 
 
 def minhash_signatures_from_text(
@@ -186,46 +200,56 @@ def minhash_signatures_from_text(
         F.col(id_col),
         F.transform(shingles(text_col, n), lambda s: hash28(s)).alias("__hs"),
     )
-    key = ("mh_arr", num_hashes)
-    cols = _EXPR_CACHE.get(key)
-    if cols is None:
-        h = F.col("__hs")
 
-        def perm(a, b):
-            # closure factory: pyspark reads HOF arity off the lambda's
-            # parameter list, so the permutation constants must be
-            # captured, not default-arg'd
-            return lambda x: (F.lit(a) * x + F.lit(b)) % MINHASH_P
+    def perm(a, b):
+        # closure factory: pyspark reads HOF arity off the lambda's
+        # parameter list, so the permutation constants must be
+        # captured, not default-arg'd
+        return lambda x: (F.lit(a) * x + F.lit(b)) % MINHASH_P
 
-        cols = [
-            F.array_min(F.transform(h, perm(a, b))).alias(f"mh{i}")
+    def build():
+        return [
+            F.array_min(F.transform(F.col("__hs"), perm(a, b))).alias(f"mh{i}")
             for i, (a, b) in enumerate(minhash_ab(num_hashes))
         ]
-        _EXPR_CACHE[key] = cols
-    return hashed.select(F.col(id_col), *cols)
+
+    return hashed.select(F.col(id_col), *_cached(("mh_arr", num_hashes), build))
 
 
 def band_keys(sig: DataFrame, id_col: str, band_rows: int = BAND_ROWS) -> DataFrame:
     """Exploded LSH band-key rows (id, band, k0..k{r-1}) from a
     signature frame — the join key surface for both self-join dedup and
     batch-vs-index incremental dedup."""
-    num_hashes = sum(1 for c in sig.columns if c.startswith("mh"))
-    num_bands = num_hashes // band_rows
-    bkey = ("bands", num_hashes, band_rows)
-    bands = _EXPR_CACHE.get(bkey)
-    if bands is None:
-        bands = F.array(
+    num_hashes = _num_hashes(sig)
+    bands = _cached(
+        ("bands", num_hashes, band_rows),
+        lambda: F.array(
             *[
                 F.struct(
                     F.lit(j).alias("band"),
                     *[F.col(f"mh{j * band_rows + r}").alias(f"k{r}") for r in range(band_rows)],
                 )
-                for j in range(num_bands)
+                for j in range(num_hashes // band_rows)
             ]
-        )
-        _EXPR_CACHE[bkey] = bands
+        ),
+    )
     return sig.select(F.col(id_col), F.explode(bands).alias("b")).select(
         id_col, "b.band", *[f"b.k{r}" for r in range(band_rows)]
+    )
+
+
+def _capped(keyed: DataFrame, band_rows: int, max_bucket: int | None) -> DataFrame:
+    """Band-key rows minus the buckets holding more than ``max_bucket``
+    docs (``None`` keeps every bucket) — the hot-bucket guard of
+    lsh_candidate_pairs and incremental_near_dups."""
+    if max_bucket is None:
+        return keyed
+    kcols = [f"k{r}" for r in range(band_rows)]
+    sizes = keyed.groupBy("band", *kcols).agg(F.count(F.lit(1)).alias("__bsz"))
+    return (
+        keyed.join(sizes, on=["band"] + kcols)
+        .where(F.col("__bsz") <= max_bucket)
+        .drop("__bsz")
     )
 
 
@@ -253,15 +277,8 @@ def lsh_candidate_pairs(
     size of a boilerplate cohort carries almost no signal. Pair with
     drop_repeated_segments upstream for the full CCNet-style defense.
     """
-    keyed = band_keys(sig, id_col, band_rows)
+    keyed = _capped(band_keys(sig, id_col, band_rows), band_rows, max_bucket)
     kcols = [f"k{r}" for r in range(band_rows)]
-    if max_bucket is not None:
-        sizes = keyed.groupBy("band", *kcols).agg(F.count(F.lit(1)).alias("__bsz"))
-        keyed = (
-            keyed.join(sizes, on=["band"] + kcols)
-            .where(F.col("__bsz") <= max_bucket)
-            .drop("__bsz")
-        )
     left = keyed.select(F.col(id_col).alias("id_a"), "band", *kcols)
     right = keyed.select(F.col(id_col).alias("id_b"), "band", *kcols)
     on = ["band"] + kcols
@@ -299,45 +316,50 @@ def jaccard_verify(
     )
 
 
+def _sig_side(sig: DataFrame, id_col: str, out_id: str, prefix: str, num_hashes: int) -> DataFrame:
+    """One side of a signature-pair join: ``id_col`` as ``out_id`` and
+    mh{i} as {prefix}mh{i} (``_matches`` compares amh* with bmh*)."""
+    cols = _cached(
+        ("sig_side", id_col, out_id, prefix, num_hashes),
+        lambda: [F.col(id_col).alias(out_id)]
+        + [F.col(f"mh{i}").alias(f"{prefix}mh{i}") for i in range(num_hashes)],
+    )
+    return sig.select(*cols)
+
+
+def _matches(num_hashes: int) -> tuple[Column, Column]:
+    """(matches, est_j_bp) over joined amh*/bmh* columns: the
+    matching-minhash count and its floor(10000 * matches / num_hashes)
+    Jaccard estimate."""
+
+    def build():
+        m = sum(
+            F.when(F.col(f"amh{i}") == F.col(f"bmh{i}"), 1).otherwise(0) for i in range(num_hashes)
+        )
+        est = F.floor(F.lit(10000) * m / F.lit(num_hashes)).cast("bigint").alias("est_j_bp")
+        return m.cast("bigint").alias("matches"), est
+
+    return _cached(("matches", num_hashes), build)
+
+
 def estimate_pairs(sig: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """Matching-minhash Jaccard estimate for candidate pairs →
     (id_a, id_b, est_j_bp). Two joins on the signature frame (~32 ints
     per row — far lighter than shingle arrays); std error ~1/sqrt(num
     hashes) (~0.18 at 32)."""
-    num_hashes = sum(1 for c in sig.columns if c.startswith("mh"))
-    akey = ("est_a", id_col, num_hashes)
-    acols = _EXPR_CACHE.get(akey)
-    if acols is None:
-        acols = [F.col(id_col).alias("id_a")] + [
-            F.col(f"mh{i}").alias(f"amh{i}") for i in range(num_hashes)
-        ]
-        _EXPR_CACHE[akey] = acols
-    bkey = ("est_b", id_col, num_hashes)
-    bcols = _EXPR_CACHE.get(bkey)
-    if bcols is None:
-        bcols = [F.col(id_col).alias("id_b")] + [
-            F.col(f"mh{i}").alias(f"bmh{i}") for i in range(num_hashes)
-        ]
-        _EXPR_CACHE[bkey] = bcols
-    ekey = ("est_j", num_hashes)
-    est = _EXPR_CACHE.get(ekey)
-    if est is None:
-        matches = sum(
-            F.when(F.col(f"amh{i}") == F.col(f"bmh{i}"), 1).otherwise(0) for i in range(num_hashes)
-        )
-        est = F.floor(F.lit(10000) * matches / F.lit(num_hashes)).cast("bigint").alias("est_j_bp")
-        _EXPR_CACHE[ekey] = est
-    a = sig.select(*acols)
-    b = sig.select(*bcols)
-    return pairs.join(a, on="id_a").join(b, on="id_b").select("id_a", "id_b", est)
+    num_hashes = _num_hashes(sig)
+    a = _sig_side(sig, id_col, "id_a", "a", num_hashes)
+    b = _sig_side(sig, id_col, "id_b", "b", num_hashes)
+    return pairs.join(a, on="id_a").join(b, on="id_b").select("id_a", "id_b", _matches(num_hashes)[1])
 
 
-def _collapsed_pairs(df, id_col, text_col, n, pair_fn, directed=False):
-    """Value-class collapse shared by the fuzzy-pair family
-    (MinHash-LSH and the prefix-filtered exact join): group
-    BYTE-IDENTICAL texts into classes (md5 fingerprint, the q22
-    exact-dedup precedent), run ``pair_fn`` on one REPRESENTATIVE per
-    class, then expand class pairs back to id pairs.
+def _collapsed_pairs(df, id_col, text_col, n, kernel, directed=False, **params):
+    """Value-class collapse, the one public route of the fuzzy-pair
+    family (MinHash-LSH, the prefix-filtered exact join, the containment
+    join): group BYTE-IDENTICAL texts into classes (md5 fingerprint, the
+    q22 exact-dedup precedent), run the uncollapsed ``kernel(reps,
+    id_col, text_col, n, **params)`` on one REPRESENTATIVE per class,
+    then expand class pairs back to id pairs.
 
     Sound for any pair predicate that (a) depends only on the two
     texts — Jaccard does — and (b) identical texts always satisfy:
@@ -349,7 +371,7 @@ def _collapsed_pairs(df, id_col, text_col, n, pair_fn, directed=False):
     corpus (sf1 probe) and real-crawl regime where exact clones
     dominate pays clone-quadratic flops in every stage without this.
 
-    ``directed=True`` is the containment-join flavor: ``pair_fn``
+    ``directed=True`` is the containment-join flavor: ``kernel``
     returns DIRECTED (id_a, id_b, inter, n_a) rows, between-class
     expansion preserves direction (no least/greatest re-ordering;
     n_a is a property of a's text, so it carries to every class
@@ -366,10 +388,10 @@ def _collapsed_pairs(df, id_col, text_col, n, pair_fn, directed=False):
     from etl_wrap_spark.session import spread_units
 
     # reps is POST-SHUFFLE (the fingerprint groupBy): AQE coalesces it
-    # to ~1 partition, so it must be re-spread before the pair_fn's
+    # to ~1 partition, so it must be re-spread before the kernel's
     # shingle/minhash map stages (skipping that serialized the family
     # 2.4x — round-6 probe). Spread STATICALLY (spread_units): letting
-    # pair_fn's ensure_min_parallelism probe decide instead costs a
+    # the kernel's ensure_min_parallelism probe decide instead costs a
     # driver job executing the fingerprint groupBy during plan build —
     # the same .rdd-under-AQE trap as the round-6 q214 regression,
     # measured at 3 build jobs / ~0.6 s per CC-family query. The
@@ -379,7 +401,7 @@ def _collapsed_pairs(df, id_col, text_col, n, pair_fn, directed=False):
         classes.select(F.col("__cls").alias(id_col), F.col("__txt").alias(text_col))
     )
     reps._emp_checked = True
-    rep_pairs = pair_fn(reps)
+    rep_pairs = kernel(reps, id_col, text_col, n, **params)
     members = keyed.select(F.col(id_col).alias("__mid"), "__fp").join(
         classes.select("__fp", "__cls"), "__fp"
     ).select("__mid", "__cls")
@@ -438,7 +460,6 @@ def near_dup_pairs_minhash(
     num_perm: int = NUM_HASHES,
     max_bucket: int | None = None,
     est_prefilter_margin_bp: int | None = None,
-    collapse_duplicates: bool = True,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup detection: shingle → signature →
     band join → exact verify, keeping pairs with Jaccard >= den/num
@@ -447,9 +468,9 @@ def near_dup_pairs_minhash(
     returning zero pairs (a degenerate "leakage-safe" split guard,
     round-4 ADVICE).
 
-    ``collapse_duplicates`` (default True) first groups BYTE-IDENTICAL
-    texts into classes (md5 fingerprint, the q22 exact-dedup precedent)
-    and runs the whole shingle→signature→band→verify cascade on one
+    The operator first groups BYTE-IDENTICAL texts into classes (md5
+    fingerprint, the q22 exact-dedup precedent) and runs the whole
+    shingle→signature→band→verify cascade (``_minhash_pairs``) on one
     REPRESENTATIVE per class, expanding id membership afterwards:
     between-class pairs inherit the class verify (Jaccard depends only
     on text), within-class pairs are identical texts (inter = uni =
@@ -488,27 +509,34 @@ def near_dup_pairs_minhash(
     its estimate errs below threshold-margin (binomial tail over
     num_perm hashes — <1e-3 per borderline pair at 32 hashes / margin
     2500). Oracle-checked paths leave this OFF for exactness."""
-    from etl_wrap_spark.session import ensure_min_parallelism
-
     if den > num or num <= 0 or den <= 0:
         raise ValueError(
             f"jaccard threshold is den/num = {den}/{num}; it must lie in "
             "(0, 1] — did you pass (num, den) swapped?"
         )
+    return _collapsed_pairs(
+        df, id_col, text_col, n, _minhash_pairs,
+        num=num, den=den, auto_tune=auto_tune, num_perm=num_perm,
+        max_bucket=max_bucket, est_prefilter_margin_bp=est_prefilter_margin_bp,
+    )
 
-    if collapse_duplicates:
-        return _collapsed_pairs(
-            df,
-            id_col,
-            text_col,
-            n,
-            lambda reps: near_dup_pairs_minhash(
-                reps, id_col, text_col, n=n, num=num, den=den,
-                auto_tune=auto_tune, num_perm=num_perm, max_bucket=max_bucket,
-                est_prefilter_margin_bp=est_prefilter_margin_bp,
-                collapse_duplicates=False,
-            ),
-        )
+
+def _minhash_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    num: int = 2,
+    den: int = 1,
+    auto_tune: bool = False,
+    num_perm: int = NUM_HASHES,
+    max_bucket: int | None = None,
+    est_prefilter_margin_bp: int | None = None,
+) -> DataFrame:
+    """near_dup_pairs_minhash's uncollapsed cascade over every row of
+    ``df`` — the kernel the collapse runs on class representatives,
+    and the reference its equivalence test compares against."""
+    from etl_wrap_spark.session import ensure_min_parallelism
 
     # spread ONCE here so the signature build and the exact-verify
     # text rejoin share a single (reused) exchange instead of each
@@ -539,6 +567,25 @@ def near_dup_pairs_minhash(
         cands = est.where(F.col("est_j_bp") >= thresh_bp).select("id_a", "id_b")
     verified = jaccard_verify(cands, df, id_col, text_col, n)
     return verified.where(F.col("inter") * num >= F.col("uni") * den)
+
+
+def _df_capped(sf: DataFrame, max_df: int | None) -> DataFrame:
+    """A shingle frame minus the shingles occurring in more than
+    ``max_df`` documents (``None`` keeps all) — the single-pass df-cap
+    of exact_jaccard_pairs and contamination_check. Per-doc shingles are
+    distinct (shingles() ends in array_distinct), so COUNT(*) over the
+    shingle partition IS the document frequency, and the window's
+    hash-exchange on `shingle` is reused by the pairing self-join — the
+    old agg + semi-join shape recomputed the shingle explode per branch
+    (measured 7.5s -> 4.4s warm at sf0.1)."""
+    if max_df is None:
+        return sf
+    w = Window.partitionBy("shingle")
+    return (
+        sf.withColumn("__df", F.count(F.lit(1)).over(w))
+        .where(F.col("__df") <= max_df)
+        .drop("__df")
+    )
 
 
 def exact_jaccard_pairs(
@@ -576,19 +623,7 @@ def exact_jaccard_pairs(
 
     df = ensure_min_parallelism(df)  # shared by index AND the sizes branch
     sf = shingle_frame(df, id_col, text_col, n)
-    if max_df is not None:
-        # single-pass df-cap: per-doc shingles are distinct (shingles()
-        # ends in array_distinct) so COUNT(*) over the shingle partition
-        # IS the document frequency, and the window's hash-exchange on
-        # `shingle` is reused by the pairing self-join below — the old
-        # agg + semi-join shape recomputed the shingle explode per
-        # branch (measured 7.5s -> 4.4s warm at sf0.1).
-        w = Window.partitionBy("shingle")
-        sf = (
-            sf.withColumn("__df", F.count(F.lit(1)).over(w))
-            .where(F.col("__df") <= max_df)
-            .drop("__df")
-        )
+    sf = _df_capped(sf, max_df)
     a = sf.select(F.col(id_col).alias("id_a"), "shingle")
     b = sf.select(F.col(id_col).alias("id_b"), "shingle")
     inter = (
@@ -617,7 +652,6 @@ def prefix_jaccard_pairs(
     n: int = 3,
     num: int = 5,
     den: int = 4,
-    collapse_duplicates: bool = True,
 ) -> DataFrame:
     """LOSSLESS prefix-filtered exact Jaccard join — the All-Pairs /
     PPJoin family (Bayardo, Ma & Srikant, WWW'07; Xiao et al., WWW'08)
@@ -659,6 +693,12 @@ def prefix_jaccard_pairs(
     catalog query documents that posture, the small-sf plan just
     recomputes the linear explode.
 
+    Like near_dup_pairs_minhash, the operator runs the filter on one
+    representative per class of byte-identical texts
+    (``_prefix_pairs`` is the uncollapsed kernel) and expands the
+    class pairs afterwards — prefix/candidate/verify work is linear in
+    DISTINCT texts, the output row-for-row the kernel's.
+
     Extension surface beyond the reference (training-data curation);
     reference ships no similarity ops (SURVEY §7.1 M9).
     """
@@ -667,32 +707,53 @@ def prefix_jaccard_pairs(
             f"threshold J >= den/num = {den}/{num} > 1 can never match "
             "(num=5, den=4 means J >= 0.8)"
         )
-    if collapse_duplicates:
-        # value-class collapse (default, as in near_dup_pairs_minhash):
-        # prefix/candidate/verify work linear in DISTINCT texts
-        return _collapsed_pairs(
-            df,
-            id_col,
-            text_col,
-            n,
-            lambda reps: prefix_jaccard_pairs(
-                reps, id_col, text_col, n=n, num=num, den=den,
-                collapse_duplicates=False,
-            ),
-        )
+    return _collapsed_pairs(df, id_col, text_col, n, _prefix_pairs, num=num, den=den)
+
+
+def _ranked_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """The prefix-filter index: (id, shingle, __df, __r, __n) — each
+    doc's shingles ranked by GLOBAL document frequency ascending
+    (rarest first, shingle string breaking ties), with the doc's set
+    size. The df window's hash-exchange on `shingle` is the one the
+    prefix self-join reuses (exact_jaccard_pairs' single-pass-cap
+    lesson)."""
     sf = shingle_frame(df, id_col, text_col, n)
-    # global df of each shingle via a window: the hash-exchange on
-    # `shingle` is the same one the prefix self-join needs (q43's
-    # single-pass-cap lesson, dedup.py:436)
     sf = sf.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
     w_rank = Window.partitionBy(id_col).orderBy("__df", "shingle")
-    ranked = (
+    return (
         sf.withColumn("__r", F.row_number().over(w_rank))
         .withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
     )
-    # prefix length p = n - ceil(t*n) + 1, exact in integers
+
+
+def _prefix_len_ok(num: int, den: int) -> Column:
+    """A ranked row lies in its doc's prefix for threshold den/num:
+    rank <= n - ceil(den*n/num) + 1, exact in integers."""
     alpha = F.floor((F.lit(den) * F.col("__n") + num - 1) / num).cast("bigint")
-    prefix = ranked.where(F.col("__r") <= F.col("__n") - alpha + 1)
+    return F.col("__r") <= F.col("__n") - alpha + 1
+
+
+def _with_sets(cand: DataFrame, ranked: DataFrame, id_col: str) -> DataFrame:
+    """Candidate (id_a, id_b) pairs joined to both docs' FULL shingle
+    sets (__sa, __sb) for the exact array_intersect verify."""
+    sets = ranked.groupBy(id_col).agg(F.collect_set("shingle").alias("__set"))
+    return cand.join(
+        sets.select(F.col(id_col).alias("id_a"), F.col("__set").alias("__sa")),
+        on="id_a",
+    ).join(
+        sets.select(F.col(id_col).alias("id_b"), F.col("__set").alias("__sb")),
+        on="id_b",
+    )
+
+
+def _prefix_pairs(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3, num: int = 5, den: int = 4
+) -> DataFrame:
+    """prefix_jaccard_pairs' uncollapsed kernel over every row of
+    ``df`` (the collapse's per-representative step and the reference
+    its equivalence test compares against)."""
+    ranked = _ranked_shingles(df, id_col, text_col, n)
+    prefix = ranked.where(_prefix_len_ok(num, den))
     a = prefix.select(
         F.col(id_col).alias("id_a"), F.col("__n").alias("n_a"), "shingle"
     )
@@ -709,16 +770,8 @@ def prefix_jaccard_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    sets = ranked.groupBy(id_col).agg(F.collect_set("shingle").alias("__set"))
     return (
-        cand.join(
-            sets.select(F.col(id_col).alias("id_a"), F.col("__set").alias("__sa")),
-            on="id_a",
-        )
-        .join(
-            sets.select(F.col(id_col).alias("id_b"), F.col("__set").alias("__sb")),
-            on="id_b",
-        )
+        _with_sets(cand, ranked, id_col)
         .select(
             "id_a",
             "id_b",
@@ -738,7 +791,6 @@ def containment_pairs(
     n: int = 3,
     num: int = 10,
     den: int = 9,
-    collapse_duplicates: bool = True,
 ) -> DataFrame:
     """ASYMMETRIC shingle-containment join: every DIRECTED pair with
     C(a→b) = |Sa ∩ Sb| / |Sa| >= den/num → (id_a, id_b, inter, n_a),
@@ -759,35 +811,28 @@ def containment_pairs(
     At 100 TB the full b-side posting list is the cost of asymmetry —
     run the symmetric join first and this only on the residual short
     docs if container volume dominates.
+
+    Runs on one representative per class of byte-identical texts
+    (``_containment_pairs`` is the uncollapsed kernel; clone corpora
+    otherwise pay clone-quadratic candidates on the full-posting
+    b-side — measured 6.9s -> ~1s at the replicated sf1).
     """
     if den > num:
         raise ValueError(
             f"threshold C >= den/num = {den}/{num} > 1 can never match"
         )
-    if collapse_duplicates:
-        # value-class collapse, directed flavor (clone corpora pay
-        # clone-quadratic candidates on the full-posting b-side
-        # otherwise: measured 6.9s -> ~1s at the replicated sf1)
-        return _collapsed_pairs(
-            df,
-            id_col,
-            text_col,
-            n,
-            lambda reps: containment_pairs(
-                reps, id_col, text_col, n=n, num=num, den=den,
-                collapse_duplicates=False,
-            ),
-            directed=True,
-        )
-    sf = shingle_frame(df, id_col, text_col, n)
-    sf = sf.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
-    w_rank = Window.partitionBy(id_col).orderBy("__df", "shingle")
-    ranked = (
-        sf.withColumn("__r", F.row_number().over(w_rank))
-        .withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
+    return _collapsed_pairs(
+        df, id_col, text_col, n, _containment_pairs, directed=True, num=num, den=den
     )
-    alpha = F.floor((F.lit(den) * F.col("__n") + num - 1) / num).cast("bigint")
-    a = ranked.where(F.col("__r") <= F.col("__n") - alpha + 1).select(
+
+
+def _containment_pairs(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3, num: int = 10, den: int = 9
+) -> DataFrame:
+    """containment_pairs' uncollapsed kernel over every row of ``df``:
+    the a-side indexes its prefix, the b-side all of its shingles."""
+    ranked = _ranked_shingles(df, id_col, text_col, n)
+    a = ranked.where(_prefix_len_ok(num, den)).select(
         F.col(id_col).alias("id_a"), F.col("__n").alias("n_a"), "shingle"
     )
     b = ranked.select(
@@ -800,16 +845,8 @@ def containment_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    sets = ranked.groupBy(id_col).agg(F.collect_set("shingle").alias("__set"))
     return (
-        cand.join(
-            sets.select(F.col(id_col).alias("id_a"), F.col("__set").alias("__sa")),
-            on="id_a",
-        )
-        .join(
-            sets.select(F.col(id_col).alias("id_b"), F.col("__set").alias("__sb")),
-            on="id_b",
-        )
+        _with_sets(cand, ranked, id_col)
         .select(
             "id_a",
             "id_b",
@@ -847,26 +884,23 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     df = ensure_min_parallelism(df)
     toks = df.select(F.col(id_col), F.explode(F.array_distinct(tokens(text_col))).alias("tok"))
-    skey = ("simhash_sums",)
-    sums = _EXPR_CACHE.get(skey)
-    if sums is None:
+
+    def sums():
         h = hash60("tok")
-        sums = [
+        return [
             F.sum(F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"s{j}")
             for j in range(SIMHASH_BITS)
         ]
-        _EXPR_CACHE[skey] = sums
-    agg = toks.groupBy(id_col).agg(*sums)
-    gkey = ("simhash_sig",)
-    sig = _EXPR_CACHE.get(gkey)
-    if sig is None:
-        sig = None
+
+    def sig():
+        acc = None
         for j in range(SIMHASH_BITS):
             bit = F.when(F.col(f"s{j}") > 0, F.lit(2**j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-            sig = bit if sig is None else sig + bit
-        sig = sig.alias("simhash")
-        _EXPR_CACHE[gkey] = sig
-    return agg.select(F.col(id_col), sig)
+            acc = bit if acc is None else acc + bit
+        return acc.alias("simhash")
+
+    agg = toks.groupBy(id_col).agg(*_cached(("simhash_sums",), sums))
+    return agg.select(F.col(id_col), _cached(("simhash_sig",), sig))
 
 
 def simhash_near_pairs(sig: DataFrame, id_col: str, max_hamming: int = 3, band_bits: int = 15) -> DataFrame:
@@ -909,8 +943,11 @@ def signature_index(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Da
     batches arrive (parquet/foreachBatch); it is ~num_hashes ints per
     document regardless of text size, so the index for a 100 TB corpus
     is a few hundred GB that joins by band key — the corpus text is
-    never rescanned."""
-    return minhash_signatures(shingle_frame(df, id_col, text_col, n), id_col)
+    never rescanned. Built shuffle-free (minhash_signatures_from_text)
+    after the under-partitioned-scan spread."""
+    from etl_wrap_spark.session import ensure_min_parallelism
+
+    return minhash_signatures_from_text(ensure_min_parallelism(df), id_col, text_col, n)
 
 
 def incremental_near_dups(
@@ -919,7 +956,6 @@ def incremental_near_dups(
     id_col: str,
     band_rows: int = BAND_ROWS,
     max_bucket: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup candidates of a NEW batch against the EXISTING signature
     index → (id_new, id_idx, matches, est_j_bp).
@@ -939,52 +975,29 @@ def incremental_near_dups(
     batch vs a 1e5-doc index produced 8.4e5 candidate rows uncapped,
     ~115x the 1e4-index count, all from boilerplate cohorts).
 
-    ``materialize`` (default on): each signature frame is referenced
-    TWICE below (band keys + the estimate join), and when the caller
-    composes it straight from text (signature_index) rather than
-    reading a persisted index, Catalyst would rebuild the whole
+    Both signature frames are pinned (localCheckpoint): each is
+    referenced TWICE below (band keys + the estimate join), and when
+    the caller composes it straight from text (signature_index) rather
+    than reading a persisted index, Catalyst would rebuild the whole
     shingle→minhash subtree per reference — measured 28s → 3.8s at
-    sf0.1. The frames are sketch-sized (~32 ints/doc), so the eager
-    localCheckpoint is the persisted-index posture in miniature; pass
-    False when the inputs are already materialized parquet reads."""
-    if materialize:
-        batch_sig = batch_sig.localCheckpoint(eager=False)
-        index_sig = index_sig.localCheckpoint(eager=False)
-    num_hashes = sum(1 for c in batch_sig.columns if c.startswith("mh"))
+    sf0.1. The frames are sketch-sized (~32 ints/doc), so the pin is
+    the persisted-index posture in miniature."""
+    batch_sig = batch_sig.localCheckpoint(eager=False)
+    index_sig = index_sig.localCheckpoint(eager=False)
+    num_hashes = _num_hashes(batch_sig)
     bk = band_keys(batch_sig, id_col, band_rows)
-    ik = band_keys(index_sig, id_col, band_rows)
+    ik = _capped(band_keys(index_sig, id_col, band_rows), band_rows, max_bucket)
     kcols = [f"k{r}" for r in range(band_rows)]
-    if max_bucket is not None:
-        sizes = ik.groupBy("band", *kcols).agg(F.count(F.lit(1)).alias("__bsz"))
-        ik = (
-            ik.join(sizes, on=["band"] + kcols)
-            .where(F.col("__bsz") <= max_bucket)
-            .drop("__bsz")
-        )
     pairs = (
         bk.select(F.col(id_col).alias("id_new"), "band", *kcols)
         .join(ik.select(F.col(id_col).alias("id_idx"), "band", *kcols), on=["band"] + kcols)
         .select("id_new", "id_idx")
         .distinct()
     )
-    a = batch_sig.select(
-        F.col(id_col).alias("id_new"), *[F.col(f"mh{i}").alias(f"amh{i}") for i in range(num_hashes)]
-    )
-    b = index_sig.select(
-        F.col(id_col).alias("id_idx"), *[F.col(f"mh{i}").alias(f"bmh{i}") for i in range(num_hashes)]
-    )
-    matches = sum(
-        F.when(F.col(f"amh{i}") == F.col(f"bmh{i}"), 1).otherwise(0) for i in range(num_hashes)
-    )
-    return (
-        pairs.join(a, on="id_new")
-        .join(b, on="id_idx")
-        .select(
-            "id_new",
-            "id_idx",
-            matches.cast("bigint").alias("matches"),
-            F.floor(F.lit(10000) * matches / F.lit(num_hashes)).cast("bigint").alias("est_j_bp"),
-        )
+    a = _sig_side(batch_sig, id_col, "id_new", "a", num_hashes)
+    b = _sig_side(index_sig, id_col, "id_idx", "b", num_hashes)
+    return pairs.join(a, on="id_new").join(b, on="id_idx").select(
+        "id_new", "id_idx", *_matches(num_hashes)
     )
 
 
@@ -1018,15 +1031,7 @@ def contamination_check(
     tsf = shingle_frame(train, id_col, text_col, n).select(
         F.col(id_col).alias("train_id"), "shingle"
     )
-    if max_df is not None:
-        # same single-pass windowed df-cap as exact_jaccard_pairs (per-doc
-        # shingles are distinct, so COUNT(*) == document frequency)
-        w = Window.partitionBy("shingle")
-        tsf = (
-            tsf.withColumn("__df", F.count(F.lit(1)).over(w))
-            .where(F.col("__df") <= max_df)
-            .drop("__df")
-        )
+    tsf = _df_capped(tsf, max_df)
     esf = shingle_frame(evals, id_col, text_col, n).select(
         F.col(id_col).alias("eval_id"), "shingle"
     )
@@ -1245,7 +1250,6 @@ def drop_repeated_segments(
     text_col: str,
     delim: str = "\n",
     min_docs: int = 2,
-    broadcast_hot: bool = True,
 ) -> DataFrame:
     """CCNet-style repeated-segment removal: drop every line/paragraph that
     occurs in >= ``min_docs`` distinct documents (boilerplate headers,
@@ -1260,9 +1264,7 @@ def drop_repeated_segments(
     counts; the "hot" set (segments with df >= min_docs) is the
     heavy-hitter tail — bounded by total_segments / min_docs and in
     practice tiny relative to the corpus — so it broadcasts and the
-    anti-join is shuffle-free. Set ``broadcast_hot=False`` on corpora
-    where boilerplate is a large fraction and let AQE pick the strategy.
-    Reassembly is one shuffle on the document id.
+    anti-join is shuffle-free. Reassembly is one shuffle on the document id.
 
     Reference parity: this is a corpus-curation addition (no ETL-Wrap
     analogue); semantics follow CCNet's paragraph-hash dedup.
@@ -1279,9 +1281,7 @@ def drop_repeated_segments(
         .where(F.col("__df") >= min_docs)
         .select("__seg")
     )
-    if broadcast_hot:
-        hot = F.broadcast(hot)
-    kept = seg.join(hot, "__seg", "left_anti")
+    kept = seg.join(F.broadcast(hot), "__seg", "left_anti")
     totals = seg.groupBy(id_col).agg(F.count(F.lit(1)).alias("__total"))
     rebuilt = kept.groupBy(id_col).agg(
         F.concat_ws(

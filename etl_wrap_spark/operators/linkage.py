@@ -65,7 +65,6 @@ def fuzzy_join(
     block: str = "prefix",
     max_df: int | None = None,
     dist_col: str = "dist",
-    collapse_duplicates: bool = True,
 ) -> DataFrame:
     """Blocked edit-distance join.
 
@@ -91,9 +90,10 @@ def fuzzy_join(
     ``max_df`` to drop hot grams with the documented recall cost; the
     verify stage is exact in every mode.
 
-    ``collapse_duplicates`` (default True) runs blocking + verify on
-    the DISTINCT VALUES of each side and expands id membership after:
-    the result is row-for-row identical, but duplicate-heavy inputs pay
+    Blocking + verify run on the DISTINCT VALUES of each side
+    (``_fuzzy_pairs``, the uncollapsed kernel) and id membership is
+    expanded after: the result is row-for-row the kernel's over the
+    rows themselves, but duplicate-heavy inputs pay
     levenshtein once per value PAIR instead of once per row pair. The
     round-5 synthetic-sf1 probe measured the difference: 10k rows over
     64 distinct names produce 1.66M output pairs (the output itself is
@@ -111,6 +111,31 @@ def fuzzy_join(
         raise ValueError("left_id and right_id must differ (alias one side first)")
     if block not in ("prefix", "all"):
         raise ValueError("block must be 'prefix' or 'all'")
+    # value-class linkage: each side's distinct value string is its own
+    # class id; block+verify once per value pair, then expand row
+    # membership with two hash joins
+    lv = left.select(F.col(left_col).alias("__clv")).distinct()
+    rv = right.select(F.col(right_col).alias("__crv")).distinct()
+    vpairs = _fuzzy_pairs(
+        lv, rv, "__clv", "__clv", "__crv", "__crv",
+        max_dist=max_dist, q=q, block=block, max_df=max_df, dist_col="__cd",
+    )
+    return (
+        vpairs
+        .join(left.select(F.col(left_id), F.col(left_col).alias("__clv")), "__clv")
+        .join(right.select(F.col(right_id), F.col(right_col).alias("__crv")), "__crv")
+        .select(left_id, right_id, F.col("__cd").alias(dist_col))
+    )
+
+
+def _fuzzy_pairs(
+    left: DataFrame, right: DataFrame, left_id: str, left_col: str, right_id: str,
+    right_col: str, max_dist: int = 1, q: int = 2, block: str = "prefix",
+    max_df: int | None = None, dist_col: str = "dist",
+) -> DataFrame:
+    """fuzzy_join's uncollapsed blocked join over every row of both
+    sides — the kernel fuzzy_join runs on the distinct values, and the
+    reference its equivalence test compares against."""
     min_len = q + q * max_dist
 
     def _prep(df: DataFrame, id_c: str, val_c: str, out_id: str, out_val: str) -> DataFrame:
@@ -128,24 +153,6 @@ def fuzzy_join(
             )
         )
         return df.select(F.col(id_c).alias(out_id), guarded.alias(out_val))
-
-    if collapse_duplicates:
-        # value-class linkage: each side's distinct value string is its
-        # own class id; block+verify once per value pair, then expand
-        # row membership with two hash joins
-        lv = left.select(F.col(left_col).alias("__clv")).distinct()
-        rv = right.select(F.col(right_col).alias("__crv")).distinct()
-        vpairs = fuzzy_join(
-            lv, rv, "__clv", "__clv", "__crv", "__crv",
-            max_dist=max_dist, q=q, block=block, max_df=max_df,
-            dist_col="__cd", collapse_duplicates=False,
-        )
-        return (
-            vpairs
-            .join(left.select(F.col(left_id), F.col(left_col).alias("__clv")), "__clv")
-            .join(right.select(F.col(right_id), F.col(right_col).alias("__crv")), "__crv")
-            .select(left_id, right_id, F.col("__cd").alias(dist_col))
-        )
 
     l_keys = _prep(left, left_id, left_col, "__lid", "__lval")
     r_keys = _prep(right, right_id, right_col, "__rid", "__rval")
@@ -175,21 +182,18 @@ def fuzzy_join(
 
         l_ix, r_ix = _prefix(l_ix, "__lid"), _prefix(r_ix, "__rid")
     elif max_df is not None:
-        hot = (
-            l_ix.groupBy("__gram")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") > max_df)
-            .select("__gram")
-        )
-        r_hot = (
-            r_ix.groupBy("__gram")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") > max_df)
-            .select("__gram")
-        )
-        # the hot-gram sets are tiny by construction -> broadcast anti-join
-        l_ix = l_ix.join(F.broadcast(hot), "__gram", "left_anti")
-        r_ix = r_ix.join(F.broadcast(r_hot), "__gram", "left_anti")
+
+        def _cold(ix: DataFrame) -> DataFrame:
+            hot = (
+                ix.groupBy("__gram")
+                .agg(F.count(F.lit(1)).alias("__df"))
+                .where(F.col("__df") > max_df)
+                .select("__gram")
+            )
+            # the hot-gram set is tiny by construction -> broadcast anti-join
+            return ix.join(F.broadcast(hot), "__gram", "left_anti")
+
+        l_ix, r_ix = _cold(l_ix), _cold(r_ix)
 
     cand = l_ix.join(r_ix, "__gram").select("__lid", "__rid").distinct()
     return (

@@ -215,60 +215,62 @@ def signlsh_topk(
 def embedding_near_dups(
     df: DataFrame, id_col: str, vec: str, min_cos_bp: int = 9900,
     planes: list[list[float]] = PLANES,
-    collapse_duplicates: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (cos >= min_cos_bp/10000), bucketed
     by sign-LSH so only same-bucket pairs are compared. Near-identical
     vectors agree on every hyperplane sign (recall loss only for pairs
     straddling a plane).
 
-    ``collapse_duplicates`` (default True) scores VECTOR CLASSES
-    (distinct vectors, class id = min member id) instead of rows, then
-    expands membership: between-class pairs come from the class-level
-    bucket join, within-class pairs (bit-identical vectors — the same
-    document embedded twice) from a per-class self-expansion gated by
-    the SAME cosine expression evaluated on (v, v), so the output is
-    row-for-row what the direct self-join produces. The round-5 sf1
+    The operator scores VECTOR CLASSES (distinct vectors, class id =
+    min member id) instead of rows, then expands membership:
+    between-class pairs come from the class-level bucket join
+    (``_bucket_pairs``, the uncollapsed kernel), within-class pairs
+    (bit-identical vectors — the same document embedded twice) from a
+    per-class self-expansion gated by the SAME cosine expression
+    evaluated on (v, v), so the output is row-for-row what the direct
+    self-join produces. The round-5 sf1
     probe's lesson (q91): duplicate-heavy corpora otherwise pay the
     full dot product once per ROW pair while the answer only needs it
     once per vector pair — output stays quadratic in clone multiplicity
     (it must), the flops become linear."""
-    from etl_wrap_spark.session import ensure_min_parallelism
+    classes = df.groupBy(F.col(vec).alias("__kv")).agg(
+        F.min(id_col).alias("__cls"), F.count(F.lit(1)).alias("__cnt")
+    ).localCheckpoint(eager=False)
+    cls_pairs = _bucket_pairs(
+        classes.select(F.col("__cls").alias(id_col), F.col("__kv").alias(vec)),
+        id_col, vec, min_cos_bp, planes,
+    ).select(F.col("id_a").alias("__ca"), F.col("id_b").alias("__cb"))
+    members = df.select(F.col(id_col).alias("__mid"), F.col(vec).alias("__kv")).join(
+        classes.select("__kv", "__cls"), "__kv"
+    ).select("__mid", "__cls")
+    between = (
+        cls_pairs.join(members.select(F.col("__cls").alias("__ca"),
+                                      F.col("__mid").alias("__a")), "__ca")
+        .join(members.select(F.col("__cls").alias("__cb"),
+                             F.col("__mid").alias("__b")), "__cb")
+        .select(F.least("__a", "__b").alias("id_a"),
+                F.greatest("__a", "__b").alias("id_b"))
+    )
+    selfq = classes.where(F.col("__cnt") >= 2).withColumn(
+        "__n", norm_expr("__kv")
+    ).where(
+        (dot_expr("__kv", "__kv") / (F.col("__n") * F.col("__n"))) * 10000
+        >= min_cos_bp
+    ).select("__cls")
+    m_a = members.join(selfq, "__cls")
+    within = (
+        m_a.alias("x").join(m_a.alias("y"), "__cls")
+        .where(F.col("x.__mid") < F.col("y.__mid"))
+        .select(F.col("x.__mid").alias("id_a"), F.col("y.__mid").alias("id_b"))
+    )
+    return between.unionByName(within)
 
-    if collapse_duplicates:
-        classes = df.groupBy(F.col(vec).alias("__kv")).agg(
-            F.min(id_col).alias("__cls"), F.count(F.lit(1)).alias("__cnt")
-        ).localCheckpoint(eager=False)
-        cls_frame = classes.select(
-            F.col("__cls").alias(id_col), F.col("__kv").alias(vec)
-        )
-        cls_pairs = embedding_near_dups(
-            cls_frame, id_col, vec, min_cos_bp, planes, collapse_duplicates=False
-        ).select(F.col("id_a").alias("__ca"), F.col("id_b").alias("__cb"))
-        members = df.select(F.col(id_col).alias("__mid"), F.col(vec).alias("__kv")).join(
-            classes.select("__kv", "__cls"), "__kv"
-        ).select("__mid", "__cls")
-        between = (
-            cls_pairs.join(members.select(F.col("__cls").alias("__ca"),
-                                          F.col("__mid").alias("__a")), "__ca")
-            .join(members.select(F.col("__cls").alias("__cb"),
-                                 F.col("__mid").alias("__b")), "__cb")
-            .select(F.least("__a", "__b").alias("id_a"),
-                    F.greatest("__a", "__b").alias("id_b"))
-        )
-        selfq = classes.where(F.col("__cnt") >= 2).withColumn(
-            "__n", norm_expr("__kv")
-        ).where(
-            (dot_expr("__kv", "__kv") / (F.col("__n") * F.col("__n"))) * 10000
-            >= min_cos_bp
-        ).select("__cls")
-        m_a = members.join(selfq, "__cls")
-        within = (
-            m_a.alias("x").join(m_a.alias("y"), "__cls")
-            .where(F.col("x.__mid") < F.col("y.__mid"))
-            .select(F.col("x.__mid").alias("id_a"), F.col("y.__mid").alias("id_b"))
-        )
-        return between.unionByName(within)
+
+def _bucket_pairs(df: DataFrame, id_col: str, vec: str, min_cos_bp: int, planes: list) -> DataFrame:
+    """embedding_near_dups' uncollapsed sign-LSH bucket self-join over
+    every row of ``df`` — the kernel the collapse runs on vector
+    classes, and the reference its equivalence test compares against."""
+    from etl_wrap_spark.session import ensure_min_parallelism
 
     df = ensure_min_parallelism(df)  # bucket+norm map work precedes the shuffle
     a = df.select(

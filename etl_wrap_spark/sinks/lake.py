@@ -202,6 +202,15 @@ class _Pointer:
         the locked ``_swap`` decides which writer commits."""
         return max([*self._disk_versions(), self.current_version() or 0]) + 1
 
+    def _retained(self, keep: int) -> set:
+        """The versions a vacuum keeps: the newest ``keep`` on disk (at
+        least one) plus the current one. After a rollback the current
+        version is not the newest; the newer ones still count toward
+        ``keep``, and the newest always survives, so ``_next_version``
+        never hands out a number a pinned reader has already seen."""
+        versions = self._disk_versions()
+        return set(versions[-max(keep, 1):]) | {self.current_version()}
+
     def rollback(self, to_version: int) -> None:
         """Point the table back at an earlier immutable version; the
         pointer's other keys (AtomicTable's table properties) carry
@@ -614,12 +623,10 @@ class AtomicTable(_Pointer):
         return self.write(cur.repartition(int(target_files)))
 
     def vacuum(self, keep: int = 2) -> list[int]:
-        """Remove version dirs older than the newest `keep` (never the
-        current one) plus any orphaned staging dirs; returns removed
-        version ids."""
-        cur = self.current_version()
-        versions = self._disk_versions()
-        removable = [v for v in versions if v != cur][: max(0, len(versions) - keep)]
+        """Remove the version dirs ``_retained(keep)`` does not keep plus
+        any orphaned staging dirs; returns removed version ids."""
+        retained = self._retained(keep)
+        removable = [v for v in self._disk_versions() if v not in retained]
         for v in removable:
             shutil.rmtree(self._version_dir(v), ignore_errors=True)
         shutil.rmtree(os.path.join(self.root, "_staging"), ignore_errors=True)
@@ -906,12 +913,11 @@ class PartitionedAtomicTable(_Pointer):
 
     def vacuum(self, keep: int = 2) -> list[str]:
         """Remove partition dirs referenced by NO retained manifest
-        (retains the newest ``keep`` manifests, always including the
-        current one) plus orphaned staging dirs; returns removed dirs."""
-        cur = self.current_version() or 0
+        (``_retained(keep)`` names the manifests kept) plus orphaned
+        staging dirs; returns removed dirs."""
         vdir = os.path.join(self.root, "_versions")
         versions = self._disk_versions()
-        retained = set(versions[-keep:]) | {cur}
+        retained = self._retained(keep)
         for v in versions:
             if v not in retained:
                 os.unlink(os.path.join(vdir, f"{v}.json"))

@@ -284,3 +284,36 @@ def test_salvage_needs_a_band_at_the_run_sf():
     bench._salvage(m, band, None, None, None)
     assert m["salvage_pass"] == {}
     assert m["pre_salvage_total"] == 9.0 and m["pre_salvage_duck_total"] == 0.0
+
+
+def test_dedup_scale_probe_sections_fail_independently():
+    """tools/dedup_scale_probe.py: a failing section records its error
+    and the later sections still run; only the sections that need the
+    failed one's output are skipped (transitively)."""
+    probe = _load("dedup_scale_probe", "tools/dedup_scale_probe.py")
+    ran = []
+
+    def ok(name):
+        def fn(ctx):
+            ran.append(name)
+            ctx[name] = True
+        return fn
+
+    def boom(ctx):
+        raise OSError("No space left on device\nstack line")
+
+    out: dict = {}
+    failed = probe.run_sections(out, [
+        ("a", (), ok("a")),
+        ("b", ("a",), boom),
+        ("c", ("b",), ok("c")),
+        ("d", ("c",), ok("d")),
+        ("e", ("a",), ok("e")),
+    ])
+    assert failed == ["b"]
+    assert ran == ["a", "e"]
+    assert out == {
+        "b_error": "OSError: No space left on device stack line",
+        "c_skipped": "needs b",
+        "d_skipped": "needs c",
+    }

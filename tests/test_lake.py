@@ -221,6 +221,32 @@ def test_vacuum_keeps_current_and_recent(spark, table):
     assert not os.path.isdir(table._version_dir(1))
 
 
+@pytest.mark.parametrize("kind", ["atomic", "partitioned"])
+def test_vacuum_after_rollback_keeps_newest_and_numbers_stay_fresh(spark, request, kind):
+    # three commits, rollback to v1, vacuum(keep=1): the newest version
+    # (v3) and the current one (v1) stay, so the next commit is v4 and
+    # a reader pinned to v3 still sees v3's data
+    if kind == "atomic":
+        t = request.getfixturevalue("table")
+
+        def commit(k):
+            return t.write(spark.createDataFrame([(k, "x")], "k int, v string"))
+    else:
+        t = request.getfixturevalue("ptable")
+
+        def commit(k):
+            return t.write(_pdata(spark, [(k, "eu", k)]))
+
+    for k in (1, 2, 3):
+        commit(k)
+    t.rollback(1)
+    t.vacuum(keep=1)
+    assert t._disk_versions() == [1, 3]
+    assert commit(4) == 4
+    assert {r.k for r in t.read(3).collect()} == {3}
+    assert {r.k for r in t.read().collect()} == {4}
+
+
 def test_replace_where_partition_style(spark, table):
     table.write(
         spark.createDataFrame(

@@ -2698,11 +2698,12 @@ def test_snapshot_novelty_semantics(spark):
 
 
 def test_value_class_collapse_equivalence(spark):
-    """The collapse_duplicates fast paths (minhash near-dup, embedding
-    near-dup, fuzzy join) must be row-for-row identical to the direct
-    paths on a corpus WITH byte-identical duplicates — the exact regime
-    the collapse optimizes (round-5 sf1 lesson: clone-heavy corpora pay
-    clone-quadratic flops on the direct path)."""
+    """The value-class collapse of each public operator (minhash
+    near-dup, prefix Jaccard, containment, embedding near-dup, fuzzy
+    join) must be row-for-row identical to its uncollapsed private
+    kernel on a corpus WITH byte-identical duplicates — the exact
+    regime the collapse optimizes (round-5 sf1 lesson: clone-heavy
+    corpora pay clone-quadratic flops on the direct path)."""
     rows = [
         (1, "the quick brown fox jumps over the lazy dog in the park"),
         (2, "the quick brown fox jumps over the lazy dog in the park"),   # exact dup of 1
@@ -2716,13 +2717,20 @@ def test_value_class_collapse_equivalence(spark):
     def key(df):
         return sorted(tuple(r) for r in df.collect())
 
-    direct = dedup.near_dup_pairs_minhash(
-        docs, "doc_id", "text", n=3, num=2, den=1, collapse_duplicates=False
-    )
-    fast = dedup.near_dup_pairs_minhash(
-        docs, "doc_id", "text", n=3, num=2, den=1, collapse_duplicates=True
-    )
+    direct = dedup._minhash_pairs(docs, "doc_id", "text", n=3, num=2, den=1)
+    fast = dedup.near_dup_pairs_minhash(docs, "doc_id", "text", n=3, num=2, den=1)
     assert key(fast) == key(direct) and fast.count() >= 4  # (1,2),(1,6),(2,6),(4,5)+near
+
+    # prefix join at J >= 0.8: the four clone pairs plus the three
+    # park/yard pairs (9 shared trigrams of 11 in the union: J = 0.82)
+    dp = dedup._prefix_pairs(docs, "doc_id", "text", n=3, num=5, den=4)
+    fp = dedup.prefix_jaccard_pairs(docs, "doc_id", "text", n=3, num=5, den=4)
+    assert key(fp) == key(dp) and fp.count() == 7
+    # directed containment at C >= 0.9 (park/yard: 9 of 10): each of
+    # those seven pairs qualifies both ways
+    dc = dedup._containment_pairs(docs, "doc_id", "text", n=3, num=10, den=9)
+    fc = dedup.containment_pairs(docs, "doc_id", "text", n=3, num=10, den=9)
+    assert key(fc) == key(dc) and fc.count() == 14
 
     vecs = [
         (1, [1.0, 0.0, 0.5, 0.2]),
@@ -2733,15 +2741,11 @@ def test_value_class_collapse_equivalence(spark):
     ]
     emb = spark.createDataFrame(vecs, ["vec_id", "v"])
     planes = [[0.3, -0.7, 0.1, 0.9], [-0.2, 0.4, 0.8, -0.1]]
-    d2 = similarity.embedding_near_dups(
-        emb, "vec_id", "v", min_cos_bp=9900, planes=planes, collapse_duplicates=False
-    )
-    f2 = similarity.embedding_near_dups(
-        emb, "vec_id", "v", min_cos_bp=9900, planes=planes, collapse_duplicates=True
-    )
+    d2 = similarity._bucket_pairs(emb, "vec_id", "v", min_cos_bp=9900, planes=planes)
+    f2 = similarity.embedding_near_dups(emb, "vec_id", "v", min_cos_bp=9900, planes=planes)
     assert key(f2) == key(d2) and f2.count() >= 2
 
-    from etl_wrap_spark.operators.linkage import fuzzy_join
+    from etl_wrap_spark.operators.linkage import _fuzzy_pairs, fuzzy_join
 
     left = spark.createDataFrame(
         [(10, "smith"), (11, "smith"), (12, "smyth"), (13, "jones")], ["lid", "lname"]
@@ -2749,10 +2753,8 @@ def test_value_class_collapse_equivalence(spark):
     right = spark.createDataFrame(
         [(20, "smith"), (21, "jonez"), (22, "jonez")], ["rid", "rname"]
     )
-    d3 = fuzzy_join(left, right, "lid", "lname", "rid", "rname",
-                    max_dist=1, collapse_duplicates=False)
-    f3 = fuzzy_join(left, right, "lid", "lname", "rid", "rname",
-                    max_dist=1, collapse_duplicates=True)
+    d3 = _fuzzy_pairs(left, right, "lid", "lname", "rid", "rname", max_dist=1)
+    f3 = fuzzy_join(left, right, "lid", "lname", "rid", "rname", max_dist=1)
     assert key(f3) == key(d3) and f3.count() >= 5
 
 
@@ -2812,7 +2814,8 @@ def test_pagerank_fast_path_matches_distributed(spark, distributed):
 def test_minhash_signatures_from_text_matches_groupby_form(spark):
     # the shuffle-free array_min builder must be value-identical to the
     # explode+groupBy form (same base hash, same permutations) — incl.
-    # on single-token and duplicate-shingle texts
+    # on single-token and duplicate-shingle texts — and so must
+    # signature_index, the engine's one signature build
     from etl_wrap_spark.operators import dedup
 
     docs = spark.createDataFrame(
@@ -2835,7 +2838,9 @@ def test_minhash_signatures_from_text_matches_groupby_form(spark):
            for r in dedup.minhash_signatures(sf, "doc_id").collect()}
     new = {r["doc_id"]: tuple(r[c] for c in sorted(r.asDict()) if c.startswith("mh"))
            for r in dedup.minhash_signatures_from_text(docs, "doc_id", "text", 3).collect()}
-    assert old == new and len(old) == 6 and 6 in new
+    idx = {r["doc_id"]: tuple(r[c] for c in sorted(r.asDict()) if c.startswith("mh"))
+           for r in dedup.signature_index(docs, "doc_id", "text", 3).collect()}
+    assert old == new == idx and len(old) == 6 and 6 in idx
 
 
 def test_bfs_fast_paths_match_distributed(spark, distributed):
