@@ -40,6 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_wrap_spark.operators.sampling import global_prefix
+
 
 def qgrams(col: Column, q: int) -> Column:
     """Distinct character q-grams of a string as an array column.
@@ -214,7 +216,6 @@ def sorted_neighborhood_pairs(
     id_col: str,
     key_col: str,
     window: int = 2,
-    rank_partitions: int | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood blocking (Hernández & Stolfo 1995) →
     candidate pairs (id_a, id_b, key_a, key_b, rank_dist): rows whose
@@ -228,31 +229,17 @@ def sorted_neighborhood_pairs(
     when their tails differ completely. Production linkage runs both
     and unions the candidate sets.
 
-    The global rank is computed DISTRIBUTED exactly like
-    sampling.shard_balanced: range-repartition on (key, id), local
-    row_numbers, broadcast prefix-offset join over partition counts —
-    no single-partition window anywhere (the offsets window is
-    partition-count grain). Pair generation explodes each row to its
-    ``window`` forward offsets and joins on rank+d = rank — one shuffle
-    join on a bigint, output exactly window*N pairs (minus the tail),
-    never quadratic. ``window`` is a small constant by contract (2-10);
+    The global rank is sampling.global_prefix's row count over the
+    total order (key, id) — no single-partition window anywhere. Pair
+    generation explodes each row to its ``window`` forward offsets and
+    joins on rank+d = rank — one shuffle join on a bigint, output
+    exactly window*N pairs (minus the tail), never quadratic. ``window`` is a small constant by contract (2-10);
     the candidate count is window-linear regardless of key skew."""
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     slim = df.select(F.col(id_col), F.col(key_col))
-    nparts = rank_partitions or slim.sparkSession.sparkContext.defaultParallelism
-    parted = slim.repartitionByRange(nparts, F.col(key_col), F.col(id_col))
-    with_pid = parted.withColumn("__pid", F.spark_partition_id())
-    wl = Window.partitionBy("__pid").orderBy(F.col(key_col), F.col(id_col))
-    local = with_pid.withColumn("__lrn", F.row_number().over(wl))
-    sizes = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    wo = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sizes.withColumn(
-        "__off", F.coalesce(F.sum("__n").over(wo), F.lit(0))
-    ).select("__pid", "__off")
-    ranked = local.join(F.broadcast(offsets), "__pid").select(
-        F.col(id_col), F.col(key_col),
-        (F.col("__off") + F.col("__lrn")).cast("bigint").alias("__rank"),
+    ranked = global_prefix(slim, [F.col(key_col), F.col(id_col)]).select(
+        F.col(id_col), F.col(key_col), F.col("__pre").cast("bigint").alias("__rank")
     )
     left = ranked.select(
         F.col(id_col).alias("id_a"), F.col(key_col).alias("key_a"),

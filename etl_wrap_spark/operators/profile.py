@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_wrap_spark.operators.sampling import global_prefix
+
 _NUMERIC = ("int", "bigint", "smallint", "tinyint", "double", "float", "decimal")
 
 
@@ -75,7 +77,6 @@ def contribution_pareto(
     id_col: str,
     value_col: str,
     target_bp: int = 8000,
-    rank_partitions: int | None = None,
 ) -> DataFrame:
     """Pareto / 80-20 contribution analysis → (id, value, share_bp,
     cum_share_bp, in_top): rank contributors by value descending and
@@ -84,45 +85,25 @@ def contribution_pareto(
     is still below the target — the classic 'who makes up 80% of
     cost/revenue/traffic' attribution).
 
-    The descending cumulative sum is computed DISTRIBUTED with the same
-    recipe as sampling.weighted_systematic_sample: range-repartition on
-    (value desc, id), per-partition running sums, broadcast prefix
-    offsets over the partition totals — no single-partition window, so
-    the ranking scales to any contributor count. Exact integers
-    throughout (shares in bp via floor division); the one driver-side
-    value is the scalar grand total."""
-    from pyspark.sql.window import Window
-
+    The descending cumulative sum is sampling.global_prefix's running
+    sum over the total order (value desc, id) — no single-partition
+    window, so the ranking scales to any contributor count. Exact
+    integers throughout (shares in bp via floor division); the one
+    driver-side value is the scalar grand total."""
     slim = df.select(F.col(id_col), F.col(value_col).cast("bigint").alias("__v"))
     total = slim.agg(F.sum("__v").alias("t")).collect()[0]["t"]
     if not total or total <= 0:
         raise ValueError("contribution_pareto needs a positive total")
-    nparts = rank_partitions or slim.sparkSession.sparkContext.defaultParallelism
-    parted = slim.repartitionByRange(
-        nparts, F.col("__v").desc(), F.col(id_col)
-    ).withColumn("__pid", F.spark_partition_id())
-    wl = Window.partitionBy("__pid").orderBy(F.col("__v").desc(), F.col(id_col))
-    local = parted.withColumn(
-        "__lcum", F.sum("__v").over(wl.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    totals = local.groupBy("__pid").agg(F.sum("__v").alias("__t"))
-    wo = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "__off", F.coalesce(F.sum("__t").over(wo), F.lit(0))
-    ).select("__pid", "__off")
     return (
-        local.join(F.broadcast(offsets), "__pid")
+        global_prefix(slim, [F.col("__v").desc(), F.col(id_col)], weight="__v")
         .select(
             F.col(id_col),
             F.col("__v").alias(value_col),
             F.expr(f"(__v * 10000) div {total}").cast("bigint").alias("share_bp"),
-            F.expr(f"((__off + __lcum) * 10000) div {total}")
-            .cast("bigint")
-            .alias("cum_share_bp"),
-            (
-                F.expr(f"((__off + __lcum - __v) * 10000) div {total}")
-                < F.lit(target_bp)
-            ).alias("in_top"),
+            F.expr(f"(__pre * 10000) div {total}").cast("bigint").alias("cum_share_bp"),
+            (F.expr(f"((__pre - __v) * 10000) div {total}") < F.lit(target_bp)).alias(
+                "in_top"
+            ),
         )
     )
 

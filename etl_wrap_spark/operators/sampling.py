@@ -131,38 +131,65 @@ def mixture_sample(
     )
 
 
+def global_prefix(
+    slim: DataFrame, order: Sequence[Column], weight: str | None = None
+) -> DataFrame:
+    """``slim`` plus ``__pre``: the inclusive global row count (or, with
+    ``weight``, the inclusive running sum of that column) in the total
+    order ``order`` — the distributed prefix sum behind the ranking
+    operators (shard_balanced, weighted_systematic_sample,
+    epoch_shuffle_shards, linkage.sorted_neighborhood_pairs,
+    profile.contribution_pareto).
+
+    Range-repartition on ``order`` into the session's default
+    parallelism, a local row_number (or running sum) per partition,
+    then a broadcast join of per-partition offsets — the exclusive
+    cumsum of the partition counts (or totals), a window over a
+    partition-count-grain frame. No single-partition window ever sees
+    the data. ``order`` must be a TOTAL order (end it with a unique
+    id): then every row's prefix is the same wherever the range
+    partitioner cuts, so the answer is invariant to the partition count
+    and the sampled boundaries."""
+    nparts = slim.sparkSession.sparkContext.defaultParallelism
+    parted = slim.repartitionByRange(nparts, *order)
+    local_w = Window.partitionBy("__pid").orderBy(*order)
+    local = parted.withColumn("__pid", F.spark_partition_id())
+    if weight is None:
+        local = local.withColumn("__loc", F.row_number().over(local_w))
+        sizes = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
+    else:
+        local = local.withColumn(
+            "__loc", F.sum(weight).over(local_w.rowsBetween(Window.unboundedPreceding, 0))
+        )
+        sizes = local.groupBy("__pid").agg(F.sum(weight).alias("__n"))
+    before = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = sizes.withColumn(
+        "__off", F.coalesce(F.sum("__n").over(before), F.lit(0))
+    ).select("__pid", "__off")
+    return (
+        local.join(F.broadcast(offsets), "__pid")
+        .withColumn("__pre", F.col("__off") + F.col("__loc"))
+        .drop("__pid", "__loc", "__off")
+    )
+
+
 def shard_balanced(
     df: DataFrame,
     id_col: str,
     weight_col: str,
     n_shards: int,
     out_col: str = "shard",
-    rank_partitions: int | None = None,
 ) -> DataFrame:
     """Weight-balanced sharding: global-rank rows by (weight desc, id)
     and deal them round-robin — shard = (rank-1) % n_shards, the LPT
     heuristic that keeps per-shard totals within one max-row weight of
     each other (token-balanced output shards for training).
 
-    The global rank is computed DISTRIBUTED: range-repartition on the
-    sort key, local row_numbers, plus a broadcast prefix-offset join
-    (partition counts cumsum) — no single-partition window. The rank is
-    invariant to the sampled range boundaries because (weight desc, id)
-    is a total order."""
+    The global rank is ``global_prefix``'s row count over the total
+    order (weight desc, id) — no single-partition window."""
     slim = df.select(F.col(id_col), F.col(weight_col))
-    nparts = rank_partitions or slim.sparkSession.sparkContext.defaultParallelism
-    parted = slim.repartitionByRange(nparts, F.col(weight_col).desc(), F.col(id_col))
-    with_pid = parted.withColumn("__pid", F.spark_partition_id())
-    wl = Window.partitionBy("__pid").orderBy(F.col(weight_col).desc(), F.col(id_col))
-    local = with_pid.withColumn("__lrn", F.row_number().over(wl))
-    sizes = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    wo = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sizes.withColumn("__off", F.coalesce(F.sum("__n").over(wo), F.lit(0))).select(
-        "__pid", "__off"
-    )
-    ranked = local.join(F.broadcast(offsets), "__pid").select(
-        F.col(id_col),
-        ((F.col("__off") + F.col("__lrn") - 1) % n_shards).cast("int").alias(out_col),
+    ranked = global_prefix(slim, [F.col(weight_col).desc(), F.col(id_col)]).select(
+        F.col(id_col), ((F.col("__pre") - 1) % n_shards).cast("int").alias(out_col)
     )
     return df.join(ranked, id_col)
 
@@ -173,7 +200,6 @@ def weighted_systematic_sample(
     weight_col: str,
     stride: int,
     phase: int = 0,
-    rank_partitions: int | None = None,
     out_col: str = "n_picks",
     ids_only: bool = False,
 ) -> DataFrame:
@@ -188,11 +214,8 @@ def weighted_systematic_sample(
     prefix-sum + floor-division is bit-identical everywhere — the same
     determinism argument as graph.pagerank_fixedpoint.
 
-    The cumulative weight is computed DISTRIBUTED exactly like
-    shard_balanced's global rank: range-repartition on the total order
-    (id), per-partition running sums, then a broadcast prefix-offset
-    join over partition totals (partition-count-sized state, never a
-    single-partition window).
+    The cumulative weight is ``global_prefix``'s running sum over the
+    total order (id) — never a single-partition window.
 
     pick-count for a row with interval (c, c+w]:
         n_picks = (c + w - phase) div stride - (c - phase) div stride
@@ -208,27 +231,13 @@ def weighted_systematic_sample(
     if stride <= 0:
         raise ValueError("stride must be positive")
     slim = df.select(F.col(id_col), F.col(weight_col).cast("bigint").alias("__w"))
-    nparts = rank_partitions or slim.sparkSession.sparkContext.defaultParallelism
-    parted = slim.repartitionByRange(nparts, F.col(id_col))
-    with_pid = parted.withColumn("__pid", F.spark_partition_id())
-    wl = Window.partitionBy("__pid").orderBy(F.col(id_col))
-    local = with_pid.withColumn(
-        "__lcum", F.sum("__w").over(wl.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    totals = local.groupBy("__pid").agg(F.sum("__w").alias("__t"))
-    wo = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "__off", F.coalesce(F.sum("__t").over(wo), F.lit(0))
-    ).select("__pid", "__off")
-    cum_after = F.col("__off") + F.col("__lcum")
-    cum_before = cum_after - F.col("__w")
     picks = (
-        local.join(F.broadcast(offsets), "__pid")
+        global_prefix(slim, [F.col(id_col)], weight="__w")
         .select(
             F.col(id_col),
             (
-                F.expr(f"(__off + __lcum - {phase}) div {stride}")
-                - F.expr(f"(__off + __lcum - __w - {phase}) div {stride}")
+                F.expr(f"(__pre - {phase}) div {stride}")
+                - F.expr(f"(__pre - __w - {phase}) div {stride}")
             ).cast("bigint").alias(out_col),
         )
         .where(F.col(out_col) > 0)
@@ -400,7 +409,6 @@ def epoch_shuffle_shards(
     epoch: int,
     n_shards: int,
     salt: str = "epoch",
-    rank_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic epoch shuffle + balanced sharding → input columns
     plus (shard, pos): rows are globally ordered by
@@ -413,35 +421,21 @@ def epoch_shuffle_shards(
     recompute the exact same epoch order from the salt instead of
     persisting a permutation table.
 
-    The global rank is computed DISTRIBUTED (the shard_balanced
-    machinery): range-repartition on the total order (hash, id), local
-    row_numbers, broadcast prefix-offset join — no single-partition
-    window anywhere, so the permutation of 10¹⁰ rows costs one range
-    exchange. The (hash, id) pair is a total order even under md5-60
-    collisions, which keeps the rank — and therefore every shard file —
-    deterministic across partitionings."""
+    The global rank is ``global_prefix``'s row count over (hash, id) —
+    no single-partition window anywhere, so the permutation of 10¹⁰
+    rows costs one range exchange. The (hash, id) pair is a total order
+    even under md5-60 collisions, which keeps the rank — and therefore
+    every shard file — deterministic across partitionings."""
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
     key = hash60(
         F.concat(F.lit(f"{salt}:{int(epoch)}:"), F.col(id_col).cast("string"))
     )
-    slim = df.withColumn("__hk", key)
-    nparts = rank_partitions or slim.sparkSession.sparkContext.defaultParallelism
-    parted = slim.repartitionByRange(nparts, F.col("__hk"), F.col(id_col))
-    with_pid = parted.withColumn("__pid", F.spark_partition_id())
-    wl = Window.partitionBy("__pid").orderBy(F.col("__hk"), F.col(id_col))
-    local = with_pid.withColumn("__lrn", F.row_number().over(wl))
-    sizes = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    wo = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sizes.withColumn(
-        "__off", F.coalesce(F.sum("__n").over(wo), F.lit(0))
-    ).select("__pid", "__off")
-    rank = F.col("__off") + F.col("__lrn") - 1
     return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn("shard", (rank % n_shards).cast("bigint"))
-        .withColumn("pos", F.expr(f"(__off + __lrn - 1) div {int(n_shards)}"))
-        .drop("__hk", "__pid", "__lrn", "__off")
+        global_prefix(df.withColumn("__hk", key), [F.col("__hk"), F.col(id_col)])
+        .withColumn("shard", ((F.col("__pre") - 1) % n_shards).cast("bigint"))
+        .withColumn("pos", F.expr(f"(__pre - 1) div {int(n_shards)}"))
+        .drop("__hk", "__pre")
     )
 
 

@@ -315,6 +315,15 @@ def bloom_might_contain(
 # so any engine reproduces the same table exactly.
 
 
+def _cms_cells(key: Column, width: int, depth: int) -> list[Column]:
+    """The key's ``depth`` (d, w) cells: row d's column is the bloom's
+    d-th double-hash position modulo ``width``."""
+    return [
+        F.struct(F.lit(d).alias("d"), p.alias("w"))
+        for d, p in enumerate(_bloom_positions(key, depth, width))
+    ]
+
+
 def cms_sketch(
     df: DataFrame, key_col: str, width: int = 2048, depth: int = 5
 ) -> DataFrame:
@@ -323,15 +332,7 @@ def cms_sketch(
     from etl_wrap_spark.session import ensure_min_parallelism
 
     df = ensure_min_parallelism(df)  # depth x |rows| hash explode is map-heavy
-    s = F.col(key_col).cast("string")
-    h1 = F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("bigint")
-    h2 = F.conv(F.substring(F.md5(s), 8, 7), 16, 10).cast("bigint")
-    rows = F.explode(
-        F.array(*[
-            F.struct(F.lit(d).alias("d"), ((h1 + F.lit(d) * h2) % width).alias("w"))
-            for d in range(depth)
-        ])
-    )
+    rows = F.explode(F.array(*_cms_cells(F.col(key_col), width, depth)))
     return (
         df.select(rows.alias("c"))
         .select("c.d", "c.w")
@@ -350,17 +351,9 @@ def cms_estimate(
 ) -> DataFrame:
     """Frequency estimate per key: MIN over the key's depth cells —
     a broadcast join of the (small) key batch onto the sketch rows."""
-    s = F.col(key_col).cast("string")
-    h1 = F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("bigint")
-    h2 = F.conv(F.substring(F.md5(s), 8, 7), 16, 10).cast("bigint")
     probes = keys.select(
         F.col(key_col),
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(d).alias("d"), ((h1 + F.lit(d) * h2) % width).alias("w"))
-                for d in range(depth)
-            ])
-        ).alias("c"),
+        F.explode(F.array(*_cms_cells(F.col(key_col), width, depth))).alias("c"),
     ).select(key_col, "c.d", "c.w")
     return (
         probes.join(sketch, on=["d", "w"], how="left")

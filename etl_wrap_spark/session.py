@@ -90,9 +90,7 @@ def session_builder(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    if master.startswith("local") and os.environ.get(
-        "SPARK_GRAFT_LOCAL_TUNING", "1"
-    ) != "0":
+    if master.startswith("local"):
         # LOCAL-MODE-ONLY tuning (a cluster master leaves all of this at
         # Spark defaults — compression back on, default GC):
         # - shuffle blocks live in the page cache and move zero network

@@ -12,15 +12,16 @@ date columns) in pure stdlib. The reference's semantics re-expressed:
 - stop-on-empty (S12, format_stopOnEmptyValueColumn)
 - date columns (S9, format_dateColumns): Excel serial → YYYYMMDD
 
-Two ingestion paths:
-- `read_xlsx` — driver-side parse of one file → DataFrame (Excel files
+Two ingestion paths, both reading xlsx and legacy .xls (BIFF8) alike —
+the format comes from each file's leading bytes, never from a flag:
+- `read_excel` — driver-side parse of one file → DataFrame (Excel files
   are small by nature; same stance as the reference).
-- `read_xlsx_distributed` — many files: `binaryFile` source +
+- `read_excel_distributed` — many files: `binaryFile` source +
   mapInPandas, each executor parsing whole files from Arrow batches.
   This is the 100-TB-era shape: parallelism = file count.
 
-Legacy .xls (BIFF8) shares the same post-processing; its OLE container
-and record codec live in sources/xls_biff.py.
+Legacy .xls shares the same post-processing; its OLE container and
+record codec live in sources/xls_biff.py.
 """
 
 from __future__ import annotations
@@ -34,6 +35,8 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
+
+from etl_wrap_spark.sources.xls_biff import _CFB_MAGIC, parse_xls, write_xls_bytes
 
 _NS = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
 _REL_NS = {"r": "http://schemas.openxmlformats.org/package/2006/relationships"}
@@ -176,7 +179,15 @@ def _shape_rows(
     return names, rows
 
 
-def read_xlsx(
+def _parse_excel(data: bytes, worksheet: str | int | None) -> list[list[str]]:
+    """Excel bytes → rows, the format read from the file itself: an
+    OLE2/CFB container is legacy BIFF8 .xls, anything else is parsed as
+    xlsx (a zip)."""
+    parser = parse_xls if data.startswith(_CFB_MAGIC) else parse_xlsx
+    return parser(data, worksheet)
+
+
+def read_excel(
     spark: SparkSession,
     path: str,
     header: Sequence[str] | None = None,
@@ -187,15 +198,18 @@ def read_xlsx(
     date_columns: Sequence[str] | None = None,
     stop_on_empty_column: str | None = None,
 ) -> DataFrame:
-    """S7 driver-side single-file read → all-string DataFrame."""
+    """S7/S8 driver-side single-file read (xlsx or legacy BIFF8 .xls,
+    Wrap/File.pm:154-187 cell_handler semantics: worksheet by 1-based
+    index or name, header assertion, date columns, stop-on-empty) →
+    all-string DataFrame."""
     with open(path, "rb") as fh:
-        rows = parse_xlsx(fh.read(), worksheet)
+        rows = _parse_excel(fh.read(), worksheet)
     names, shaped = _shape_rows(rows, header, skip, header_row, header_columns, date_columns, stop_on_empty_column)
     schema = StructType([StructField(n, StringType()) for n in names])
     return spark.createDataFrame(shaped, schema)
 
 
-def read_xlsx_distributed(
+def read_excel_distributed(
     spark: SparkSession,
     path_glob: str,
     header: Sequence[str],
@@ -205,18 +219,13 @@ def read_xlsx_distributed(
     header_columns: Sequence[int] | None = None,
     date_columns: Sequence[str] | None = None,
     stop_on_empty_column: str | None = None,
-    excel_format: str = "xlsx",
 ) -> DataFrame:
     """Many Excel files in parallel: binaryFile scan + per-file parse in
-    executors (Arrow-batched). Adds a `_file` column.
-    `excel_format`: "xlsx" (default) or "xls" (BIFF8)."""
+    executors (Arrow-batched), each file's format read from its own
+    bytes, so one glob may mix xlsx and .xls. Adds a `_file` column."""
     names = list(header)
     schema = StructType([StructField("_file", StringType())] + [StructField(n, StringType()) for n in names])
     binaries = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    if excel_format == "xls":
-        from etl_wrap_spark.sources.xls_biff import parse_xls as parser
-    else:
-        parser = parse_xlsx
 
     def parse_batches(batches):
         import pandas as pd
@@ -224,7 +233,7 @@ def read_xlsx_distributed(
         for pdf in batches:
             out = []
             for path_, content in zip(pdf["path"], pdf["content"]):
-                rows = parser(bytes(content), worksheet)
+                rows = _parse_excel(bytes(content), worksheet)
                 _, shaped = _shape_rows(
                     rows, names, skip, header_row, header_columns, date_columns, stop_on_empty_column
                 )
@@ -232,30 +241,6 @@ def read_xlsx_distributed(
             yield pd.DataFrame(out, columns=["_file", *names])
 
     return binaries.mapInPandas(parse_batches, schema=schema)
-
-
-def read_xls(
-    spark: SparkSession,
-    path: str,
-    header: Sequence[str] | None = None,
-    worksheet: str | int | None = None,
-    skip: int = 0,
-    header_row: bool = True,
-    header_columns: Sequence[int] | None = None,
-    date_columns: Sequence[str] | None = None,
-    stop_on_empty_column: str | None = None,
-) -> DataFrame:
-    """S8: legacy BIFF8 .xls read (Wrap/File.pm:154-187 cell_handler
-    semantics: worksheet by 1-based index or name, header assertion,
-    date columns, stop-on-empty) via the pure-stdlib codec in
-    sources/xls_biff.py; shares _shape_rows with the xlsx path."""
-    from etl_wrap_spark.sources.xls_biff import parse_xls
-
-    with open(path, "rb") as fh:
-        rows = parse_xls(fh.read(), worksheet)
-    names, shaped = _shape_rows(rows, header, skip, header_row, header_columns, date_columns, stop_on_empty_column)
-    schema = StructType([StructField(n, StringType()) for n in names])
-    return spark.createDataFrame(shaped, schema)
 
 
 # ----------------------------------------------------------------- writer K14
@@ -335,8 +320,6 @@ def write_xlsx(df: DataFrame, path: str, columns: Sequence[str], sheet_name: str
 def write_xls(df: DataFrame, path: str, columns: Sequence[str], sheet_name: str = "Sheet1") -> None:
     """K14 xls side (Wrap/File.pm:614-691 writes BOTH formats keyed on
     format_xlformat): DataFrame → one legacy BIFF8 .xls file."""
-    from etl_wrap_spark.sources.xls_biff import write_xls_bytes
-
     rows = [[("" if row[c] is None else str(row[c])) for c in columns] for row in df.select(*columns).collect()]
     with open(path, "wb") as fh:
         fh.write(write_xls_bytes(columns, rows, sheet_name))

@@ -39,3 +39,22 @@ def distributed(monkeypatch):
             monkeypatch.setenv(key, "0")
 
     return forced
+
+
+@pytest.fixture
+def parallelism():
+    """Sets the partition count of the distributed prefix sum behind the
+    ranking operators: ``sampling.global_prefix`` range-partitions into
+    the session's default parallelism, and inside ``with
+    parallelism(k):`` ``SparkContext.defaultParallelism`` reads ``k``.
+    An invariance test builds the same ranking under several counts to
+    move where the range partitioner cuts."""
+    from pyspark import SparkContext
+
+    @contextlib.contextmanager
+    def fixed(k):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(SparkContext, "defaultParallelism", property(lambda self: k))
+            yield
+
+    return fixed

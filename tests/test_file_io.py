@@ -187,7 +187,7 @@ def test_xlsx_round_trip(spark, tmp_path):
     assert parsed == [hdr] + rows
     p = tmp_path / "t.xlsx"
     p.write_bytes(data)
-    df = X.read_xlsx(spark, str(p), header=hdr)
+    df = X.read_excel(spark, str(p), header=hdr)
     assert [tuple(r) for r in df.orderBy("ID").collect()] == [tuple(r) for r in rows]
 
 
@@ -196,9 +196,9 @@ def test_xlsx_header_assert_and_projection(spark, tmp_path):
     p = tmp_path / "p.xlsx"
     p.write_bytes(data)
     with pytest.raises(ValueError, match="header mismatch"):
-        X.read_xlsx(spark, str(p), header=["A", "WRONG", "C"])
+        X.read_excel(spark, str(p), header=["A", "WRONG", "C"])
     # S11: 1-based column projection
-    df = X.read_xlsx(spark, str(p), header=["a", "c"], header_columns=[1, 3])
+    df = X.read_excel(spark, str(p), header=["a", "c"], header_columns=[1, 3])
     assert [tuple(r) for r in df.orderBy("a").collect()] == [("1", "d1"), ("2", "d2")]
 
 
@@ -208,7 +208,7 @@ def test_xlsx_dates_and_stop(spark, tmp_path):
     data = X.write_xlsx_bytes(["d", "v"], [["45292", "1"], ["45293", ""], ["45294", "3"]])
     p = tmp_path / "d.xlsx"
     p.write_bytes(data)
-    df = X.read_xlsx(spark, str(p), header=["d", "v"], date_columns=["d"], stop_on_empty_column="v")
+    df = X.read_excel(spark, str(p), header=["d", "v"], date_columns=["d"], stop_on_empty_column="v")
     assert [tuple(r) for r in df.collect()] == [("20240101", "1")]
 
 
@@ -217,7 +217,7 @@ def test_xlsx_distributed(spark, tmp_path):
         (tmp_path / f"f{i}.xlsx").write_bytes(
             X.write_xlsx_bytes(["k", "v"], [[f"{i}-a", "1"], [f"{i}-b", "2"]])
         )
-    df = X.read_xlsx_distributed(spark, str(tmp_path / "*.xlsx"), header=["k", "v"])
+    df = X.read_excel_distributed(spark, str(tmp_path / "*.xlsx"), header=["k", "v"])
     assert df.count() == 6
     assert df.select("k").distinct().count() == 6
 
@@ -235,10 +235,10 @@ def test_xls_round_trip(spark, tmp_path):
     assert B.parse_xls(data, worksheet=1) == [hdr] + rows
     p = tmp_path / "t.xls"
     p.write_bytes(data)
-    df = X.read_xls(spark, str(p), header=hdr)
+    df = X.read_excel(spark, str(p), header=hdr)
     assert [tuple(r) for r in df.orderBy("ID").collect()] == [tuple(r) for r in rows]
     with pytest.raises(ValueError, match="header mismatch"):
-        X.read_xls(spark, str(p), header=["ID", "WRONG", "Amount"])
+        X.read_excel(spark, str(p), header=["ID", "WRONG", "Amount"])
 
 
 def test_xls_dates_stop_and_projection(spark, tmp_path):
@@ -250,8 +250,8 @@ def test_xls_dates_stop_and_projection(spark, tmp_path):
     p = tmp_path / "d.xls"
     p.write_bytes(data)
     # S9 date conversion + S12 stop-on-empty through the shared _shape_rows
-    df = X.read_xls(spark, str(p), header=["d", "v"], header_columns=[1, 2],
-                    date_columns=["d"], stop_on_empty_column="v")
+    df = X.read_excel(spark, str(p), header=["d", "v"], header_columns=[1, 2],
+                      date_columns=["d"], stop_on_empty_column="v")
     assert [tuple(r) for r in df.collect()] == [("20240101", "1")]
 
 
@@ -276,16 +276,18 @@ def test_xls_distributed(spark, tmp_path):
         (tmp_path / f"f{i}.xls").write_bytes(
             B.write_xls_bytes(["k", "v"], [[f"{i}-a", "1"], [f"{i}-b", "2"]])
         )
-    df = X.read_xlsx_distributed(spark, str(tmp_path / "*.xls"), header=["k", "v"], excel_format="xls")
-    assert df.count() == 6
-    assert df.select("k").distinct().count() == 6
+    # one xlsx among the .xls files: each file's format comes from its bytes
+    (tmp_path / "f3.xlsx").write_bytes(X.write_xlsx_bytes(["k", "v"], [["3-a", "1"], ["3-b", "2"]]))
+    df = X.read_excel_distributed(spark, str(tmp_path / "*.xls*"), header=["k", "v"])
+    assert df.count() == 8
+    assert df.select("k").distinct().count() == 8
 
 
 def test_xls_write_from_dataframe(spark, tmp_path):
     df = spark.createDataFrame([("1", "a"), ("2", "b")], ["id", "name"])
     p = tmp_path / "out.xls"
     X.write_xls(df, str(p), columns=["id", "name"])
-    back = X.read_xls(spark, str(p), header=["id", "name"])
+    back = X.read_excel(spark, str(p), header=["id", "name"])
     assert sorted(map(tuple, back.collect())) == [("1", "a"), ("2", "b")]
     # magic byte check: a genuine OLE2 container, not a renamed xlsx
     assert p.read_bytes()[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"

@@ -932,7 +932,7 @@ def test_mixture_sample_rejects_bad_weights(spark):
         mixture_sample(df, "g", "id", {"a": 5000})
 
 
-def test_shard_balanced_skew_and_rank_equivalence(spark):
+def test_shard_balanced_skew_and_rank_equivalence(spark, parallelism):
     from etl_wrap_spark.operators.sampling import shard_balanced
     from etl_wrap_spark.operators.text import token_count
     from etl_wrap_spark.session import load_tables
@@ -940,7 +940,8 @@ def test_shard_balanced_skew_and_rank_equivalence(spark):
 
     d = load_tables(spark, "/root/testdata/sf0.01", ["documents"])["documents"]
     toks = d.select("doc_id", token_count("text").alias("tok"))
-    out = shard_balanced(toks, "doc_id", "tok", n_shards=8, rank_partitions=5)
+    with parallelism(5):
+        out = shard_balanced(toks, "doc_id", "tok", n_shards=8)
     sums = {r["shard"]: r["s"] for r in out.groupBy("shard").agg(F.sum("tok").alias("s")).collect()}
     assert len(sums) == 8
     max_w = toks.agg(F.max("tok")).first()[0]
@@ -1631,7 +1632,7 @@ def test_pagerank_fixedpoint_exact(spark):
     assert got[4] == base
 
 
-def test_weighted_systematic_sample_properties(spark):
+def test_weighted_systematic_sample_properties(spark, parallelism):
     """Pick probability ∝ weight: expected picks per row = w/stride;
     totals are exact (sum n_picks == total_weight // stride ± 1), heavy
     rows surface with multiplicity, zero-weight rows never picked, and
@@ -1657,12 +1658,11 @@ def test_weighted_systematic_sample_properties(spark):
             expect[i] = n
     assert picks == expect
     # partitioning invariance: same result at a different partition count
-    got2 = {
-        r["id"]: r["n_picks"]
-        for r in weighted_systematic_sample(
-            df.repartition(7), "id", "w", stride=stride, rank_partitions=5
-        ).collect()
-    }
+    with parallelism(5):
+        got2 = {
+            r["id"]: r["n_picks"]
+            for r in weighted_systematic_sample(df.repartition(7), "id", "w", stride=stride).collect()
+        }
     assert got2 == expect
     # a row heavier than the stride is picked with multiplicity
     big = spark.createDataFrame([(1, 1750), (2, 10)], ["id", "w"])
@@ -2461,7 +2461,7 @@ def test_join_fanout_audit_sides(spark):
     }
 
 
-def test_contribution_pareto_partitioning_invariance(spark):
+def test_contribution_pareto_partitioning_invariance(spark, parallelism):
     """The distributed prefix decomposition returns the same head set
     and cumulative shares for any partition count; hand-check the
     boundary rule (a row straddling the target is included)."""
@@ -2471,8 +2471,9 @@ def test_contribution_pareto_partitioning_invariance(spark):
     df = spark.createDataFrame(rows, ["id", "w"])
     outs = []
     for nparts in (1, 2, 4):
-        got = {r["id"]: (r["share_bp"], r["cum_share_bp"], r["in_top"])
-               for r in contribution_pareto(df, "id", "w", 8000, nparts).collect()}
+        with parallelism(nparts):
+            got = {r["id"]: (r["share_bp"], r["cum_share_bp"], r["in_top"])
+                   for r in contribution_pareto(df, "id", "w", 8000).collect()}
         outs.append(got)
     assert outs[0] == outs[1] == outs[2]
     got = outs[0]

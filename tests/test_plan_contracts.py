@@ -103,12 +103,17 @@ def test_iterative_graph_plans_stay_flat(spark, name, max_shuffles):
 # justification; anything else trips the contract (the round-4 q136
 # defect class: a global row_number over a corpus-grain frame is a
 # single-partition sort of the corpus).
+_GLOBAL_PREFIX = "sampling.global_prefix partition-count offsets frame"
 ALLOWED_UNPARTITIONED_WINDOW = {
-    # distributed prefix-sum offset frames: groupBy(spark_partition_id)
-    # → one row per range partition (≤ cluster parallelism)
-    "q68_balanced_shards": "partition-count offsets frame",
-    "q130_weighted_sample": "partition-count offsets frame",
-    "q170_contribution_pareto": "partition-count offsets frame",
+    # the ranking family's one distributed prefix sum
+    # (sampling.global_prefix): its offsets window runs over
+    # groupBy(spark_partition_id) → one row per range partition
+    # (≤ cluster parallelism)
+    "q68_balanced_shards": _GLOBAL_PREFIX,
+    "q130_weighted_sample": _GLOBAL_PREFIX,
+    "q170_contribution_pareto": _GLOBAL_PREFIX,
+    "q184_sorted_neighborhood": _GLOBAL_PREFIX,
+    "q200_epoch_shuffle_shards": _GLOBAL_PREFIX,
     # pre-aggregated daily series: one row per calendar day
     "q40_moving_window_frame": "day-grain rollup",
     "q152_cumulative_crossover": "day-grain rollup",
@@ -118,11 +123,6 @@ ALLOWED_UNPARTITIONED_WINDOW = {
     # largest-remainder apportionment ranks the GROUP-GRAIN quota frame
     # (rows = number of languages)
     "q178_temperature_mixture": "group-grain quota frame",
-    # sorted-neighborhood rank: same partition-count offsets frame as
-    # shard_balanced (groupBy spark_partition_id → ≤ parallelism rows)
-    "q184_sorted_neighborhood": "partition-count offsets frame",
-    # epoch shuffle rank: same partition-count offsets frame
-    "q200_epoch_shuffle_shards": "partition-count offsets frame",
     # permutation test: the window broadcasts the observed (j = -1)
     # row's stats across the b+1 REPLICATE-grain rows — bounded by the
     # permutation count, never the units (round-7 single-branch fusion)

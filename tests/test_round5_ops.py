@@ -150,7 +150,7 @@ def test_sorted_neighborhood_pairs_exact(spark):
     assert got == want
 
 
-def test_sorted_neighborhood_partition_invariance(spark):
+def test_sorted_neighborhood_partition_invariance(spark, parallelism):
     """The rank (hence the pair set) must not depend on how the range
     partitioner splits the sort order."""
     from etl_wrap_spark.operators.linkage import sorted_neighborhood_pairs
@@ -159,12 +159,11 @@ def test_sorted_neighborhood_partition_invariance(spark):
     df = spark.createDataFrame(rows, "id bigint, key string")
 
     def pairs(nparts):
-        return sorted(
-            (r.id_a, r.id_b, r.rank_dist)
-            for r in sorted_neighborhood_pairs(
-                df, "id", "key", window=3, rank_partitions=nparts
-            ).collect()
-        )
+        with parallelism(nparts):
+            return sorted(
+                (r.id_a, r.id_b, r.rank_dist)
+                for r in sorted_neighborhood_pairs(df, "id", "key", window=3).collect()
+            )
 
     assert pairs(1) == pairs(4) == pairs(8)
 
@@ -978,11 +977,11 @@ def test_acf_linear_trend_and_lag_guard(spark):
 # ---------------------------------------------------------- epoch_shuffle_shards
 
 
-def _epoch(spark, n, epoch, n_shards, parts=None):
+def _epoch(spark, n, epoch, n_shards):
     from etl_wrap_spark.operators.sampling import epoch_shuffle_shards
 
     df = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    out = epoch_shuffle_shards(df, "doc_id", epoch, n_shards, rank_partitions=parts)
+    out = epoch_shuffle_shards(df, "doc_id", epoch, n_shards)
     return {r["doc_id"]: (r["shard"], r["pos"]) for r in out.collect()}
 
 
@@ -998,7 +997,7 @@ def test_epoch_shards_matches_md5_reference(spark):
     assert got == want
 
 
-def test_epoch_shards_balance_and_epoch_variation(spark):
+def test_epoch_shards_balance_and_epoch_variation(spark, parallelism):
     """Shard sizes within one row of each other at a non-dividing
     count; a different epoch yields a different permutation while both
     remain per-epoch deterministic and partition-count invariant."""
@@ -1008,7 +1007,8 @@ def test_epoch_shards_balance_and_epoch_variation(spark):
         sizes[s] = sizes.get(s, 0) + 1
     assert max(sizes.values()) - min(sizes.values()) <= 1
     assert sorted(sizes) == [0, 1, 2, 3, 4]
-    assert e1 == _epoch(spark, 37, 1, 5, parts=3)  # partition invariance
+    with parallelism(3):
+        assert e1 == _epoch(spark, 37, 1, 5)  # partition invariance
     assert e1 != _epoch(spark, 37, 2, 5)  # fresh order per epoch
     # every shard's pos sequence is contiguous from 0
     for s in sizes:
